@@ -113,23 +113,6 @@ def _pii_stages(
     return cur, counts
 
 
-def redact_pii(
-    col: Column, kinds: list[str] | None = None, token: str = "<{kind}>"
-) -> Column:
-    """Replace every PII match with a typed placeholder — one chained
-    ``regexp_replace`` projection, whole-stage-codegen'd, map-only: at
-    10^12 rows this adds zero exchanges to whatever scan it rides.
-    ``token`` may reference ``{kind}`` (e.g. ``<email>``)."""
-    return _pii_stages(col, kinds, token)[0]
-
-
-def pii_counts(col: Column, kinds: list[str] | None = None) -> list[Column]:
-    """Per-kind match counts (audit/reporting side-channel for the
-    scrubber), aliased ``n_<kind>`` — progressive semantics, see
-    :func:`_pii_stages`."""
-    return _pii_stages(col, kinds, "<{kind}>")[1]
-
-
 def scrub_pii(
     df: DataFrame,
     text_col: str = "text",

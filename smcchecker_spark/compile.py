@@ -59,14 +59,17 @@ VIOLATION_SCHEMA = T.StructType(
 VIOLATION_COLS = [f.name for f in VIOLATION_SCHEMA.fields]
 
 
+def part_expr(df: DataFrame, part_id_col: str | None):
+    """A row's partition id: ``part_id_col`` when ``df`` has it, else
+    the Spark partition the row sits in."""
+    if part_id_col and part_id_col in df.columns:
+        return F.col(part_id_col).cast("int")
+    return F.spark_partition_id()
+
+
 def _with_identity(df: DataFrame, row_id_col: str, part_id_col: str | None) -> DataFrame:
-    part = (
-        F.col(part_id_col).cast("int")
-        if part_id_col and part_id_col in df.columns
-        else F.spark_partition_id()
-    )
     return df.withColumn(ROW_ID, F.col(row_id_col).cast("string")).withColumn(
-        PART_ID, part
+        PART_ID, part_expr(df, part_id_col)
     )
 
 
@@ -184,12 +187,10 @@ def compile_suite(
     tier: str = "core",
     row_id_col: str = "image_id",
     part_id_col: str | None = "part_id",
-    apply_gates: bool = True,
 ) -> DataFrame:
-    """Suite → violations DataFrame (lazy; nothing executes until an action).
-
-    ``apply_gates=True`` triggers one small aggregate action up front for
-    whole-column preconditions (IntRange's parse gate).
+    """Suite → violations DataFrame (lazy, except for one small aggregate
+    action up front for whole-column preconditions such as IntRange's
+    parse gate).
     """
     ctx = ctx or ValidationContext()
     # whole-COLUMN gates (IntRange's all-values-parse precondition) are a
@@ -198,19 +199,17 @@ def compile_suite(
     # complete in-session table, or a wave whose slice happens to parse
     # would run a check the whole-table gate suppresses
     gate_df = ctx.full_scope if ctx.full_scope is not None else df
-    gates: dict[str, bool] = {}
-    if apply_gates:
-        # gate results are a function of gate_df alone; in wave mode
-        # (ctx.shared set by run_with_checkpoint) the full-scope aggregate
-        # is identical every wave — evaluate once per (run, tier), not
-        # once per wave
-        cache_key = ("gates", tier)
-        if ctx.shared is not None and cache_key in ctx.shared:
-            gates = ctx.shared[cache_key]
-        else:
-            gates = evaluate_preconditions(gate_df, suite.active(tier))
-            if ctx.shared is not None:
-                ctx.shared[cache_key] = gates
+    # gate results are a function of gate_df alone; in wave mode
+    # (ctx.shared set by run_with_checkpoint) the full-scope aggregate
+    # is identical every wave — evaluate once per (run, tier), not
+    # once per wave
+    cache_key = ("gates", tier)
+    if ctx.shared is not None and cache_key in ctx.shared:
+        gates = ctx.shared[cache_key]
+    else:
+        gates = evaluate_preconditions(gate_df, suite.active(tier))
+        if ctx.shared is not None:
+            ctx.shared[cache_key] = gates
     parts: list[DataFrame] = []
     row_pass = compile_row_pass(df, suite, tier, row_id_col, part_id_col, gates)
     if row_pass is not None:

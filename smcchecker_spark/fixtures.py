@@ -195,15 +195,6 @@ def lu_fmt(spark: SparkSession) -> DataFrame:
     )
 
 
-def images_existing(
-    spark: SparkSession, n_rows: int = 1000, seed: int = 42, overlap_mod: int = 97
-) -> DataFrame:
-    """Production-snapshot keys overlapping the fixture (FIXTURES.md §3):
-    every image_id with i % overlap_mod == 2."""
-    ids = [( _image_id(i),) for i in range(n_rows) if i % overlap_mod == 2]
-    return spark.createDataFrame(ids, "image_id string")
-
-
 # ---------------------------------------------------------------------------
 # Real-JPEG fixture (jpegcodec) — actual baseline JFIF bitstreams
 # ---------------------------------------------------------------------------

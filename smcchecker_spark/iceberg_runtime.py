@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 # Spark 4.x needs iceberg-spark-runtime-4.0/4.1; older 3.x jars would fail
 # at class-load. We accept any spark-runtime jar and let the subprocess
@@ -72,12 +73,20 @@ def find_iceberg_jar() -> str | None:
         if not os.path.isdir(d):
             continue
         for pat in _JAR_GLOBS:
-            hits = sorted(glob.glob(os.path.join(d, pat))) or sorted(
-                glob.glob(os.path.join(d, "**", pat), recursive=True)
+            hits = glob.glob(os.path.join(d, pat)) or glob.glob(
+                os.path.join(d, "**", pat), recursive=True
             )
             if hits:
-                return hits[-1]  # highest version sorts last
+                return max(hits, key=_jar_version)
     return None
+
+
+def _jar_version(path: str) -> tuple:
+    """Sort key for a runtime jar: its Iceberg version as integers, so
+    ``...-1.10.0.jar`` outranks ``...-1.9.1.jar`` (a string sort ranks
+    them the other way round); the path breaks ties."""
+    m = re.search(r"-(\d+(?:\.\d+)*)\.jar$", os.path.basename(path))
+    return (tuple(int(p) for p in m.group(1).split(".")) if m else (), path)
 
 
 def iceberg_session_confs(

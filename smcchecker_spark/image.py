@@ -200,10 +200,6 @@ def psnr_pair_udf():
     return _UDF_CACHE["psnr_pair"]
 
 
-def decode_facts_col(bytes_col: Column) -> Column:
-    return decode_facts_udf()(bytes_col)
-
-
 @dataclass(frozen=True)
 class ImageConsistent(Constraint):
     """bytes must decode, and decoded (w, h, fmt, phash) must equal the

@@ -33,11 +33,11 @@ def benchmark_shingles(
 
     Tokenization MUST match the corpus side exactly, so this goes through
     the same Arrow shingler (``shingles_udf``, Python ``str.split`` =
-    Unicode whitespace) rather than the Column-expression
-    ``text.word_shingles`` (Java ``\\s+`` = ASCII whitespace): a
-    benchmark doc containing a non-breaking space (ubiquitous in scraped
-    HTML) would otherwise shingle differently on the two sides and its
-    verbatim copy in the corpus would sail through undetected."""
+    Unicode whitespace) rather than a Column-expression split (Java
+    ``\\s+`` = ASCII whitespace): a benchmark doc containing a
+    non-breaking space (ubiquitous in scraped HTML) would otherwise
+    shingle differently on the two sides and its verbatim copy in the
+    corpus would sail through undetected."""
     from smcchecker_spark.ops.dedup import shingles_udf
 
     return (

@@ -4,9 +4,8 @@ Four families, all shuffle-disciplined for 10^12-row inputs:
 
 - **exact**: hash-groupBy on a normalized fingerprint — one shuffle on
   the hash, map-side partial agg.
-- **MinHash + LSH**: shingle → k min-hashes (ALL JVM-side: explode +
-  groupBy with k ``min(xxhash64(seed‖shingle))`` aggregates) → band →
-  bucket-join. Only candidate pairs inside a bucket are compared; the
+- **MinHash + LSH**: shingle → k min-hashes (one Arrow-batched UDF:
+  FNV-1a base hash, splitmix64-seeded variants) → band → bucket-join. Only candidate pairs inside a bucket are compared; the
   banding (b bands × r rows) tunes the Jaccard threshold s ≈ (1/b)^(1/r).
 - **SimHash**: 64-bit sign-of-weighted-sum fingerprint via one Arrow
   batch UDF (numpy bit math), near-dups = Hamming ≤ d within LSH-style
@@ -58,9 +57,9 @@ _SHINGLE_CACHE: dict[int, object] = {}
 
 
 def _shingles_udf(k: int):
-    """Arrow-batched k-word shingle extraction. Same SET semantics as
-    ``text.word_shingles`` (whitespace tokens of the trimmed text; docs
-    with < k tokens yield one short shingle; empty/null docs yield ['']).
+    """Arrow-batched k-word shingle extraction: the distinct k-word
+    shingles of a doc's whitespace tokens; docs with < k tokens yield one
+    short shingle; empty/null docs yield [''].
 
     Why a UDF here when shingling is expressible as Column lambdas:
     Spark's higher-order functions (transform/sequence/slice) run
@@ -93,41 +92,6 @@ def _shingles_udf(k: int):
 # public alias — the canonical Arrow-batched shingler, shared by the
 # Jaccard verify stage here and ops/contamination.py's corpus pass
 shingles_udf = _shingles_udf
-
-
-def _seeded_hash(seed: int):
-    # NB: the lambda passed to F.transform must take exactly ONE argument —
-    # a two-arg lambda (even `lambda s, i=i: ...` with a default!) is
-    # interpreted by PySpark as (element, index) and the seed silently
-    # becomes the array position. Bind the seed via closure instead.
-    return lambda h: F.xxhash64(F.lit(seed), h)
-
-
-def _sig_from_base(base: Column, num_hashes: int) -> Column:
-    """num_hashes min-hashes from ONE base-hash array: component i is
-    min over xxhash64(i, base_hash) — re-seeding hashes a LONG, not the
-    shingle string, so each extra component costs O(1) per shingle."""
-    return F.array(
-        *[
-            F.array_min(F.transform(base, _seeded_hash(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def minhash_signature(col: Column, num_hashes: int = 32, shingle_k: int = 3) -> Column:
-    """Array of ``num_hashes`` min-hash values over word shingles.
-    NULL/short docs get an empty-shingle guard (hash of '').
-
-    NOTE: as a single Column expression Catalyst inlines the shingle
-    construction into every component — fine for tests/small data; the
-    pipeline path (``minhash_signatures``) stages the computation so
-    shingles and base hashes are computed once per row.
-    """
-    sh = T.word_shingles(col, k=shingle_k)
-    sh = F.when(F.size(sh) > 0, sh).otherwise(F.array(F.lit("")))
-    base = F.transform(sh, lambda s: F.xxhash64(s))
-    return _sig_from_base(base, num_hashes)
 
 
 _SIG_UDF_CACHE: dict[tuple, object] = {}
@@ -207,10 +171,9 @@ def minhash_signatures(
     min_parallelism: int | None = None,
 ) -> DataFrame:
     """(id, sig): the pipeline-path signature computation, fused into one
-    Arrow-batched UDF (see ``_minhash_sig_udf``). Semantically a standard
-    minhash over distinct word-k-shingles; values differ from the
-    Column-API ``minhash_signature`` (xxhash64-based) but both are valid
-    minhash families — est_jaccard/banding behave identically."""
+    Arrow-batched UDF (see ``_minhash_sig_udf``) — the package's one
+    MinHash implementation: a standard minhash over distinct
+    word-k-shingles."""
     df = _ensure_parallelism(df, min_parallelism)
     return df.select(
         F.col(id_col).alias("id"),

@@ -53,11 +53,6 @@ def quantize_expr(vec: Column, scale: Column) -> Column:
     )
 
 
-def dequantize_expr(q: Column, scale: Column) -> Column:
-    """array<double> reconstruction: q_i · scale."""
-    return F.transform(q, lambda x: x.cast("double") * scale)
-
-
 def max_abs_error_expr(vec: Column, q: Column, scale: Column) -> Column:
     """max_i |v_i − q_i·s| — the per-row reconstruction error (≤ s/2)."""
     return F.aggregate(

@@ -46,24 +46,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(pieces)
 
 
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Distinct character n-grams (shingles) of the normalized text."""
-    norm = F.lower(F.regexp_replace(F.coalesce(col, F.lit("")), r"\s+", " "))
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.substring(norm, i, n))
-    )
-
-
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles (the MinHash unit for document dedup)."""
-    tk = tokens(col)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(tk) - k, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(tk, i + 1, k), " "))
-    )
-
-
 def punct_ratio(col: Column) -> Column:
     t = F.coalesce(col, F.lit(""))
     n_punct = F.length(F.regexp_replace(t, r"[^!-/:-@\[-`{-~]", ""))
@@ -116,65 +98,6 @@ def lang_id(col: Column) -> Column:
     )
 
 
-def raw_word_shingles(col: Column, k: int = 2) -> Column:
-    """k-word shingles WITHOUT dedup (for repetition metrics, which need
-    multiplicity; :func:`word_shingles` dedups for MinHash)."""
-    tk = tokens(col)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(tk) - k, F.lit(0)))
-    return F.when(F.size(tk) == 0, F.array().cast("array<string>")).otherwise(
-        F.transform(idx, lambda i: F.array_join(F.slice(tk, i + 1, k), " "))
-    )
-
-
-def dup_word_fraction(col: Column) -> Column:
-    """Fraction of token occurrences that repeat an earlier token:
-    (n - n_distinct) / n. 0 for empty docs. One of the Gopher-style
-    repetition signals ("Scaling Language Models", Rae et al. 2021,
-    §A1.1) used to drop boilerplate/spam before training."""
-    tk = tokens(col)
-    n = F.size(tk)
-    return F.round(
-        (n - F.size(F.array_distinct(tk))) / F.greatest(n, F.lit(1)), 6
-    )
-
-
-def dup_shingle_fraction(col: Column, k: int = 2) -> Column:
-    """Fraction of word k-gram occurrences that are repeats — catches
-    looped phrases that word-level dedup misses."""
-    sh = raw_word_shingles(col, k)
-    n = F.size(sh)
-    return F.round(
-        (n - F.size(F.array_distinct(sh))) / F.greatest(n, F.lit(1)), 6
-    )
-
-
-def top_word_fraction(col: Column) -> Column:
-    """Share of the single most frequent token: max multiplicity / n.
-
-    Computed as the longest run in the SORTED token array via one
-    ``aggregate`` fold — O(n log n) per row, no explode/groupBy (an
-    exploded formulation shuffles one row per token: |corpus|×|doc len|
-    rows through an exchange, versus zero exchanges here). The fold is
-    an interpreted HOF, but it runs on ≤ doc-length arrays inside the
-    same projection as the other features — still one scan.
-    """
-    tk = F.array_sort(tokens(col))
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best"),
-    )
-
-    def step(acc: Column, w: Column) -> Column:
-        run = F.when(w.eqNullSafe(acc["prev"]), acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            w.alias("prev"), run.alias("run"), F.greatest(acc["best"], run).alias("best")
-        )
-
-    best = F.aggregate(tk, zero, step, lambda acc: acc["best"])
-    return F.round(best / F.greatest(F.size(tk), F.lit(1)), 6)
-
-
 _REP_UDF_CACHE: dict[int, object] = {}
 
 
@@ -182,14 +105,14 @@ def _repetition_counts_udf(k: int = 2):
     """Arrow-batched raw repetition COUNTS per doc: (n tokens, distinct
     tokens, k-gram count, distinct k-grams, top-token multiplicity).
 
-    Why a UDF: the Column-expression forms above are exact but run as
+    Why a UDF: Column-expression forms of these counts run as
     interpreted higher-order functions — the k-gram path is O(n) slice
     lambdas PER ROW outside codegen and measured ~160 µs/doc at 64
     tokens (2M-doc soak); this batched dict-counting pass is O(n) per
     doc and ~20× faster. It returns INTEGERS ONLY — the fractions (and
     their rounding) are derived by native ``F.round`` expressions in
-    :func:`repetition_features`, so values match the Column forms and
-    the SQL oracle bit-for-bit by construction."""
+    :func:`repetition_features`, so values match the SQL oracle
+    bit-for-bit by construction."""
     if k not in _REP_UDF_CACHE:
         from collections import Counter
 
@@ -229,8 +152,8 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     threshold these to drop template/spam documents before dedup and
     training. Counting runs in one Arrow-batched UDF
     (:func:`_repetition_counts_udf`); fractions are native ``F.round``
-    expressions over the returned integers, identical to the scalar
-    Column forms (``dup_word_fraction`` etc.) and the SQL oracle."""
+    expressions over the returned integers, identical to the SQL
+    oracle."""
     c = _repetition_counts_udf(2)(F.col(text_col))
     tmp = df.withColumn("_rc", c)
     r = F.col("_rc")

@@ -13,6 +13,10 @@ for Spark per SURVEY.md §3.1):
 4. reporting — errs/warnings split (checkScale routing,
    proj/core/core.py:51-55) and per-row message aggregation
    (proj/utils/generic.py:25-51: groupby (row, table) → '; '.join)
+
+Batch runs, checkpoint waves (checkpoint.py) and streaming micro-batches
+(streaming.py) all validate through ``ValidationRunner.run``, the
+package's one verdict implementation.
 """
 
 from __future__ import annotations
@@ -23,7 +27,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smcchecker_spark.compile import VIOLATION_SCHEMA, compile_suite
+from smcchecker_spark.compile import compile_suite, part_expr
 from smcchecker_spark.constraints import ERROR, WARNING, Suite, ValidationContext
 
 VERDICT_COLS = [
@@ -98,11 +102,6 @@ class ValidationRunner:
         self.metrics_columns = metrics_columns
         self.metrics_sketches = metrics_sketches
 
-    def _part_expr(self, df: DataFrame):
-        if self.part_id_col and self.part_id_col in df.columns:
-            return F.col(self.part_id_col).cast("int")
-        return F.spark_partition_id()
-
     def run(
         self,
         df: DataFrame,
@@ -138,6 +137,7 @@ class ValidationRunner:
             part_id_col=self.part_id_col,
         )
         violations = core
+        part = part_expr(df, self.part_id_col)
         if self.suite.custom_constraints:
             # the failing-partition collect below executes the core plan;
             # persist FIRST so the later union/verdict actions reuse it
@@ -154,7 +154,7 @@ class ValidationRunner:
             }
             passing = df
             if failed:
-                passing = df.filter(~self._part_expr(df).isin(list(failed)))
+                passing = df.filter(~part.isin(list(failed)))
             custom = compile_suite(
                 passing,
                 self.suite,
@@ -168,9 +168,9 @@ class ValidationRunner:
         # cache: verdicts + downstream writers both consume violations
         violations = violations.persist()
 
-        row_counts = df.groupBy(
-            self._part_expr(df).alias("part_id")
-        ).agg(F.count(F.lit(1)).alias("n_rows"))
+        row_counts = df.groupBy(part.alias("part_id")).agg(
+            F.count(F.lit(1)).alias("n_rows")
+        )
         vio_counts = violations.groupBy("part_id").agg(
             F.sum(
                 (F.col("severity") == ERROR).cast("long")
@@ -203,7 +203,7 @@ class ValidationRunner:
             from smcchecker_spark.stats import column_stats_by
 
             metrics = column_stats_by(
-                df.withColumn("__part", self._part_expr(df)),
+                df.withColumn("__part", part),
                 "__part",
                 self.metrics_columns,
             ).withColumnsRenamed({"__part": "part_id"}).withColumn(
@@ -213,7 +213,7 @@ class ValidationRunner:
                 from smcchecker_spark.stats import partition_hll_sketches
 
                 sketches = partition_hll_sketches(
-                    df.withColumn("__part", self._part_expr(df)),
+                    df.withColumn("__part", part),
                     "__part",
                     self.metrics_columns,
                 ).withColumnsRenamed({"part": "part_id"}).withColumn(
@@ -485,7 +485,3 @@ def sample_violations(
     key = F.concat_ws("|", F.col("check_name"), F.col("row_id"))
     sampled = violations.filter(hash_bucket(key, salt) < thresh)
     return sampled, counts
-
-
-def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_SCHEMA)

@@ -867,21 +867,6 @@ def suggest_fds(
 # ---------------------------------------------------------------------------
 
 
-def embedding_mean_vector(
-    df: DataFrame, col: str = "embedding", dim: int | None = None
-) -> DataFrame:
-    """One-row DataFrame with the elementwise mean vector (double).
-    ONE aggregate pass — dim avg() aggregates, map-side combined like any
-    other agg; nothing per-row leaves the executors."""
-    if dim is None:
-        dim = df.select(F.size(F.col(col)).alias("d")).first()["d"]
-    return df.agg(
-        F.array(
-            *[F.avg(F.col(col)[i].cast("double")) for i in range(dim)]
-        ).alias("mean_vec")
-    )
-
-
 def embedding_drift(
     cur: DataFrame,
     base: DataFrame,

@@ -3,10 +3,10 @@
 The reference is strictly batch (one HTTP upload = one submission,
 /root/reference/proj/main.py:22-47); SURVEY.md §2.9 adopts no streaming
 for v1 semantics. This module is the engine's forward surface for a
-continuously-landing image+caption feed: each micro-batch runs the SAME
-compiled constraint suite (one fused pass + join stages — identical
-semantics and code path as batch), and violations/metrics append to the
-same sinks the batch engine writes.
+continuously-landing image+caption feed: each micro-batch runs
+``ValidationRunner.run`` — the one path batch runs and checkpoint waves
+take, core and custom tiers alike — and its violations and verdicts land
+in the same row shapes the batch engine writes.
 
 Shape notes (Spark-native):
 
@@ -20,8 +20,13 @@ Shape notes (Spark-native):
   (``windowed_histograms``) and per-key cumulative column stats via
   ``applyInPandasWithState`` (``running_column_stats``) — the custom
   stateful-operator surface.
-- The checkpointLocation gives exactly-once sink appends per micro-batch
-  — the streaming analogue of checkpoint.py's wave commits.
+- Replay safety comes from the batch-labeled overwrite (``_write_batch``):
+  every sink write replaces the partition of its own micro-batch, so a
+  foreachBatch redelivery after a crash rewrites that batch's rows
+  instead of appending them twice. The checkpointLocation only records
+  which input has been consumed; it does not make sink writes
+  exactly-once. This is the streaming analogue of checkpoint.py's wave
+  commits.
 """
 
 from __future__ import annotations
@@ -34,8 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smcchecker_spark.compile import compile_suite
 from smcchecker_spark.constraints import Suite, ValidationContext
+from smcchecker_spark.run import ValidationRunner
 
 
 def windowed_histograms(
@@ -204,14 +209,55 @@ def running_column_stats(
     )
 
 
+def _write_batch(df: DataFrame, dest: str, label_col: str, label) -> None:
+    """The one sink writer of every foreachBatch body here: ``df`` lands
+    in partition ``label_col=label`` of ``dest`` as a dynamic-partition
+    OVERWRITE, so a replayed micro-batch replaces its own rows instead of
+    appending them a second time."""
+    (
+        df.withColumn(label_col, F.lit(label))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(label_col)
+        .parquet(dest)
+    )
+
+
+def _gate_start(
+    self,
+    stream_df: DataFrame,
+    checkpoint_location: str,
+    trigger_once: bool = False,
+    **trigger_kwargs,
+):
+    """Attach ``self.process_batch`` to a streaming DataFrame and start
+    the query.
+
+    ``trigger_once=True`` drains all available input then stops —
+    the batch-resume-friendly mode (and what tests use).
+    """
+    writer = stream_df.writeStream.foreachBatch(self.process_batch).option(
+        "checkpointLocation", checkpoint_location
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_kwargs:
+        writer = writer.trigger(**trigger_kwargs)
+    return writer.start()
+
+
 @dataclass
 class StreamingValidator:
     """Validates a streaming DataFrame micro-batch-by-micro-batch.
 
-    ``violations_path`` receives the engine's standard violation rows
-    (plus a ``batch_id`` lineage column); ``verdicts_path`` one row per
-    (batch_id, part_id) — the per-partition pass/fail contract at
-    micro-batch granularity.
+    A thin ``foreachBatch`` adapter over ``ValidationRunner.run``: each
+    micro-batch is validated exactly as a batch run would validate it,
+    custom tier included. ``violations_path`` receives the run's
+    violation rows and ``verdicts_path`` its verdict rows (one per
+    (batch_id, part_id), without ``run_id``) — the per-partition
+    pass/fail contract at micro-batch granularity. All sinks, including
+    ``expectations_path``, are partitioned by ``batch_id`` and rewritten
+    per micro-batch, so replaying a batch leaves each row once.
 
     Scope note: join-level checks (Unique) see ONE micro-batch — that is
     the streaming semantic by design (a stream has no "whole table").
@@ -228,7 +274,7 @@ class StreamingValidator:
     verdicts_path: str = ""
     # optional table-level bounds evaluated per micro-batch (one extra
     # aggregation of the cached batch) — rows (batch_id, check, value,
-    # lo, hi, ok) append to expectations_path; the batch-mode analogue
+    # lo, hi, ok) land in expectations_path; the batch-mode analogue
     # is gated_append(expectations=...)
     expectations: list = field(default_factory=list)
     expectations_path: str = ""
@@ -244,80 +290,40 @@ class StreamingValidator:
         # Micro-batches are bounded by the trigger config, so caching
         # one is safe where caching the whole table would not be.
         batch_df.persist()
-        violations = None
+        result = None
         try:
-            violations = compile_suite(
-                batch_df,
+            result = ValidationRunner(
                 self.suite,
                 self.ctx,
                 row_id_col=self.row_id_col,
                 part_id_col=self.part_id_col,
-                # whole-column gates need an extra aggregate action per
-                # batch; acceptable (micro-batches are small), same
-                # semantics as batch
-                apply_gates=True,
-            ).withColumn("batch_id", F.lit(batch_id))
-            violations.persist()
+            ).run(batch_df)
             if self.violations_path:
-                violations.write.mode("append").parquet(self.violations_path)
+                _write_batch(
+                    result.violations, self.violations_path, "batch_id", batch_id
+                )
             if self.verdicts_path:
-                part = (
-                    F.col(self.part_id_col).cast("int")
-                    if self.part_id_col and self.part_id_col in batch_df.columns
-                    else F.spark_partition_id()
+                _write_batch(
+                    result.verdicts.drop("run_id"),
+                    self.verdicts_path,
+                    "batch_id",
+                    batch_id,
                 )
-                counts = batch_df.groupBy(part.alias("part_id")).agg(
-                    F.count(F.lit(1)).alias("n_rows")
-                )
-                vio = violations.groupBy("part_id").agg(
-                    F.sum((F.col("severity") == "error").cast("long")).alias(
-                        "n_errors"
-                    )
-                )
-                verdicts = (
-                    counts.join(vio, "part_id", "left")
-                    .select(
-                        F.lit(batch_id).alias("batch_id"),
-                        "part_id",
-                        "n_rows",
-                        F.coalesce("n_errors", F.lit(0)).alias("n_errors"),
-                        F.when(F.coalesce("n_errors", F.lit(0)) == 0, "pass")
-                        .otherwise("fail")
-                        .alias("status"),
-                    )
-                )
-                verdicts.write.mode("append").parquet(self.verdicts_path)
             if self.expectations and self.expectations_path:
                 from smcchecker_spark.stats import check_expectations
 
-                check_expectations(batch_df, self.expectations).withColumn(
-                    "batch_id", F.lit(batch_id)
-                ).write.mode("append").parquet(self.expectations_path)
+                _write_batch(
+                    check_expectations(batch_df, self.expectations),
+                    self.expectations_path,
+                    "batch_id",
+                    batch_id,
+                )
         finally:
-            if violations is not None:
-                violations.unpersist()
+            if result is not None:
+                result.violations.unpersist()
             batch_df.unpersist()
 
-    def start(
-        self,
-        stream_df: DataFrame,
-        checkpoint_location: str,
-        trigger_once: bool = False,
-        **trigger_kwargs,
-    ):
-        """Attach to a streaming DataFrame and start the query.
-
-        ``trigger_once=True`` drains all available input then stops —
-        the batch-resume-friendly mode (and what tests use).
-        """
-        writer = stream_df.writeStream.foreachBatch(self.process_batch).option(
-            "checkpointLocation", checkpoint_location
-        )
-        if trigger_once:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_kwargs:
-            writer = writer.trigger(**trigger_kwargs)
-        return writer.start()
+    start = _gate_start
 
 
 @dataclass
@@ -396,7 +402,7 @@ class StreamingNearDupGate:
         finally:
             batch_df.unpersist()
 
-    # start() attached below — shared with the phash gate
+    start = _gate_start
 
 
 def _dup_gate_split(
@@ -487,44 +493,16 @@ def _dup_gate_split(
         flagged.select(F.col("id").alias(id_col)), id_col, "left_anti"
     )
     label = f"b{batch_id}"
-
-    def _write(df: DataFrame, dest: str) -> None:
-        (
-            df.withColumn("ingest", F.lit(label))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest")
-            .parquet(dest)
-        )
-
     if clean_path:
-        _write(clean, clean_path)
+        _write_batch(clean, clean_path, "ingest", label)
     if dup_path:
-        _write(
+        _write_batch(
             batch_df.join(flagged.withColumnRenamed("id", id_col), id_col),
             dup_path,
+            "ingest",
+            label,
         )
     return clean
-
-
-def _gate_start(
-    self,
-    stream_df: DataFrame,
-    checkpoint_location: str,
-    trigger_once: bool = False,
-    **trigger_kwargs,
-):
-    writer = stream_df.writeStream.foreachBatch(self.process_batch).option(
-        "checkpointLocation", checkpoint_location
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_kwargs:
-        writer = writer.trigger(**trigger_kwargs)
-    return writer.start()
-
-
-StreamingNearDupGate.start = _gate_start
 
 
 @dataclass

@@ -61,6 +61,24 @@ def test_jar_discovery_contract(tmp_path, monkeypatch):
         find_iceberg_jar()
 
 
+def test_newest_jar_wins_by_numeric_version(tmp_path, monkeypatch):
+    """Among several runtime jars the highest Iceberg version wins,
+    compared as numbers: 1.10.0 is newer than 1.9.1 although it sorts
+    first as a string."""
+    from smcchecker_spark import iceberg_runtime
+
+    for name in (
+        "iceberg-spark-runtime-4.0_2.13-1.9.1.jar",
+        "iceberg-spark-runtime-4.0_2.13-1.10.0.jar",
+    ):
+        (tmp_path / name).write_bytes(b"PK")
+    monkeypatch.delenv("ICEBERG_SPARK_RUNTIME_JAR", raising=False)
+    monkeypatch.setattr(iceberg_runtime, "_candidate_dirs", lambda: [str(tmp_path)])
+    assert find_iceberg_jar() == str(
+        tmp_path / "iceberg-spark-runtime-4.0_2.13-1.10.0.jar"
+    )
+
+
 def test_session_confs_shape(tmp_path):
     """The conf dict is the full HadoopCatalog wiring for catalog
     ``local`` — the exact keys ``IcebergTable._check`` gates on, so a

@@ -89,25 +89,6 @@ def test_minhash_est_vs_exact(spark, docs):
         assert est[p] == pytest.approx(jac, abs=0.25)
 
 
-def test_minhash_signature_components_vary_per_seed(spark, docs):
-    """Regression: the per-seed hash must depend on the SEED, not the array
-    position (a two-arg transform lambda makes PySpark substitute the array
-    index for the seed — every component degenerates to the same value and
-    near-identical docs share no signature components)."""
-    sig = {
-        r["doc_id"]: r["sig"]
-        for r in docs.filter(F.col("doc_id").isin([0, 2]))
-        .select("doc_id", dedup.minhash_signature(F.col("text"), 32, 3).alias("sig"))
-        .collect()
-    }
-    # distinct seeds → (essentially always) distinct component values
-    assert len(set(sig[0])) > 16
-    # doc 2 = doc 0 + one trailing word: shingle Jaccard ≈ 11/13, so most
-    # signature components must agree (expected ≈ 27/32; 0 before the fix)
-    matches = sum(1 for a, b in zip(sig[0], sig[2]) if a == b)
-    assert matches >= 16
-
-
 def test_minhash_hot_bucket_path_identical_pairs(spark, docs):
     """The chunked broadcast-join path for oversized LSH buckets must
     produce exactly the pairs the in-array fast path produces — forcing

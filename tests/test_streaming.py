@@ -1,7 +1,7 @@
 """Structured-Streaming validation: a file-source stream of image+caption
-parquet drops is validated micro-batch by micro-batch with the SAME
-compiled suite as batch, with exactly-once sink appends via the stream
-checkpoint."""
+parquet drops is validated micro-batch by micro-batch through the SAME
+``ValidationRunner`` as batch, and a replayed micro-batch rewrites its
+own batch-labeled sink partitions instead of appending twice."""
 
 import os
 
@@ -80,6 +80,112 @@ def test_stream_matches_batch(spark, suite_ctx, tmp_path):
     vmap = {(r["batch_id"], r["part_id"]): r["status"] for r in verdicts.collect()}
     assert len(vmap) == 4  # 2 drops x 2 partitions each
     assert set(vmap.values()) <= {"pass", "fail"}
+
+
+def _tiered_suite_df(spark):
+    """Rows in 4 partitions: part 0 has a NULL caption (a core error, so
+    its custom tier is skipped); parts 0-2 have captions longer than the
+    custom MaxLength; parts 1 and 3 have tags that draw a custom
+    warning."""
+    rows = []
+    for i in range(40):
+        part = i % 4
+        caption = "tiny" if part == 3 else f"caption number {i}"
+        if i == 8:
+            caption = None
+        tag = "long" if part in (1, 3) else "ok"
+        rows.append((f"img{i:03d}", caption, tag, part))
+    df = spark.createDataFrame(
+        rows, "image_id string, caption string, tag string, part_id int"
+    )
+    suite = Suite(
+        name="tiered_stream",
+        table="images",
+        constraints=[NotNull("caption")],
+        custom_constraints=[
+            MaxLength("caption", max_length=12, is_core=False),
+            MaxLength("tag", max_length=3, is_core=False, severity="warning"),
+        ],
+    )
+    return df, suite
+
+
+def test_stream_runs_custom_tier_like_batch(spark, tmp_path):
+    """A streamed micro-batch gets the same violations and per-partition
+    verdicts as ``ValidationRunner.run`` over the same rows — custom
+    tier included, and skipped on the partition that failed core."""
+    from smcchecker_spark.run import ValidationRunner
+
+    df, suite = _tiered_suite_df(spark)
+    src = str(tmp_path / "in")
+    df.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    v = StreamingValidator(
+        suite,
+        violations_path=str(tmp_path / "violations"),
+        verdicts_path=str(tmp_path / "verdicts"),
+    )
+    q = v.start(stream, checkpoint_location=str(tmp_path / "ckpt"), trigger_once=True)
+    q.awaitTermination(120)
+
+    want = ValidationRunner(suite).run(df)
+
+    def vio_set(d):
+        return {(r["row_id"], r["check_name"]) for r in d.collect()}
+
+    def verdict_map(d):
+        return {
+            r["part_id"]: (r["n_rows"], r["n_errors"], r["n_warnings"], r["status"])
+            for r in d.collect()
+        }
+
+    got_vio = vio_set(spark.read.parquet(str(tmp_path / "violations")))
+    assert got_vio == vio_set(want.violations)
+    custom_parts = {
+        r["part_id"]
+        for r in want.violations.filter(
+            F.col("check_name") == "maxlength_caption"
+        ).collect()
+    }
+    assert custom_parts == {1, 2}  # fires on some partitions, not on 0 or 3
+    got_verd = verdict_map(spark.read.parquet(str(tmp_path / "verdicts")))
+    assert got_verd == verdict_map(want.verdicts)
+    assert {p: (w, s) for p, (_, _, w, s) in got_verd.items()} == {
+        0: (0, "fail"), 1: (10, "fail"), 2: (0, "fail"), 3: (10, "pass")
+    }
+
+
+def test_validator_replay_writes_each_row_once(spark, tmp_path):
+    """foreachBatch redelivery: processing micro-batch 7 twice leaves
+    every violation, verdict and expectation row exactly once."""
+    from smcchecker_spark.stats import Expectation
+
+    df, suite = _tiered_suite_df(spark)
+    v = StreamingValidator(
+        suite,
+        violations_path=str(tmp_path / "violations"),
+        verdicts_path=str(tmp_path / "verdicts"),
+        expectations=[Expectation("row_count", lo=10)],
+        expectations_path=str(tmp_path / "expectations"),
+    )
+    v.process_batch(df, 7)
+    v.process_batch(df, 7)
+
+    vio = [
+        (r["batch_id"], r["row_id"], r["check_name"])
+        for r in spark.read.parquet(str(tmp_path / "violations")).collect()
+    ]
+    assert len(vio) == len(set(vio)) > 0
+    verd = [
+        (r["batch_id"], r["part_id"])
+        for r in spark.read.parquet(str(tmp_path / "verdicts")).collect()
+    ]
+    assert sorted(verd) == [(7, p) for p in range(4)]
+    exp = [
+        (r["batch_id"], r["check"])
+        for r in spark.read.parquet(str(tmp_path / "expectations")).collect()
+    ]
+    assert len(exp) == 1 and exp[0][0] == 7
 
 
 def test_windowed_histograms_match_batch(spark, tmp_path):
