@@ -191,6 +191,17 @@ def _lazy_F():
     return F
 
 
+def _mean_recall(got: dict, exact: dict) -> float:
+    """Mean over queries of |found ∩ exact| / |exact|, to 4 places. The
+    divisor is each query's own exact-neighbour count, which is below k
+    when the corpus slice holds fewer than k candidates."""
+    return round(
+        sum(len(got.get(q, set()) & exact[q]) / len(exact[q]) for q in exact)
+        / max(len(exact), 1),
+        4,
+    )
+
+
 def _ann_recall(spark, sf_dir: str) -> dict:
     """Measured recall@10-vs-exhaustive for the PRUNED ANN regimes
     (round-4 verdict item 7): IVF across n_probe ∈ {1,2,4,8} (16
@@ -220,12 +231,7 @@ def _ann_recall(spark, sf_dir: str) -> dict:
         got: dict = {}
         for r in df.collect():
             got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return round(
-            sum(
-                len(got.get(q, set()) & exact[q]) / k for q in exact
-            ) / max(n_q, 1),
-            4,
-        )
+        return _mean_recall(got, exact)
 
     out: dict = {"k": k, "n_queries": n_q, "ivf": {}, "lsh": {}}
     cents = similarity.train_centroids_full(

@@ -431,21 +431,6 @@ def _block_bounds_8x8(h: int, w: int) -> tuple[np.ndarray, np.ndarray, np.ndarra
     return ys, xs, areas
 
 
-def _block_mean_8x8(gray: np.ndarray) -> np.ndarray:
-    """Downsample HxW → 8x8 by mean over index-partitioned blocks.
-
-    Vectorized via ``np.add.reduceat`` over the block start boundaries
-    (rows then columns). Degenerate boundaries — when h or w < 8 and a
-    start index repeats — make reduceat take the single element at that
-    index, which is exactly the ``[lo, max(hi, lo+1))`` fallback of the
-    original loop formulation (parity verified over sizes 1..99)."""
-    h, w = gray.shape
-    ys, xs, areas = _block_bounds_8x8(h, w)
-    rows = np.add.reduceat(gray, ys, axis=0)
-    sums = np.add.reduceat(rows, xs, axis=1)
-    return sums / areas
-
-
 # Cap on the decoded-pixel bytes stacked per phash group chunk: a shape
 # group of large same-size images is processed in bounded slices instead
 # of one giant (n, h, w, 3) float64 stack.

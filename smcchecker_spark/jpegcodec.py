@@ -10,8 +10,11 @@ ITU-T T.81 baseline sequential DCT from the public spec:
   quality-scaled Annex-K quantization tables, zigzag, DC-differential +
   AC run-length symbols, Annex-K canonical Huffman codes, vectorized
   bit packing, 0xFF byte stuffing, full JFIF header set
-  (SOI/APP0/DQT/SOF0/DHT/SOS/EOI). Output is a spec-valid JPEG any
-  external decoder can open.
+  (SOI/APP0/DQT/SOF0|SOF2/DHT/SOS/EOI). Output is a spec-valid JPEG any
+  external decoder can open. There is ONE encoder core (``_encode``):
+  baseline color, progressive color and grayscale differ only in the
+  scan list it codes, and every scan is tokenized by
+  ``_entropy_tokens``.
 - **Decode**: marker walk, arbitrary quant/Huffman table slots,
   baseline (SOF0/SOF1) AND progressive (SOF2) frames with 1 or 3
   components and sampling factors up to 2×2 (so 4:4:4, 4:2:2, 4:4:0,
@@ -23,7 +26,13 @@ ITU-T T.81 baseline sequential DCT from the public spec:
   vectorized dequantize + IDCT + upsample + color convert. Lossless /
   arithmetic coding and 12-bit precision raise ``ValueError`` — the
   validation engine reports those payloads as violations rather than
-  mis-decoding them.
+  mis-decoding them. There is ONE scan driver (``_decode_scan_into``)
+  for both frame kinds: it builds the per-component block template,
+  checks each segment's entropy budget and MCU coverage, and hands
+  each restart segment to the native kernel (``native/jpegscan.c``,
+  ``native/jpegprog.c``, marshalled by ``_native_call_args``) or to
+  the Python reference loop it mirrors (``_decode_segment_py``,
+  ``_decode_prog_segment_py``).
 
 Determinism: everything is fixed-point-free numpy float64 with
 ``np.rint`` rounding — identical output across hosts, which the
@@ -359,42 +368,32 @@ def _pack_bits(vals: np.ndarray, lens: np.ndarray) -> bytes:
     return raw.replace(b"\xff", b"\xff\x00")
 
 
-def _magnitude(v: int) -> tuple[int, int]:
-    """T.81 F.1.2.1: value → (size category, appended bits). Scalar
-    reference for :func:`_size_mag` (property-tested parity); the
-    encoder itself uses the vectorized form."""
-    if v == 0:
-        return 0, 0
-    s = int(abs(v)).bit_length()
-    return s, v if v > 0 else v + (1 << s) - 1
+# Annex-K (DC bits, DC vals, AC bits, AC vals) per table class:
+# 0 = luma, 1 = chroma
+_ANNEX_K = (
+    (DC_LUMA_BITS, DC_LUMA_VALS, AC_LUMA_BITS, AC_LUMA_VALS),
+    (DC_CHROMA_BITS, DC_CHROMA_VALS, AC_CHROMA_BITS, AC_CHROMA_VALS),
+)
 
-
-_CODE_ARRAYS: list | None = None
+_CODE_ARRAYS: tuple | None = None
 
 
 def _code_arrays():
-    """Annex-K Huffman codes as numpy lookup arrays, per class
-    (0 = luma, 1 = chroma): (dc_code[12], dc_len[12], ac_code[256],
-    ac_len[256]). Built once per process."""
+    """Annex-K Huffman codes as numpy lookup arrays indexed
+    [class, symbol]: (dc_code[2, 12], dc_len[2, 12], ac_code[2, 256],
+    ac_len[2, 256]). Built once per process."""
     global _CODE_ARRAYS
     if _CODE_ARRAYS is None:
-        out = []
-        for dcb, dcv, acb, acv in (
-            (DC_LUMA_BITS, DC_LUMA_VALS, AC_LUMA_BITS, AC_LUMA_VALS),
-            (DC_CHROMA_BITS, DC_CHROMA_VALS, AC_CHROMA_BITS, AC_CHROMA_VALS),
-        ):
-            dc = _build_codes(dcb, dcv)
-            ac = _build_codes(acb, acv)
-            dc_code = np.zeros(12, dtype=np.uint64)
-            dc_len = np.zeros(12, dtype=np.int64)
-            for s, (c, l) in dc.items():
-                dc_code[s], dc_len[s] = c, l
-            ac_code = np.zeros(256, dtype=np.uint64)
-            ac_len = np.zeros(256, dtype=np.int64)
-            for s, (c, l) in ac.items():
-                ac_code[s], ac_len[s] = c, l
-            out.append((dc_code, dc_len, ac_code, ac_len))
-        _CODE_ARRAYS = out
+        dc_code = np.zeros((2, 12), dtype=np.uint64)
+        dc_len = np.zeros((2, 12), dtype=np.int64)
+        ac_code = np.zeros((2, 256), dtype=np.uint64)
+        ac_len = np.zeros((2, 256), dtype=np.int64)
+        for cls, (dcb, dcv, acb, acv) in enumerate(_ANNEX_K):
+            for s, (c, l) in _build_codes(dcb, dcv).items():
+                dc_code[cls, s], dc_len[cls, s] = c, l
+            for s, (c, l) in _build_codes(acb, acv).items():
+                ac_code[cls, s], ac_len[cls, s] = c, l
+        _CODE_ARRAYS = (dc_code, dc_len, ac_code, ac_len)
     return _CODE_ARRAYS
 
 
@@ -411,6 +410,67 @@ def _size_mag(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return s, mag
 
 
+def _dc_tokens(dc: np.ndarray, cid: np.ndarray, cls: np.ndarray):
+    """One DC-differential token per block, blocks in scan order; each
+    component's predictor follows its own blocks. Returns (rows, keys,
+    subs, vals, lens) — the sort keys ``_entropy_tokens`` merges on."""
+    dc_code, dc_len, _, _ = _code_arrays()
+    diff = np.empty_like(dc)
+    for c in np.unique(cid):
+        m = cid == c
+        diff[m] = np.diff(dc[m], prepend=0)
+    s, mag = _size_mag(diff)
+    n = len(dc)
+    return (
+        np.arange(n, dtype=np.int64),
+        np.full(n, -1, dtype=np.int64),
+        np.ones(n, dtype=np.int64),
+        (dc_code[cls, s] << s.astype(np.uint64)) | mag.astype(np.uint64),
+        dc_len[cls, s] + s,
+    )
+
+
+def _ac_tokens(Z: np.ndarray, cls: np.ndarray):
+    """AC run-length tokens over zigzag positions 1..63 of every block:
+    (run, size) symbols, a ZRL per 16 zeros skipped, and an EOB after
+    the last nonzero coefficient unless it sits at position 63. Runs
+    come from the nonzero positions (row-major nonzero ⇒ per block in
+    zigzag order), ZRLs by np.repeat. Returns (rows, keys, subs, vals,
+    lens); a ZRL sorts before the symbol it precedes (sub-key 0)."""
+    _, _, ac_code, ac_len = _code_arrays()
+    nzb, nzk = np.nonzero(Z[:, 1:])
+    first = np.ones(len(nzb), dtype=bool)
+    first[1:] = nzb[1:] != nzb[:-1]
+    run = nzk - np.where(first, -1, np.roll(nzk, 1)) - 1
+    s, mag = _size_mag(Z[:, 1:][nzb, nzk])
+    sym = ((run & 15) << 4) | s
+    zrl_rows = np.repeat(nzb, run >> 4)
+    last_k = np.full(Z.shape[0], -1, dtype=np.int64)
+    last_k[nzb] = nzk  # row-major ⇒ last write per block is its max
+    eob_rows = np.nonzero(last_k < 62)[0]
+    return (
+        np.concatenate([zrl_rows, nzb, eob_rows]),
+        np.concatenate(
+            [np.repeat(nzk, run >> 4), nzk,
+             np.full(len(eob_rows), 63, dtype=np.int64)]
+        ),
+        np.concatenate(
+            [np.zeros(len(zrl_rows), dtype=np.int64),
+             np.ones(len(nzb) + len(eob_rows), dtype=np.int64)]
+        ),
+        np.concatenate(
+            [ac_code[cls[zrl_rows], 0xF0],
+             (ac_code[cls[nzb], sym] << s.astype(np.uint64))
+             | mag.astype(np.uint64),
+             ac_code[cls[eob_rows], 0]]
+        ),
+        np.concatenate(
+            [ac_len[cls[zrl_rows], 0xF0], ac_len[cls[nzb], sym] + s,
+             ac_len[cls[eob_rows], 0]]
+        ),
+    )
+
+
 def _entropy_tokens(
     zz_per_comp: list[np.ndarray],
     grids: list[tuple[int, int]],
@@ -418,117 +478,165 @@ def _entropy_tokens(
     classes: list[int],
     mcux: int,
     mcuy: int,
+    ss: int = 0,
+    se: int = 63,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Whole-image entropy-token stream as (values, bit lengths) arrays,
+    """One scan's entropy-token stream as (values, bit lengths) arrays,
     fully vectorized — no per-coefficient Python (the loop form was ~75%
-    of encode time). Stream order is reconstructed with one lexsort:
-    every token carries (scan-slot of its block, zigzag position,
-    ZRL-before-symbol sub-key). DC diffs, magnitude categories, AC
-    run-lengths (incl. ZRL expansion via np.repeat) and EOB flags are
-    all array expressions."""
+    of encode time). Blocks are put in MCU order (T.81 A.2.3; a single
+    component with 1x1 sampling on an ``mcux``-wide grid is raster
+    order, which is how non-interleaved scans are coded), then every
+    token is sorted by (block, zigzag position, ZRL-before-symbol
+    sub-key) with one lexsort. ``ss``/``se`` pick the band: 0/63 is a
+    sequential scan, 0/0 a progressive DC first scan and 1/63 a
+    progressive full-band AC scan. ``mcuy`` is implied by the grids."""
     slots_per_mcu = sum(hi * vi for hi, vi in sampling)
-    Zs, slots, clss, cids = [], [], [], []
+    slots, cids = [], []
     offset = 0
-    for c, (zz, (bh, bw), (hi, vi)) in enumerate(
-        zip(zz_per_comp, grids, sampling)
-    ):
+    for c, ((bh, bw), (hi, vi)) in enumerate(zip(grids, sampling)):
         byg, bxg = np.divmod(np.arange(bh * bw, dtype=np.int64), bw)
         mcu_id = (byg // vi) * mcux + (bxg // hi)
         ordinal = offset + (byg % vi) * hi + (bxg % hi)
         slots.append(mcu_id * slots_per_mcu + ordinal)
-        Zs.append(zz)
-        clss.append(np.full(bh * bw, classes[c], dtype=np.int64))
         cids.append(np.full(bh * bw, c, dtype=np.int64))
         offset += hi * vi
-    Z = np.concatenate(Zs)
     order = np.argsort(np.concatenate(slots), kind="stable")
-    Z = Z[order]
-    cls = np.concatenate(clss)[order]
+    Z = np.concatenate(zz_per_comp)[order]
     cid = np.concatenate(cids)[order]
-    N = Z.shape[0]
-    tabs = _code_arrays()
-
-    # DC: per-component differential in scan order
-    dc = Z[:, 0]
-    diff = np.empty_like(dc)
-    for c in range(len(zz_per_comp)):
-        m = cid == c
-        diff[m] = np.diff(dc[m], prepend=0)
-    s_dc, mag_dc = _size_mag(diff)
-    dcode = np.where(cls == 0, tabs[0][0][s_dc], tabs[1][0][s_dc])
-    dlen = np.where(cls == 0, tabs[0][1][s_dc], tabs[1][1][s_dc])
-    dc_vals = (dcode << s_dc.astype(np.uint64)) | mag_dc.astype(np.uint64)
-    dc_lens = dlen + s_dc
-
-    # AC: run-lengths from nonzero positions (row-major nonzero ⇒ per
-    # block in zigzag order)
-    AC = Z[:, 1:]
-    nzb, nzk = np.nonzero(AC)
-    if len(nzb):
-        v = AC[nzb, nzk]
-        prev = np.concatenate([[np.int64(-1)], nzk[:-1]])
-        first = np.concatenate([[True], nzb[1:] != nzb[:-1]])
-        prev[first] = -1
-        run = nzk - prev - 1
-        zrl_n = run >> 4
-        s_ac, mag_ac = _size_mag(v)
-        sym = ((run & 15) << 4) | s_ac
-        ac_cls = cls[nzb]
-        accode = np.where(ac_cls == 0, tabs[0][2][sym], tabs[1][2][sym])
-        aclen = np.where(ac_cls == 0, tabs[0][3][sym], tabs[1][3][sym])
-        ac_vals = (accode << s_ac.astype(np.uint64)) | mag_ac.astype(
-            np.uint64
-        )
-        ac_lens = aclen + s_ac
-        zrl_rows = np.repeat(nzb, zrl_n)
-        zrl_keys = np.repeat(nzk, zrl_n)
-        zrl_cls = cls[zrl_rows]
-        zrl_vals = np.where(
-            zrl_cls == 0, tabs[0][2][0xF0], tabs[1][2][0xF0]
-        ).astype(np.uint64)
-        zrl_lens = np.where(zrl_cls == 0, tabs[0][3][0xF0], tabs[1][3][0xF0])
-        last_k = np.full(N, -1, dtype=np.int64)
-        last_k[nzb] = nzk  # row-major ⇒ last write per block is its max
-    else:
-        nzb = nzk = ac_vals = ac_lens = np.empty(0, dtype=np.int64)
-        zrl_rows = zrl_keys = zrl_vals = zrl_lens = np.empty(
-            0, dtype=np.int64
-        )
-        last_k = np.full(N, -1, dtype=np.int64)
-
-    eob_rows = np.nonzero(last_k < 62)[0]
-    eob_cls = cls[eob_rows]
-    eob_vals = np.where(eob_cls == 0, tabs[0][2][0], tabs[1][2][0]).astype(
-        np.uint64
-    )
-    eob_lens = np.where(eob_cls == 0, tabs[0][3][0], tabs[1][3][0])
-
-    rows = np.concatenate(
-        [np.arange(N, dtype=np.int64), zrl_rows, nzb, eob_rows]
-    )
-    keys = np.concatenate(
-        [
-            np.full(N, -1, dtype=np.int64),
-            zrl_keys,
-            nzk,
-            np.full(len(eob_rows), 63, dtype=np.int64),
-        ]
-    )
-    subs = np.concatenate(
-        [
-            np.ones(N, dtype=np.int64),
-            np.zeros(len(zrl_rows), dtype=np.int64),
-            np.ones(len(nzb), dtype=np.int64),
-            np.ones(len(eob_rows), dtype=np.int64),
-        ]
-    )
-    vals = np.concatenate(
-        [dc_vals, zrl_vals.astype(np.uint64), ac_vals.astype(np.uint64),
-         eob_vals]
-    )
-    lens = np.concatenate([dc_lens, zrl_lens, ac_lens, eob_lens])
+    cls = np.asarray(classes, dtype=np.int64)[cid]
+    parts = []
+    if ss == 0:
+        parts.append(_dc_tokens(Z[:, 0], cid, cls))
+    if se > 0:
+        parts.append(_ac_tokens(Z, cls))
+    rows, keys, subs, vals, lens = (np.concatenate(f) for f in zip(*parts))
     o = np.lexsort((subs, keys, rows))
     return vals[o], lens[o]
+
+
+def _encode(
+    arr: np.ndarray,
+    quality: int,
+    subsampling: str = "444",
+    progressive: bool = False,
+    gray: bool = False,
+) -> bytes:
+    """The one encoder core behind the three public entry points: input
+    checks, YCbCr (+ 4:2:0 box-mean chroma), pad → DCT → quantize per
+    component, one JFIF header set, then the scans. Only the scan list
+    differs between modes: one interleaved full-band scan (baseline; a
+    single-component frame's scan is non-interleaved), or the
+    progressive script — an interleaved DC first scan, then one
+    full-band AC scan per component."""
+    arr = np.ascontiguousarray(arr, dtype=np.uint8)
+    if gray:
+        if arr.ndim != 2:
+            raise ValueError(f"expected HxW uint8, got {arr.shape}")
+    elif arr.ndim != 3 or arr.shape[2] != 3:
+        raise ValueError(f"expected HxWx3 uint8, got {arr.shape}")
+    h, w = arr.shape[:2]
+    if h == 0 or w == 0:
+        raise ValueError("JPEG has zero-pixel dimensions")
+    if subsampling not in ("444", "420"):
+        raise ValueError(f"unsupported subsampling {subsampling!r}")
+    qts = quality_tables(quality)
+
+    if gray:
+        comps = [(arr.astype(np.float64), (1, 1), 0)]
+    else:
+        rgb = arr.astype(np.float64)
+        y = rgb @ _RGB2Y
+        cb = rgb @ _RGB2CB + 128.0
+        cr = rgb @ _RGB2CR + 128.0
+        if subsampling == "420":
+            # 2x2 box mean; pad odd dims by edge replication first
+            ph, pw = (h + 1) // 2 * 2, (w + 1) // 2 * 2
+            cb = np.pad(cb, ((0, ph - h), (0, pw - w)), mode="edge")
+            cr = np.pad(cr, ((0, ph - h), (0, pw - w)), mode="edge")
+            cb = cb.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
+            cr = cr.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
+        hv = (2, 2) if subsampling == "420" else (1, 1)
+        comps = [(y, hv, 0), (cb, (1, 1), 1), (cr, (1, 1), 1)]
+    hmax, vmax = comps[0][1]
+    mcux = -(-w // (8 * hmax))
+    mcuy = -(-h // (8 * vmax))
+    sampling = [hv_c for _, hv_c, _ in comps]
+    classes = [cls for _, _, cls in comps]
+
+    zz_per_comp, grids = [], []  # grids: (block rows, block cols)
+    for plane, (hi, vi), cls in comps:
+        bw, bh = mcux * hi, mcuy * vi  # blocks across / down
+        padded = np.pad(
+            plane,
+            ((0, bh * 8 - plane.shape[0]), (0, bw * 8 - plane.shape[1])),
+            mode="edge",
+        )
+        blocks = _to_blocks(padded) - 128.0
+        coef = _DCT @ blocks @ _DCT.T
+        q = np.rint(coef / qts[cls].reshape(8, 8)).astype(np.int64)
+        zz_per_comp.append(q.reshape(-1, 64)[:, ZIGZAG])
+        grids.append((bh, bw))
+
+    every = tuple(range(len(comps)))
+    if progressive:
+        scans = [(every, 0, 0)] + [((c,), 1, 63) for c in every]
+    else:
+        scans = [(every, 0, 63)]
+
+    def seg(marker: int, payload: bytes) -> bytes:
+        return struct.pack(">HH", marker, len(payload) + 2) + payload
+
+    tables = sorted(set(classes))
+    out = [
+        b"\xff\xd8",
+        seg(0xFFE0,
+            b"JFIF\x00" + struct.pack(">BBBHHBB", 1, 1, 0, 1, 1, 0, 0)),
+        seg(0xFFDB, b"".join(
+            bytes([t]) + bytes(qts[t].astype(np.uint8)[ZIGZAG])
+            for t in tables
+        )),
+        seg(
+            0xFFC2 if progressive else 0xFFC0,
+            struct.pack(">BHHB", 8, h, w, len(comps)) + b"".join(
+                struct.pack(">BBB", c + 1, (hi << 4) | vi, classes[c])
+                for c, (hi, vi) in enumerate(sampling)
+            ),
+        ),
+    ]
+    for t in tables:
+        dcb, dcv, acb, acv = _ANNEX_K[t]
+        out.append(seg(0xFFC4, bytes([t]) + bytes(dcb) + bytes(dcv)))
+        out.append(seg(0xFFC4, bytes([0x10 | t]) + bytes(acb) + bytes(acv)))
+    for sel, ss, se in scans:
+        # an AC-only scan names no DC table (Td = 0)
+        out.append(seg(0xFFDA, bytes([len(sel)]) + b"".join(
+            bytes([c + 1, ((classes[c] if ss == 0 else 0) << 4) | classes[c]])
+            for c in sel
+        ) + bytes([ss, se, 0])))
+        if len(sel) > 1:  # interleaved: every component, padded grids
+            tokens = _entropy_tokens(
+                zz_per_comp, grids, sampling, classes, mcux, mcuy, ss, se
+            )
+        else:
+            # non-interleaved (T.81 A.2): one block per MCU over the
+            # component's OWN ceil(dims/8) grid in raster order — blocks
+            # that exist only to pad the frame's MCU grid are not coded
+            c = sel[0]
+            hi, vi = sampling[c]
+            xi = -(-w * hi // hmax)  # T.81 A.1.1 component dims
+            yi = -(-h * vi // vmax)
+            gw, gh = -(-xi // 8), -(-yi // 8)
+            blocks = (
+                np.arange(gh, dtype=np.int64)[:, None] * grids[c][1]
+                + np.arange(gw, dtype=np.int64)[None, :]
+            ).reshape(-1)
+            tokens = _entropy_tokens(
+                [zz_per_comp[c][blocks]], [(gh, gw)], [(1, 1)],
+                [classes[c]], gw, gh, ss, se,
+            )
+        out.append(_pack_bits(*tokens))
+    out.append(b"\xff\xd9")
+    return b"".join(out)
 
 
 def encode_jpeg(
@@ -540,199 +648,7 @@ def encode_jpeg(
     highest PSNR, what the validation fixtures want) or "420" (2×2
     box-mean chroma — the common web layout; exercises the decoder's
     generic MCU path)."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    if arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError(f"expected HxWx3 uint8, got {arr.shape}")
-    h, w = arr.shape[:2]
-    if h == 0 or w == 0:
-        raise ValueError("JPEG has zero-pixel dimensions")
-    if subsampling not in ("444", "420"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    hv = (2, 2) if subsampling == "420" else (1, 1)
-    hmax, vmax = hv
-
-    rgb = arr.astype(np.float64)
-    y = rgb @ _RGB2Y
-    cb = rgb @ _RGB2CB + 128.0
-    cr = rgb @ _RGB2CR + 128.0
-    if subsampling == "420":
-        # 2x2 box mean; pad odd dims by edge replication first
-        ph, pw = (h + 1) // 2 * 2, (w + 1) // 2 * 2
-        cb = np.pad(cb, ((0, ph - h), (0, pw - w)), mode="edge")
-        cr = np.pad(cr, ((0, ph - h), (0, pw - w)), mode="edge")
-        cb = cb.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        cr = cr.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-
-    lum_qt, chm_qt = quality_tables(quality)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-
-    comps = []  # (plane, (hi, vi), qtable natural)
-    comps.append((y, (hmax, vmax), lum_qt))
-    comps.append((cb, (1, 1), chm_qt))
-    comps.append((cr, (1, 1), chm_qt))
-
-    zz_per_comp = []
-    grid_per_comp = []  # (block rows, block cols)
-    for plane, (hi, vi), qt in comps:
-        bw, bh = mcux * hi, mcuy * vi  # blocks across / down
-        padded = np.pad(
-            plane,
-            ((0, bh * 8 - plane.shape[0]), (0, bw * 8 - plane.shape[1])),
-            mode="edge",
-        )
-        blocks = _to_blocks(padded) - 128.0
-        coef = _DCT @ blocks @ _DCT.T
-        q = np.rint(coef / qt.reshape(8, 8)).astype(np.int64)
-        zz_per_comp.append(q.reshape(-1, 64)[:, ZIGZAG])
-        grid_per_comp.append((bh, bw))
-
-    # interleaved MCU scan (T.81 A.2.3), tokenized fully vectorized
-    tok_vals, tok_lens = _entropy_tokens(
-        zz_per_comp,
-        grid_per_comp,
-        [hv_c for _, hv_c, _ in comps],
-        [0, 1, 1],
-        mcux,
-        mcuy,
-    )
-    scan = _pack_bits(tok_vals, tok_lens)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    app0 = seg(
-        0xFFE0, b"JFIF\x00" + struct.pack(">BBBHHBB", 1, 1, 0, 1, 1, 0, 0)
-    )
-    dqt = seg(
-        0xFFDB,
-        b"\x00"
-        + bytes(lum_qt.astype(np.uint8)[ZIGZAG])
-        + b"\x01"
-        + bytes(chm_qt.astype(np.uint8)[ZIGZAG]),
-    )
-    sof_comps = b""
-    for cid, (_, (hi, vi), _) in enumerate(comps, start=1):
-        sof_comps += struct.pack(">BBB", cid, (hi << 4) | vi, 0 if cid == 1 else 1)
-    sof0 = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 3) + sof_comps)
-
-    def dht(tc: int, th: int, bits: list[int], vals: list[int]) -> bytes:
-        return seg(
-            0xFFC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        )
-
-    dhts = (
-        dht(0, 0, DC_LUMA_BITS, DC_LUMA_VALS)
-        + dht(1, 0, AC_LUMA_BITS, AC_LUMA_VALS)
-        + dht(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS)
-        + dht(1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS)
-    )
-    sos = seg(
-        0xFFDA,
-        b"\x03"
-        + struct.pack(">BB", 1, 0x00)
-        + struct.pack(">BB", 2, 0x11)
-        + struct.pack(">BB", 3, 0x11)
-        + b"\x00\x3f\x00",
-    )
-    return (
-        b"\xff\xd8" + app0 + dqt + sof0 + dhts + sos + scan + b"\xff\xd9"
-    )
-
-
-def _dc_scan_tokens(
-    zz_per_comp: list[np.ndarray],
-    grids: list[tuple[int, int]],
-    sampling: list[tuple[int, int]],
-    classes: list[int],
-    mcux: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """DC-only token stream for a progressive DC first scan (Ss=0,
-    Se=0, Ah=Al=0): blocks interleaved per MCU via the same slot math
-    as ``_entropy_tokens`` (so any sampling layout works), each
-    component's differential sequence following its own scan order."""
-    tabs = _code_arrays()
-    slots_per_mcu = sum(hi * vi for hi, vi in sampling)
-    vals_all, lens_all, slots_all = [], [], []
-    offset = 0
-    for c, (zz, (bh, bw), (hi, vi)) in enumerate(
-        zip(zz_per_comp, grids, sampling)
-    ):
-        byg, bxg = np.divmod(np.arange(bh * bw, dtype=np.int64), bw)
-        mcu_id = (byg // vi) * mcux + (bxg // hi)
-        ordinal = offset + (byg % vi) * hi + (bxg % hi)
-        slot = mcu_id * slots_per_mcu + ordinal
-        order = np.argsort(slot, kind="stable")
-        diff = np.diff(zz[:, 0][order], prepend=0)
-        s, mag = _size_mag(diff)
-        tab = tabs[classes[c]]
-        vals_all.append(
-            (tab[0][s].astype(np.uint64) << s.astype(np.uint64))
-            | mag.astype(np.uint64)
-        )
-        lens_all.append(tab[1][s] + s)
-        slots_all.append(slot[order])
-        offset += hi * vi
-    slots = np.concatenate(slots_all)
-    o = np.argsort(slots, kind="stable")
-    return np.concatenate(vals_all)[o], np.concatenate(lens_all)[o]
-
-
-def _ac_scan_tokens(
-    zz: np.ndarray, cls: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """AC-only token stream for one component's progressive spectral
-    scan over the full 1..63 band (Ah=Al=0): identical run-length /
-    ZRL / EOB coding as the baseline AC part (an all-zero tail is a
-    plain EOB — an EOB-run of one block), blocks in raster order."""
-    tabs = _code_arrays()
-    tab = tabs[cls]
-    N = zz.shape[0]
-    AC = zz[:, 1:]
-    nzb, nzk = np.nonzero(AC)
-    if len(nzb):
-        v = AC[nzb, nzk]
-        prev = np.concatenate([[np.int64(-1)], nzk[:-1]])
-        first = np.concatenate([[True], nzb[1:] != nzb[:-1]])
-        prev[first] = -1
-        run = nzk - prev - 1
-        zrl_n = run >> 4
-        s_ac, mag_ac = _size_mag(v)
-        sym = ((run & 15) << 4) | s_ac
-        ac_vals = (tab[2][sym].astype(np.uint64) << s_ac.astype(np.uint64)) \
-            | mag_ac.astype(np.uint64)
-        ac_lens = tab[3][sym] + s_ac
-        zrl_rows = np.repeat(nzb, zrl_n)
-        zrl_keys = np.repeat(nzk, zrl_n)
-        zrl_vals = np.full(len(zrl_rows), tab[2][0xF0], dtype=np.uint64)
-        zrl_lens = np.full(len(zrl_rows), tab[3][0xF0], dtype=np.int64)
-        last_k = np.full(N, -1, dtype=np.int64)
-        last_k[nzb] = nzk
-    else:
-        nzb = nzk = np.empty(0, dtype=np.int64)
-        ac_vals = np.empty(0, dtype=np.uint64)
-        ac_lens = zrl_rows = zrl_keys = np.empty(0, dtype=np.int64)
-        zrl_vals = np.empty(0, dtype=np.uint64)
-        zrl_lens = np.empty(0, dtype=np.int64)
-        last_k = np.full(N, -1, dtype=np.int64)
-    eob_rows = np.nonzero(last_k < 62)[0]
-    eob_vals = np.full(len(eob_rows), tab[2][0], dtype=np.uint64)
-    eob_lens = np.full(len(eob_rows), tab[3][0], dtype=np.int64)
-    rows = np.concatenate([zrl_rows, nzb, eob_rows])
-    keys = np.concatenate(
-        [zrl_keys, nzk, np.full(len(eob_rows), 63, dtype=np.int64)]
-    )
-    subs = np.concatenate(
-        [
-            np.zeros(len(zrl_rows), dtype=np.int64),
-            np.ones(len(nzb), dtype=np.int64),
-            np.ones(len(eob_rows), dtype=np.int64),
-        ]
-    )
-    vals = np.concatenate([zrl_vals, ac_vals, eob_vals])
-    lens = np.concatenate([zrl_lens, ac_lens, eob_lens])
-    o = np.lexsort((subs, keys, rows))
-    return vals[o], lens[o]
+    return _encode(arr, quality, subsampling)
 
 
 def encode_jpeg_progressive(
@@ -748,160 +664,14 @@ def encode_jpeg_progressive(
     progression only reorders the entropy stream (asserted in tests).
     External decoders (ImageIO) open the output; see
     tests/test_jpeg_vectors.py."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    if arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError(f"expected HxWx3 uint8, got {arr.shape}")
-    h, w = arr.shape[:2]
-    if h == 0 or w == 0:
-        raise ValueError("JPEG has zero-pixel dimensions")
-    if subsampling not in ("444", "420"):
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    hmax, vmax = (2, 2) if subsampling == "420" else (1, 1)
-    rgb = arr.astype(np.float64)
-    y = rgb @ _RGB2Y
-    cb = rgb @ _RGB2CB + 128.0
-    cr = rgb @ _RGB2CR + 128.0
-    if subsampling == "420":
-        ph, pw = (h + 1) // 2 * 2, (w + 1) // 2 * 2
-        cb = np.pad(cb, ((0, ph - h), (0, pw - w)), mode="edge")
-        cr = np.pad(cr, ((0, ph - h), (0, pw - w)), mode="edge")
-        cb = cb.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        cr = cr.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-    lum_qt, chm_qt = quality_tables(quality)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    comps = [
-        (y, (hmax, vmax), lum_qt),
-        (cb, (1, 1), chm_qt),
-        (cr, (1, 1), chm_qt),
-    ]
-    zz_per_comp, grids = [], []
-    for plane, (hi, vi), qt in comps:
-        gw, gh = mcux * hi, mcuy * vi
-        padded = np.pad(
-            plane,
-            ((0, gh * 8 - plane.shape[0]), (0, gw * 8 - plane.shape[1])),
-            mode="edge",
-        )
-        blocks = _to_blocks(padded) - 128.0
-        q = np.rint((_DCT @ blocks @ _DCT.T) / qt.reshape(8, 8)).astype(
-            np.int64
-        )
-        zz_per_comp.append(q.reshape(-1, 64)[:, ZIGZAG])
-        grids.append((gh, gw))
-
-    classes = [0, 1, 1]
-    sampling = [(hmax, vmax), (1, 1), (1, 1)]
-    scans = [
-        _pack_bits(
-            *_dc_scan_tokens(zz_per_comp, grids, sampling, classes, mcux)
-        )
-    ]
-    for c in range(3):
-        # non-interleaved AC scan: the component's OWN ceil(dims/8)
-        # grid in raster order (pad-only MCU blocks are not coded)
-        hi, vi = sampling[c]
-        xi = -(-w * hi // hmax)
-        yi = -(-h * vi // vmax)
-        gw_s, gh_s = -(-xi // 8), -(-yi // 8)
-        bw = grids[c][1]
-        sel = (
-            np.arange(gh_s, dtype=np.int64)[:, None] * bw
-            + np.arange(gw_s, dtype=np.int64)[None, :]
-        ).reshape(-1)
-        scans.append(
-            _pack_bits(
-                *_ac_scan_tokens(zz_per_comp[c][sel], classes[c])
-            )
-        )
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    app0 = seg(
-        0xFFE0, b"JFIF\x00" + struct.pack(">BBBHHBB", 1, 1, 0, 1, 1, 0, 0)
-    )
-    dqt = seg(
-        0xFFDB,
-        b"\x00"
-        + bytes(lum_qt.astype(np.uint8)[ZIGZAG])
-        + b"\x01"
-        + bytes(chm_qt.astype(np.uint8)[ZIGZAG]),
-    )
-    sof_comps = b""
-    for cid, (hi, vi) in zip((1, 2, 3), sampling):
-        sof_comps += struct.pack(
-            ">BBB", cid, (hi << 4) | vi, 0 if cid == 1 else 1
-        )
-    sof2 = seg(0xFFC2, struct.pack(">BHHB", 8, h, w, 3) + sof_comps)
-
-    def dht(tc: int, th: int, bits: list[int], vals: list[int]) -> bytes:
-        return seg(0xFFC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals))
-
-    dhts = (
-        dht(0, 0, DC_LUMA_BITS, DC_LUMA_VALS)
-        + dht(1, 0, AC_LUMA_BITS, AC_LUMA_VALS)
-        + dht(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS)
-        + dht(1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS)
-    )
-    sos_dc = seg(
-        0xFFDA,
-        b"\x03"
-        + struct.pack(">BB", 1, 0x00)
-        + struct.pack(">BB", 2, 0x11)
-        + struct.pack(">BB", 3, 0x11)
-        + b"\x00\x00\x00",
-    )
-    out = b"\xff\xd8" + app0 + dqt + sof2 + dhts + sos_dc + scans[0]
-    for c in range(3):
-        ta = 0 if c == 0 else 1
-        out += seg(
-            0xFFDA,
-            b"\x01" + struct.pack(">BB", c + 1, ta) + b"\x01\x3f\x00",
-        ) + scans[c + 1]
-    return out + b"\xff\xd9"
+    return _encode(arr, quality, subsampling, progressive=True)
 
 
 def encode_jpeg_gray(arr: np.ndarray, quality: int = 95) -> bytes:
     """8-bit grayscale HxW array → single-component baseline JFIF JPEG.
     Web corpora carry grayscale JPEGs; the engine decodes them through
     the same dispatch (replicated to HxWx3 — the table schema is RGB)."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    if arr.ndim != 2:
-        raise ValueError(f"expected HxW uint8, got {arr.shape}")
-    h, w = arr.shape
-    if h == 0 or w == 0:
-        raise ValueError("JPEG has zero-pixel dimensions")
-    lum_qt, _ = quality_tables(quality)
-    bh, bw = -(-h // 8), -(-w // 8)
-    padded = np.pad(
-        arr.astype(np.float64), ((0, bh * 8 - h), (0, bw * 8 - w)), mode="edge"
-    )
-    blocks = _to_blocks(padded) - 128.0
-    q = np.rint((_DCT @ blocks @ _DCT.T) / lum_qt.reshape(8, 8)).astype(np.int64)
-    zz = q.reshape(-1, 64)[:, ZIGZAG]
-
-    # non-interleaved 1-component scan: MCU = one block in raster order,
-    # which _entropy_tokens reproduces with 1x1 sampling over a bw x bh
-    # MCU grid
-    tok_vals, tok_lens = _entropy_tokens(
-        [zz], [(bh, bw)], [(1, 1)], [0], bw, bh
-    )
-    scan = _pack_bits(tok_vals, tok_lens)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    app0 = seg(
-        0xFFE0, b"JFIF\x00" + struct.pack(">BBBHHBB", 1, 1, 0, 1, 1, 0, 0)
-    )
-    dqt = seg(0xFFDB, b"\x00" + bytes(lum_qt.astype(np.uint8)[ZIGZAG]))
-    sof0 = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    dhts = seg(
-        0xFFC4, b"\x00" + bytes(DC_LUMA_BITS) + bytes(DC_LUMA_VALS)
-    ) + seg(0xFFC4, b"\x10" + bytes(AC_LUMA_BITS) + bytes(AC_LUMA_VALS))
-    sos = seg(0xFFDA, b"\x01" + bytes([1, 0x00]) + b"\x00\x3f\x00")
-    return b"\xff\xd8" + app0 + dqt + sof0 + dhts + sos + scan + b"\xff\xd9"
+    return _encode(arr, quality, gray=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1098,15 +868,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                     break
             segs.append(bytes(cur))
             pos = p
-            if frame.progressive:
-                _decode_prog_scan_into(
-                    frame, luts, scan_list, segs, restart, covered,
-                    ss, se, ah, al,
-                )
-            else:
-                _decode_scan_into(
-                    frame, luts, scan_list, segs, restart, covered
-                )
+            _decode_scan_into(
+                frame, luts, scan_list, segs, restart, covered, ss, se, ah, al
+            )
         # APPn/COM/other: skipped
     if frame is None or not covered:
         raise ValueError("corrupt JPEG: no decoded scan")
@@ -1148,12 +912,30 @@ def _ensure_coef(
             c["coef"] = [[0] * 64 for _ in range(nb)]
 
 
-def _decode_scan_into(frame, luts, scan_list, segs, restart, covered):
+def _lut(luts, tc: int, th: int):
+    """The (list, int32 array) decode LUT pair for table (class, slot)."""
+    pair = luts.get((tc, th))
+    if pair is None:
+        raise ValueError("corrupt JPEG: missing Huffman table")
+    return pair
+
+
+def _decode_scan_into(
+    frame, luts, scan_list, segs, restart, covered, ss, se, ah, al
+):
     """Decode one scan's entropy data into the frame's coefficient
-    stores. Interleaved (multi-component) scans walk the full-frame MCU
-    grid; a single-component scan is non-interleaved per T.81 A.2 — one
-    data unit per MCU over the component's own ceil(x_i/8) x ceil(y_i/8)
-    block grid."""
+    stores — the one scan driver for both frame kinds. Interleaved
+    (multi-component) scans walk the full-frame MCU grid; a
+    single-component scan is non-interleaved per T.81 A.2 — one data
+    unit per MCU over the component's own ceil(x_i/8) x ceil(y_i/8)
+    block grid. The frame kind picks the Huffman tables each scan
+    component needs and the segment decoder: the native kernel when it
+    loaded, else the Python reference loop. Sequential scans ignore
+    Ss/Se/Ah/Al; progressive scans (T.81 G.2) are one of DC first
+    (Ss=0, Ah=0 — interleaved allowed), DC refinement (Ah>0 — one
+    appended bit per block, no Huffman table), AC first (Ss>0, Ah=0 —
+    spectral band with EOB-run coding, single component only) or AC
+    refinement (correction bits, libjpeg jdphuff-equivalent)."""
     h, w = frame.h, frame.w
     comps = frame.comps
     byid = {c["id"]: c for c in comps}
@@ -1161,48 +943,75 @@ def _decode_scan_into(frame, luts, scan_list, segs, restart, covered):
     vmax = max(c["vi"] for c in comps)
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
-    native = _native.jpegscan()
-    _ensure_coef(frame, mcux, mcuy, force_compact=native is not None)
-    # a python-path frame of a multi-scan file may hold list stores;
-    # the native kernel needs int32 matrices — fall back in that case
-    if native is not None and not isinstance(
-        comps[0]["coef"], np.ndarray
-    ):
-        native = None
-    interleaved = len(scan_list) > 1
+    if frame.progressive:
+        native = _native.jpegprog()
+        _ensure_coef(
+            frame, mcux, mcuy,
+            force_compact=(
+                native is not None or _native.jpegrecon() is not None
+            ),
+        )
+        if ss > se or se > 63 or al > 13 or (ah and ah != al + 1):
+            raise ValueError("corrupt JPEG: bad progressive scan header")
+        is_dc = ss == 0
+        if is_dc and se != 0:
+            raise ValueError("corrupt JPEG: bad progressive scan header")
+        if not is_dc and len(scan_list) > 1:
+            raise ValueError("corrupt JPEG: interleaved progressive AC scan")
 
-    # per-component template: block index = my*rowstep + mx*colstep + off
+        def tables(cid, td, ta):
+            if not is_dc:
+                return (_lut(luts, 1, ta),)
+            covered.add(cid)
+            # DC refinement needs no Huffman table
+            return (None,) if ah else (_lut(luts, 0, td),)
+
+        decode_py = _decode_prog_segment_py
+        scan_args = (ss, se, ah, al, int(is_dc))
+    else:
+        native = _native.jpegscan()
+        _ensure_coef(frame, mcux, mcuy, force_compact=native is not None)
+
+        def tables(cid, td, ta):
+            if cid in covered:
+                raise ValueError("corrupt JPEG: component scanned twice")
+            covered.add(cid)
+            return _lut(luts, 0, td), _lut(luts, 1, ta)
+
+        decode_py = _decode_segment_py
+        scan_args = ()
+    # a python-path frame of a multi-scan file may hold list stores;
+    # the native kernels need int32 matrices — fall back in that case
+    if native is not None and not isinstance(comps[0]["coef"], np.ndarray):
+        native = None
+
+    # per-component template: (LUT pairs, coef store, rowstep, colstep,
+    # offs, coef ptr); block index = my*rowstep + mx*colstep + off
+    interleaved = len(scan_list) > 1
     tmpl = []
     scan_mcux, scan_total = mcux, mcux * mcuy
     for cid, td, ta in scan_list:
         c = byid.get(cid)
         if c is None:
             raise ValueError("corrupt JPEG: scan component not in frame")
-        if cid in covered:
-            raise ValueError("corrupt JPEG: component scanned twice")
-        covered.add(cid)
-        dc = luts.get((0, td))
-        ac = luts.get((1, ta))
-        if dc is None or ac is None:
-            raise ValueError("corrupt JPEG: missing Huffman table")
+        pairs = tables(cid, td, ta)
         bw = c["bw"]
         if interleaved:
             hi_, vi_ = c["hi"], c["vi"]
             offs = [by * bw + bx for by in range(vi_) for bx in range(hi_)]
-            tmpl.append((dc[0], ac[0], c["coef"], vi_ * bw, hi_, offs,
-                         dc[1], ac[1], c.get("coef_ptr")))
+            tmpl.append((pairs, c["coef"], vi_ * bw, hi_, offs,
+                         c.get("coef_ptr")))
         else:
             xi = -(-w * c["hi"] // hmax)  # T.81 A.1.1 component dims
             yi = -(-h * c["vi"] // vmax)
             scan_mcux = -(-xi // 8)
             scan_total = scan_mcux * (-(-yi // 8))
-            tmpl.append((dc[0], ac[0], c["coef"], bw, 1, [0],
-                         dc[1], ac[1], c.get("coef_ptr")))
+            tmpl.append((pairs, c["coef"], bw, 1, [0], c.get("coef_ptr")))
 
-    blocks_per_mcu = sum(len(t[5]) for t in tmpl)
+    blocks_per_mcu = sum(len(t[4]) for t in tmpl)
     per_seg = restart if restart else scan_total
     if native is not None:
-        call = _native_call_args(native, tmpl)
+        call = _native_call_args(native, tmpl, scan_args)
     mcu = 0
     for seg_bytes in segs:
         if mcu >= scan_total:
@@ -1223,10 +1032,194 @@ def _decode_scan_into(frame, luts, scan_list, segs, restart, covered):
                     rc, f"corrupt JPEG: native decode error {rc}"
                 ))
         else:
-            _decode_segment_py(seg_bytes, mcu, seg_end, scan_mcux, tmpl)
+            decode_py(seg_bytes, mcu, seg_end, scan_mcux, tmpl, *scan_args)
         mcu = seg_end
     if mcu < scan_total:
         raise ValueError("corrupt JPEG: missing MCUs")
+
+
+_NATIVE_ERRORS = {
+    -1: "corrupt JPEG: bad Huffman code",
+    -2: "corrupt JPEG: scan underrun",
+    -3: "corrupt JPEG: AC overrun",
+    -4: "corrupt JPEG: DC predictor overflow",
+    -5: "corrupt JPEG: bad scan component count",
+    -6: "corrupt JPEG: bad refinement coefficient",
+}
+
+# contiguous uint8 zigzag table both segment kernels index
+_ZIGZAG_U8 = np.ascontiguousarray(ZIGZAG.astype(np.uint8))
+
+# scan-structure marshalling cache: every field of the kernel call
+# except the coefficient-store pointers depends only on the Huffman
+# tables and the scan geometry — which repeat across a whole corpus
+# (Annex-K tables, a handful of sampling layouts and progression
+# scripts) — so the numpy/ctypes marshalling (~40 µs) is paid once per
+# distinct structure per process, not once per image. Each entry keeps
+# the arrays it points into alive, LUTs included, so the LUT ids in its
+# key cannot be reused while it exists.
+_SCAN_STRUCT_CACHE: dict[tuple, tuple] = {}
+
+
+def _native_call_args(native, tmpl, scan_args):
+    """Marshal one scan's template into a closure over a segment
+    kernel — per-segment calls then only pass (bytes, mcu range).
+    jpegscan takes a DC and an AC LUT array per slot; jpegprog takes one
+    LUT array (NULL for DC refinement) and ``scan_args`` (Ss, Se, Ah,
+    Al, is_dc) after the zigzag table."""
+    import ctypes
+
+    n = len(tmpl)
+    key = tuple(
+        (tuple(id(p[1]) if p is not None else None for p in t[0]),
+         t[2], t[3], tuple(t[4]))
+        for t in tmpl
+    )
+    hit = _SCAN_STRUCT_CACHE.get(key)
+    if hit is None:
+        lut_ptrs = [
+            (ctypes.c_void_p * n)(
+                *[(t[0][j][1].ctypes.data if t[0][j] is not None else None)
+                  for t in tmpl]
+            )
+            for j in range(len(tmpl[0][0]))
+        ]
+        rowstep = np.array([t[2] for t in tmpl], dtype=np.int64)
+        colstep = np.array([t[3] for t in tmpl], dtype=np.int64)
+        offs_flat = np.array(
+            [o for t in tmpl for o in t[4]], dtype=np.int64
+        )
+        noffs = np.array([len(t[4]) for t in tmpl], dtype=np.int64)
+        offbase = np.concatenate([[0], np.cumsum(noffs)[:-1]]).astype(
+            np.int64
+        )
+        hit = (
+            lut_ptrs,
+            (rowstep.ctypes.data, colstep.ctypes.data,
+             offs_flat.ctypes.data, offbase.ctypes.data,
+             noffs.ctypes.data, _ZIGZAG_U8.ctypes.data),
+            (rowstep, colstep, offs_flat, noffs, offbase,
+             [p for t in tmpl for p in t[0]]),
+        )
+        _SCAN_STRUCT_CACHE[key] = hit
+    lut_ptrs, geometry, _keep = hit
+    coef_ptrs = (ctypes.c_void_p * n)(*[t[5] for t in tmpl])
+    args = (n, *lut_ptrs, coef_ptrs, *geometry, *scan_args)
+
+    def call(seg_bytes: bytes, mcu: int, seg_end: int, scan_mcux: int):
+        return native(
+            seg_bytes, len(seg_bytes), mcu, seg_end, scan_mcux, *args
+        )
+
+    return call
+
+
+def _decode_segment_py(seg_bytes, mcu, seg_end, scan_mcux, tmpl):
+    """Reference Python symbol loop over one sequential-scan entropy
+    segment — the always-available fallback the jpegscan kernel is
+    property-tested against (bit-exact coefficient parity)."""
+    zz = ZIGZAG.tolist()
+    chunk = _WINDOW_CHUNK_BYTES
+    slots = [
+        (dc[0], ac[0], coef, rowstep, colstep, offs)
+        for (dc, ac), coef, rowstep, colstep, offs, _ in tmpl
+    ]
+    nbits = 8 * len(seg_bytes)
+    # window slab state: wv covers bits [lo, hi_b); refilled on demand
+    lo = hi_b = 0
+    wv: list[int] = []
+    p = 0
+    preds = [0] * len(slots)
+    while mcu < seg_end:
+        my, mx = divmod(mcu, scan_mcux)
+        ti = 0
+        for dc_lut, ac_lut, coef, rowstep, colstep, offs in slots:
+            base = my * rowstep + mx * colstep
+            for off in offs:
+                blk = coef[base + off]
+                # ---- DC ----
+                if p >= hi_b:
+                    if p >= nbits:
+                        raise ValueError("corrupt JPEG: scan underrun")
+                    b0 = p >> 3
+                    b1 = min(b0 + chunk, len(seg_bytes))
+                    lo, hi_b = 8 * b0, 8 * b1
+                    wv = _window16(seg_bytes, b0, b1)
+                e = dc_lut[wv[p - lo]]
+                if e == 0:
+                    raise ValueError("corrupt JPEG: bad Huffman code")
+                op = e >> 22
+                p += e & 31
+                if op == 1:
+                    d = ((e >> 9) & 8191) - 2048
+                else:  # fallback: magnitude bits beyond the window
+                    s = (e >> 5) & 15
+                    if p >= hi_b:
+                        if p >= nbits:
+                            raise ValueError("corrupt JPEG: scan underrun")
+                        b0 = p >> 3
+                        b1 = min(b0 + chunk, len(seg_bytes))
+                        lo, hi_b = 8 * b0, 8 * b1
+                        wv = _window16(seg_bytes, b0, b1)
+                    mag = wv[p - lo] >> (16 - s)
+                    p += s
+                    d = mag if mag >> (s - 1) else mag - (1 << s) + 1
+                pred = preds[ti] + d
+                # valid 8-bit baseline DC stays within ±2048; a runaway
+                # predictor only happens on corrupt streams and would
+                # overflow the compact int32 store (OverflowError ≠ the
+                # ValueError contract)
+                if not (-32768 <= pred <= 32767):
+                    raise ValueError("corrupt JPEG: DC predictor overflow")
+                preds[ti] = pred
+                blk[0] = pred
+                # ---- AC ----
+                k = 1
+                while k < 64:
+                    if p >= hi_b:
+                        if p >= nbits:
+                            raise ValueError("corrupt JPEG: scan underrun")
+                        b0 = p >> 3
+                        b1 = min(b0 + chunk, len(seg_bytes))
+                        lo, hi_b = 8 * b0, 8 * b1
+                        wv = _window16(seg_bytes, b0, b1)
+                    e = ac_lut[wv[p - lo]]
+                    if e == 0:
+                        raise ValueError("corrupt JPEG: bad Huffman code")
+                    op = e >> 22
+                    p += e & 31
+                    if op == 1:  # combined code+value
+                        k += (e >> 5) & 15
+                        if k > 63:
+                            raise ValueError("corrupt JPEG: AC overrun")
+                        blk[zz[k]] = ((e >> 9) & 8191) - 2048
+                        k += 1
+                    elif op == 3:  # EOB
+                        break
+                    elif op == 4:  # ZRL
+                        k += 16
+                    else:  # fallback
+                        s = (e >> 5) & 15
+                        k += (e >> 9) & 15
+                        if k > 63:
+                            raise ValueError("corrupt JPEG: AC overrun")
+                        if p >= hi_b:
+                            if p >= nbits:
+                                raise ValueError(
+                                    "corrupt JPEG: scan underrun"
+                                )
+                            b0 = p >> 3
+                            b1 = min(b0 + chunk, len(seg_bytes))
+                            lo, hi_b = 8 * b0, 8 * b1
+                            wv = _window16(seg_bytes, b0, b1)
+                        mag = wv[p - lo] >> (16 - s)
+                        p += s
+                        blk[zz[k]] = (
+                            mag if mag >> (s - 1) else mag - (1 << s) + 1
+                        )
+                        k += 1
+            ti += 1
+        mcu += 1
 
 
 class _SegReader:
@@ -1279,140 +1272,83 @@ class _SegReader:
         return v
 
 
-def _decode_prog_scan_into(
-    frame, luts, scan_list, segs, restart, covered, ss, se, ah, al
+def _decode_prog_segment_py(
+    seg_bytes, mcu, seg_end, scan_mcux, tmpl, ss, se, ah, al, is_dc
 ):
-    """Decode one PROGRESSIVE scan (T.81 G.2) into the shared
-    coefficient stores. Four scan kinds: DC first (Ss=0, Ah=0 —
-    Huffman-coded high-order DC bits, interleaved allowed), DC
-    refinement (Ah>0 — one appended bit per block), AC first (Ss>0,
-    Ah=0 — spectral band with EOB-run coding, single component only),
-    AC refinement (correction bits, libjpeg jdphuff-equivalent
-    algorithm). Always the Python path: progressive inputs are decoded
-    for validation parity, not bulk throughput (the native kernels
-    cover the baseline hot path); reconstruction still goes native."""
-    h, w = frame.h, frame.w
-    comps = frame.comps
-    byid = {c["id"]: c for c in comps}
-    hmax = max(c["hi"] for c in comps)
-    vmax = max(c["vi"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    _ensure_coef(
-        frame, mcux, mcuy,
-        force_compact=(
-            _native.jpegprog() is not None
-            or _native.jpegrecon() is not None
-        ),
-    )
-    if ss > se or se > 63 or al > 13 or (ah and ah != al + 1):
-        raise ValueError("corrupt JPEG: bad progressive scan header")
-    is_dc = ss == 0
-    if is_dc and se != 0:
-        raise ValueError("corrupt JPEG: bad progressive scan header")
-    if not is_dc and len(scan_list) > 1:
-        raise ValueError("corrupt JPEG: interleaved progressive AC scan")
-
-    interleaved = len(scan_list) > 1
-    tmpl = []  # (lut_list, lut_arr, coef, rowstep, colstep, offs, ptr)
-    scan_mcux, scan_total = mcux, mcux * mcuy
-    for cid, td, ta in scan_list:
-        c = byid.get(cid)
-        if c is None:
-            raise ValueError("corrupt JPEG: scan component not in frame")
-        lut = lut_arr = None
-        if is_dc:
-            covered.add(cid)
-            if ah == 0:  # DC refinement needs no Huffman table
-                pair = luts.get((0, td))
-                if pair is None:
-                    raise ValueError("corrupt JPEG: missing Huffman table")
-                lut, lut_arr = pair
-        else:
-            pair = luts.get((1, ta))
-            if pair is None:
-                raise ValueError("corrupt JPEG: missing Huffman table")
-            lut, lut_arr = pair
-        bw = c["bw"]
-        if interleaved:
-            hi_, vi_ = c["hi"], c["vi"]
-            offs = [by * bw + bx for by in range(vi_) for bx in range(hi_)]
-            tmpl.append((lut, lut_arr, c["coef"], vi_ * bw, hi_, offs,
-                         c.get("coef_ptr")))
-        else:
-            xi = -(-w * c["hi"] // hmax)  # T.81 A.1.1 component dims
-            yi = -(-h * c["vi"] // vmax)
-            scan_mcux = -(-xi // 8)
-            scan_total = scan_mcux * (-(-yi // 8))
-            tmpl.append((lut, lut_arr, c["coef"], bw, 1, [0],
-                         c.get("coef_ptr")))
-
-    native = _native.jpegprog()
-    if native is not None and not isinstance(comps[0]["coef"], np.ndarray):
-        native = None
-    if native is not None:
-        call = _prog_native_call_args(native, tmpl, ss, se, ah, al, is_dc)
-
+    """Reference Python symbol loop over one progressive-scan entropy
+    segment (the four scan kinds of ``_decode_scan_into``) — the
+    fallback the jpegprog kernel is property-tested against. DC
+    predictors and the EOB run reset per segment."""
     zz = ZIGZAG.tolist()
-    blocks_per_mcu = sum(len(t[5]) for t in tmpl)
-    per_seg = restart if restart else scan_total
     p1, m1 = 1 << al, -1 << al
-    mcu = 0
-    for seg_bytes in segs:
-        if mcu >= scan_total:
-            break
-        seg_end = min(mcu + per_seg, scan_total)
-        if len(seg_bytes) > (seg_end - mcu) * blocks_per_mcu * \
-                _MAX_BYTES_PER_BLOCK + 64:
-            raise ValueError(
-                "corrupt JPEG: entropy segment exceeds worst-case budget"
-            )
-        if native is not None:
-            rc = call(seg_bytes, mcu, seg_end, scan_mcux)
-            if rc < 0:
-                raise ValueError(_NATIVE_ERRORS.get(
-                    rc, f"corrupt JPEG: native decode error {rc}"
-                ))
-            mcu = seg_end
-            continue
-        rd = _SegReader(seg_bytes)
-        preds = [0] * len(tmpl)  # DC predictors reset at restart
-        eobrun = 0  # EOB run resets at restart
-        while mcu < seg_end:
-            my, mx = divmod(mcu, scan_mcux)
-            for ti, (lut, _la, coef, rowstep, colstep, offs, _cp) \
-                    in enumerate(tmpl):
-                base = my * rowstep + mx * colstep
-                for off in offs:
-                    blk = coef[base + off]
-                    if is_dc:
-                        if ah == 0:  # DC first scan
-                            e = lut[rd.peek16()]
-                            if e == 0:
-                                raise ValueError(
-                                    "corrupt JPEG: bad Huffman code"
-                                )
-                            rd.skip(e & 31)
-                            if e >> 22 == 1:
-                                d = ((e >> 9) & 8191) - 2048
-                            else:
-                                s = (e >> 5) & 15
-                                d = _extend(rd.receive(s), s)
-                            pred = preds[ti] + d
-                            if not (-32768 <= pred <= 32767):
-                                raise ValueError(
-                                    "corrupt JPEG: DC predictor overflow"
-                                )
-                            preds[ti] = pred
-                            blk[0] = pred << al
-                        else:  # DC refinement: append one bit
-                            if rd.receive(1):
-                                blk[0] = int(blk[0]) | p1
-                    elif ah == 0:  # AC first scan (spectral band)
-                        if eobrun:
-                            eobrun -= 1
-                            continue
-                        k = ss
+    slots = [
+        (pairs[0][0] if pairs[0] is not None else None, coef, rowstep,
+         colstep, offs)
+        for pairs, coef, rowstep, colstep, offs, _ in tmpl
+    ]
+    rd = _SegReader(seg_bytes)
+    preds = [0] * len(slots)
+    eobrun = 0
+    while mcu < seg_end:
+        my, mx = divmod(mcu, scan_mcux)
+        for ti, (lut, coef, rowstep, colstep, offs) in enumerate(slots):
+            base = my * rowstep + mx * colstep
+            for off in offs:
+                blk = coef[base + off]
+                if is_dc:
+                    if ah == 0:  # DC first scan
+                        e = lut[rd.peek16()]
+                        if e == 0:
+                            raise ValueError("corrupt JPEG: bad Huffman code")
+                        rd.skip(e & 31)
+                        if e >> 22 == 1:
+                            d = ((e >> 9) & 8191) - 2048
+                        else:
+                            s = (e >> 5) & 15
+                            d = _extend(rd.receive(s), s)
+                        pred = preds[ti] + d
+                        if not (-32768 <= pred <= 32767):
+                            raise ValueError(
+                                "corrupt JPEG: DC predictor overflow"
+                            )
+                        preds[ti] = pred
+                        blk[0] = pred << al
+                    else:  # DC refinement: append one bit
+                        if rd.receive(1):
+                            blk[0] = int(blk[0]) | p1
+                elif ah == 0:  # AC first scan (spectral band)
+                    if eobrun:
+                        eobrun -= 1
+                        continue
+                    k = ss
+                    while k <= se:
+                        e = lut[rd.peek16()]
+                        if e == 0:
+                            raise ValueError("corrupt JPEG: bad Huffman code")
+                        op = e >> 22
+                        rd.skip(e & 31)
+                        if op == 1:  # combined run/value
+                            k += (e >> 5) & 15
+                            if k > se:
+                                raise ValueError("corrupt JPEG: AC overrun")
+                            blk[zz[k]] = (((e >> 9) & 8191) - 2048) << al
+                            k += 1
+                        elif op == 3:  # EOB / EOBn
+                            r = (e >> 5) & 15
+                            eobrun = (1 << r) - 1 + rd.receive(r)
+                            break
+                        elif op == 4:  # ZRL
+                            k += 16
+                        else:  # fallback: magnitude past window
+                            s = (e >> 5) & 15
+                            k += (e >> 9) & 15
+                            if k > se:
+                                raise ValueError("corrupt JPEG: AC overrun")
+                            blk[zz[k]] = _extend(rd.receive(s), s) << al
+                            k += 1
+                else:  # AC refinement (T.81 G.2.2 / jdphuff)
+                    k = ss
+                    if eobrun == 0:
                         while k <= se:
                             e = lut[rd.peek16()]
                             if e == 0:
@@ -1421,356 +1357,61 @@ def _decode_prog_scan_into(
                                 )
                             op = e >> 22
                             rd.skip(e & 31)
-                            if op == 1:  # combined run/value
-                                k += (e >> 5) & 15
-                                if k > se:
-                                    raise ValueError(
-                                        "corrupt JPEG: AC overrun"
-                                    )
-                                blk[zz[k]] = (
-                                    (((e >> 9) & 8191) - 2048) << al
-                                )
-                                k += 1
-                            elif op == 3:  # EOB / EOBn
+                            if op == 3:  # EOB / EOBn run begins
                                 r = (e >> 5) & 15
-                                eobrun = (1 << r) - 1 + rd.receive(r)
+                                eobrun = (1 << r) + rd.receive(r)
                                 break
-                            elif op == 4:  # ZRL
-                                k += 16
-                            else:  # fallback: magnitude past window
+                            if op == 4:  # ZRL: 16 zero-history slots
+                                run, newval = 15, 0
+                            elif op == 1:
+                                run = (e >> 5) & 15
+                                v = ((e >> 9) & 8191) - 2048
+                                if v not in (1, -1):
+                                    raise ValueError(
+                                        "corrupt JPEG: bad refinement "
+                                        "coefficient"
+                                    )
+                                newval = p1 if v > 0 else m1
+                            else:  # fallback form of (run, s=1)
                                 s = (e >> 5) & 15
-                                k += (e >> 9) & 15
-                                if k > se:
+                                run = (e >> 9) & 15
+                                if s != 1:
                                     raise ValueError(
-                                        "corrupt JPEG: AC overrun"
+                                        "corrupt JPEG: bad refinement "
+                                        "coefficient"
                                     )
-                                blk[zz[k]] = _extend(rd.receive(s), s) << al
-                                k += 1
-                    else:  # AC refinement (T.81 G.2.2 / jdphuff)
-                        k = ss
-                        if eobrun == 0:
-                            while k <= se:
-                                e = lut[rd.peek16()]
-                                if e == 0:
-                                    raise ValueError(
-                                        "corrupt JPEG: bad Huffman code"
-                                    )
-                                op = e >> 22
-                                rd.skip(e & 31)
-                                if op == 3:  # EOB / EOBn run begins
-                                    r = (e >> 5) & 15
-                                    eobrun = (1 << r) + rd.receive(r)
-                                    break
-                                if op == 4:  # ZRL: 16 zero-history slots
-                                    run, newval = 15, 0
-                                elif op == 1:
-                                    run = (e >> 5) & 15
-                                    v = ((e >> 9) & 8191) - 2048
-                                    if v not in (1, -1):
-                                        raise ValueError(
-                                            "corrupt JPEG: bad refinement "
-                                            "coefficient"
-                                        )
-                                    newval = p1 if v > 0 else m1
-                                else:  # fallback form of (run, s=1)
-                                    s = (e >> 5) & 15
-                                    run = (e >> 9) & 15
-                                    if s != 1:
-                                        raise ValueError(
-                                            "corrupt JPEG: bad refinement "
-                                            "coefficient"
-                                        )
-                                    newval = p1 if rd.receive(1) else m1
-                                # advance over `run` zero-history slots,
-                                # appending correction bits to nonzero ones
-                                while k <= se:
-                                    z = zz[k]
-                                    cur = int(blk[z])
-                                    if cur:
-                                        if rd.receive(1) and not (cur & p1):
-                                            blk[z] = cur + (
-                                                p1 if cur > 0 else m1
-                                            )
-                                    else:
-                                        if run == 0:
-                                            break
-                                        run -= 1
-                                    k += 1
-                                if op != 4:
-                                    if k > se:
-                                        raise ValueError(
-                                            "corrupt JPEG: AC overrun"
-                                        )
-                                    blk[zz[k]] = newval
-                                k += 1
-                        if eobrun:
-                            # EOB region: correction bits only
+                                newval = p1 if rd.receive(1) else m1
+                            # advance over `run` zero-history slots,
+                            # appending correction bits to nonzero ones
                             while k <= se:
                                 z = zz[k]
                                 cur = int(blk[z])
                                 if cur:
                                     if rd.receive(1) and not (cur & p1):
-                                        blk[z] = cur + (
-                                            p1 if cur > 0 else m1
-                                        )
+                                        blk[z] = cur + (p1 if cur > 0 else m1)
+                                else:
+                                    if run == 0:
+                                        break
+                                    run -= 1
                                 k += 1
-                            eobrun -= 1
-            mcu += 1
-    if mcu < scan_total:
-        raise ValueError("corrupt JPEG: missing MCUs")
-
-
-_NATIVE_ERRORS = {
-    -1: "corrupt JPEG: bad Huffman code",
-    -2: "corrupt JPEG: scan underrun",
-    -3: "corrupt JPEG: AC overrun",
-    -4: "corrupt JPEG: DC predictor overflow",
-    -5: "corrupt JPEG: bad scan component count",
-    -6: "corrupt JPEG: bad refinement coefficient",
-}
-
-
-# progressive scan-structure cache: a corpus reuses one progression
-# script (same Huffman tables, geometry, and Ss/Se/Ah/Al per scan), so
-# the numpy/ctypes marshalling is paid once per distinct scan shape per
-# process — only the per-image coefficient-store pointers rebuild.
-_PROG_STRUCT_CACHE: dict[tuple, tuple] = {}
-
-
-def _prog_native_call_args(native, tmpl, ss, se, ah, al, is_dc):
-    """Marshal one progressive scan's template into a closure over the
-    native kernel (the progressive sibling of ``_native_call_args``)."""
-    import ctypes
-
-    global _ZIGZAG_U8
-    if _ZIGZAG_U8 is None:
-        _ZIGZAG_U8 = np.ascontiguousarray(ZIGZAG.astype(np.uint8))
-    n = len(tmpl)
-    key = (
-        tuple((id(t[1]), t[3], t[4], tuple(t[5])) for t in tmpl),
-        ss, se, ah, al, is_dc,
-    )
-    hit = _PROG_STRUCT_CACHE.get(key)
-    if hit is None:
-        lut_ptrs = (ctypes.c_void_p * n)(
-            *[(t[1].ctypes.data if t[1] is not None else None)
-              for t in tmpl]
-        )
-        rowstep = np.array([t[3] for t in tmpl], dtype=np.int64)
-        colstep = np.array([t[4] for t in tmpl], dtype=np.int64)
-        offs_flat = np.array(
-            [o for t in tmpl for o in t[5]], dtype=np.int64
-        )
-        noffs = np.array([len(t[5]) for t in tmpl], dtype=np.int64)
-        offbase = np.concatenate([[0], np.cumsum(noffs)[:-1]]).astype(
-            np.int64
-        )
-        hit = (
-            lut_ptrs,
-            rowstep.ctypes.data, colstep.ctypes.data,
-            offs_flat.ctypes.data, offbase.ctypes.data,
-            noffs.ctypes.data, _ZIGZAG_U8.ctypes.data,
-            # keep every referenced array alive with the cache entry
-            (rowstep, colstep, offs_flat, noffs, offbase, _ZIGZAG_U8,
-             [t[1] for t in tmpl]),
-        )
-        _PROG_STRUCT_CACHE[key] = hit
-    (lut_ptrs, p_rowstep, p_colstep, p_offs, p_offbase, p_noffs,
-     p_zz, _keep) = hit
-    coef_ptrs = (ctypes.c_void_p * n)(*[t[6] for t in tmpl])
-    dc_flag = 1 if is_dc else 0
-
-    def call(seg_bytes: bytes, mcu: int, seg_end: int, scan_mcux: int):
-        return native(
-            seg_bytes, len(seg_bytes), mcu, seg_end, scan_mcux, n,
-            lut_ptrs, coef_ptrs,
-            p_rowstep, p_colstep, p_offs, p_offbase, p_noffs, p_zz,
-            ss, se, ah, al, dc_flag,
-        )
-
-    return call
-
-_ZIGZAG_U8 = None  # built lazily: contiguous uint8 view for the kernel
-
-# scan-structure marshalling cache: every field of the kernel call
-# except the coefficient-store pointers depends only on the Huffman
-# tables and the scan geometry — which repeat across a whole corpus
-# (Annex-K tables, a handful of sampling layouts) — so the numpy/ctypes
-# marshalling (~40 µs) is paid once per distinct structure per process,
-# not once per image. Values referenced by the cache stay alive with it.
-_SCAN_STRUCT_CACHE: dict[tuple, tuple] = {}
-
-
-def _native_call_args(native, tmpl):
-    """Marshal one scan's template into a closure over the native
-    kernel — per-segment calls then only pass (bytes, mcu range)."""
-    import ctypes
-
-    global _ZIGZAG_U8
-    if _ZIGZAG_U8 is None:
-        _ZIGZAG_U8 = np.ascontiguousarray(ZIGZAG.astype(np.uint8))
-    n = len(tmpl)
-    key = tuple(
-        (id(t[6]), id(t[7]), t[3], t[4], tuple(t[5])) for t in tmpl
-    )
-    hit = _SCAN_STRUCT_CACHE.get(key)
-    if hit is None:
-        dc_ptrs = (ctypes.c_void_p * n)(
-            *[t[6].ctypes.data for t in tmpl]
-        )
-        ac_ptrs = (ctypes.c_void_p * n)(
-            *[t[7].ctypes.data for t in tmpl]
-        )
-        rowstep = np.array([t[3] for t in tmpl], dtype=np.int64)
-        colstep = np.array([t[4] for t in tmpl], dtype=np.int64)
-        offs_flat = np.array(
-            [o for t in tmpl for o in t[5]], dtype=np.int64
-        )
-        noffs = np.array([len(t[5]) for t in tmpl], dtype=np.int64)
-        offbase = np.concatenate([[0], np.cumsum(noffs)[:-1]]).astype(
-            np.int64
-        )
-        # lut arrays are cached forever in _LUT_CACHE, so holding their
-        # ids in the key and the arrays in the value is stable
-        hit = (
-            dc_ptrs, ac_ptrs,
-            rowstep.ctypes.data, colstep.ctypes.data,
-            offs_flat.ctypes.data, offbase.ctypes.data,
-            noffs.ctypes.data, _ZIGZAG_U8.ctypes.data,
-            (tmpl[0][6], tmpl[0][7], rowstep, colstep, offs_flat,
-             noffs, offbase, _ZIGZAG_U8),
-        )
-        _SCAN_STRUCT_CACHE[key] = hit
-    (dc_ptrs, ac_ptrs, p_rowstep, p_colstep, p_offs, p_offbase,
-     p_noffs, p_zz, _keep) = hit
-    coef_ptrs = (ctypes.c_void_p * n)(
-        *[t[8] for t in tmpl]
-    )
-
-    def call(seg_bytes: bytes, mcu: int, seg_end: int, scan_mcux: int):
-        return native(
-            seg_bytes, len(seg_bytes), mcu, seg_end, scan_mcux, n,
-            dc_ptrs, ac_ptrs, coef_ptrs,
-            p_rowstep, p_colstep, p_offs, p_offbase, p_noffs, p_zz,
-        )
-
-    return call
-
-
-def _decode_segment_py(seg_bytes, mcu, seg_end, scan_mcux, tmpl):
-    """Reference Python symbol loop over one entropy segment — the
-    always-available fallback the native kernel is property-tested
-    against (bit-exact coefficient parity)."""
-    zz = ZIGZAG.tolist()
-    npreds = len(tmpl)
-    chunk = _WINDOW_CHUNK_BYTES
-    if True:  # (kept indentation: body shared verbatim with history)
-        nbits = 8 * len(seg_bytes)
-        # window slab state: wv covers bits [lo, hi_b); refilled on demand
-        lo = hi_b = 0
-        wv: list[int] = []
-        p = 0
-        preds = [0] * npreds
-        while mcu < seg_end:
-            my, mx = divmod(mcu, scan_mcux)
-            ti = 0
-            for dc_lut, ac_lut, coef, rowstep, colstep, offs, *_ \
-                    in tmpl:
-                base = my * rowstep + mx * colstep
-                for off in offs:
-                    blk = coef[base + off]
-                    # ---- DC ----
-                    if p >= hi_b:
-                        if p >= nbits:
-                            raise ValueError("corrupt JPEG: scan underrun")
-                        b0 = p >> 3
-                        b1 = min(b0 + chunk, len(seg_bytes))
-                        lo, hi_b = 8 * b0, 8 * b1
-                        wv = _window16(seg_bytes, b0, b1)
-                    e = dc_lut[wv[p - lo]]
-                    if e == 0:
-                        raise ValueError("corrupt JPEG: bad Huffman code")
-                    op = e >> 22
-                    p += e & 31
-                    if op == 1:
-                        d = ((e >> 9) & 8191) - 2048
-                    else:  # fallback: magnitude bits beyond the window
-                        s = (e >> 5) & 15
-                        if p >= hi_b:
-                            if p >= nbits:
-                                raise ValueError(
-                                    "corrupt JPEG: scan underrun"
-                                )
-                            b0 = p >> 3
-                            b1 = min(b0 + chunk, len(seg_bytes))
-                            lo, hi_b = 8 * b0, 8 * b1
-                            wv = _window16(seg_bytes, b0, b1)
-                        mag = wv[p - lo] >> (16 - s)
-                        p += s
-                        d = mag if mag >> (s - 1) else mag - (1 << s) + 1
-                    pred = preds[ti] + d
-                    # valid 8-bit baseline DC stays within ±2048; a
-                    # runaway predictor only happens on corrupt streams
-                    # and would overflow the compact int32 store
-                    # (OverflowError ≠ the ValueError contract)
-                    if not (-32768 <= pred <= 32767):
-                        raise ValueError(
-                            "corrupt JPEG: DC predictor overflow"
-                        )
-                    preds[ti] = pred
-                    blk[0] = pred
-                    # ---- AC ----
-                    k = 1
-                    while k < 64:
-                        if p >= hi_b:
-                            if p >= nbits:
-                                raise ValueError(
-                                    "corrupt JPEG: scan underrun"
-                                )
-                            b0 = p >> 3
-                            b1 = min(b0 + chunk, len(seg_bytes))
-                            lo, hi_b = 8 * b0, 8 * b1
-                            wv = _window16(seg_bytes, b0, b1)
-                        e = ac_lut[wv[p - lo]]
-                        if e == 0:
-                            raise ValueError(
-                                "corrupt JPEG: bad Huffman code"
-                            )
-                        op = e >> 22
-                        p += e & 31
-                        if op == 1:  # combined code+value
-                            k += (e >> 5) & 15
-                            if k > 63:
-                                raise ValueError("corrupt JPEG: AC overrun")
-                            blk[zz[k]] = ((e >> 9) & 8191) - 2048
-                            k += 1
-                        elif op == 3:  # EOB
-                            break
-                        elif op == 4:  # ZRL
-                            k += 16
-                        else:  # fallback
-                            s = (e >> 5) & 15
-                            k += (e >> 9) & 15
-                            if k > 63:
-                                raise ValueError("corrupt JPEG: AC overrun")
-                            if p >= hi_b:
-                                if p >= nbits:
+                            if op != 4:
+                                if k > se:
                                     raise ValueError(
-                                        "corrupt JPEG: scan underrun"
+                                        "corrupt JPEG: AC overrun"
                                     )
-                                b0 = p >> 3
-                                b1 = min(b0 + chunk, len(seg_bytes))
-                                lo, hi_b = 8 * b0, 8 * b1
-                                wv = _window16(seg_bytes, b0, b1)
-                            mag = wv[p - lo] >> (16 - s)
-                            p += s
-                            blk[zz[k]] = (
-                                mag if mag >> (s - 1)
-                                else mag - (1 << s) + 1
-                            )
+                                blk[zz[k]] = newval
                             k += 1
-                ti += 1
-            mcu += 1
+                    if eobrun:
+                        # EOB region: correction bits only
+                        while k <= se:
+                            z = zz[k]
+                            cur = int(blk[z])
+                            if cur:
+                                if rd.receive(1) and not (cur & p1):
+                                    blk[z] = cur + (p1 if cur > 0 else m1)
+                            k += 1
+                        eobrun -= 1
+        mcu += 1
 
 
 def _reconstruct(frame, qts):

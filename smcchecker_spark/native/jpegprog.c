@@ -3,11 +3,13 @@
  * Self-contained C99 (stdlib-free) compiled on demand by
  * smcchecker_spark.native and loaded via ctypes — the progressive
  * sibling of jpegscan.c. Line-for-line translation of the Python scan
- * loop in jpegcodec._decode_prog_scan_into: same packed-LUT format,
+ * loop in jpegcodec._decode_prog_segment_py: same packed-LUT format,
  * same EOB-run/refinement semantics (libjpeg jdphuff-equivalent), same
- * ~64-bit zero-pad allowance past the segment end, so both paths are
- * property-testable against each other and fill identical coefficient
- * stores. The Python loop remains the reference and the fallback.
+ * underrun rule as its _SegReader (a 16-bit peek or a k-bit receive
+ * that reaches more than 64 zero bits past the segment end is an
+ * underrun), so both paths are property-testable against each other,
+ * fill identical coefficient stores and reject the same truncations.
+ * The Python loop remains the reference and the fallback.
  *
  * Scan kinds (one call decodes one restart segment of one scan):
  *   is_dc=1, ah=0 : DC first scan  (Huffman diff, interleaved allowed)
@@ -54,6 +56,8 @@ long decode_prog_segment(
 {
     i64 nbits = nbytes * 8;
     i64 limit = nbits + 64;    /* the Python reader's pad allowance */
+/* reading k more bits at p would need a 9th zero byte past the end */
+#define NEED(k) if (p + (k) > limit) return -2
     i64 p = 0;
     long preds[16];
     long s_;
@@ -77,7 +81,7 @@ long decode_prog_segment(
                 int *blk = coefs[ti] + (base + off[bi]) * 64;
                 if (is_dc) {
                     if (ah == 0) {           /* DC first */
-                        if (p >= limit) return -2;
+                        NEED(16);
                         int e = lut[window16(seg, nbytes, p)];
                         if (!e) return -1;
                         int op = e >> 22;
@@ -87,7 +91,7 @@ long decode_prog_segment(
                             d = ((e >> 9) & 8191) - 2048;
                         } else {
                             int s = (e >> 5) & 15;
-                            if (p >= limit) return -2;
+                            NEED(s);
                             u32 mag = window16(seg, nbytes, p) >> (16 - s);
                             p += s;
                             d = (mag >> (s - 1)) ? (long)mag
@@ -98,7 +102,7 @@ long decode_prog_segment(
                         preds[ti] = pred;
                         blk[0] = (int)(pred * p1);
                     } else {                 /* DC refinement */
-                        if (p >= limit) return -2;
+                        NEED(1);
                         if (bit1(seg, nbytes, p)) blk[0] |= (int)p1;
                         p += 1;
                     }
@@ -106,7 +110,7 @@ long decode_prog_segment(
                     if (eobrun) { eobrun--; continue; }
                     long k = ss;
                     while (k <= se) {
-                        if (p >= limit) return -2;
+                        NEED(16);
                         int e = lut[window16(seg, nbytes, p)];
                         if (!e) return -1;
                         int op = e >> 22;
@@ -121,7 +125,7 @@ long decode_prog_segment(
                             int r = (e >> 5) & 15;
                             u32 extra = 0;
                             if (r) {
-                                if (p >= limit) return -2;
+                                NEED(r);
                                 extra = window16(seg, nbytes, p) >> (16 - r);
                                 p += r;
                             }
@@ -133,7 +137,7 @@ long decode_prog_segment(
                             int s = (e >> 5) & 15;
                             k += (e >> 9) & 15;
                             if (k > se) return -3;
-                            if (p >= limit) return -2;
+                            NEED(s);
                             u32 mag = window16(seg, nbytes, p) >> (16 - s);
                             p += s;
                             long v = (mag >> (s - 1))
@@ -147,7 +151,7 @@ long decode_prog_segment(
                     long k = ss;
                     if (eobrun == 0) {
                         while (k <= se) {
-                            if (p >= limit) return -2;
+                            NEED(16);
                             int e = lut[window16(seg, nbytes, p)];
                             if (!e) return -1;
                             int op = e >> 22;
@@ -157,7 +161,7 @@ long decode_prog_segment(
                                 int r = (e >> 5) & 15;
                                 u32 extra = 0;
                                 if (r) {
-                                    if (p >= limit) return -2;
+                                    NEED(r);
                                     extra =
                                         window16(seg, nbytes, p) >> (16 - r);
                                     p += r;
@@ -177,7 +181,7 @@ long decode_prog_segment(
                                 int s = (e >> 5) & 15;
                                 run = (e >> 9) & 15;
                                 if (s != 1) return -6;
-                                if (p >= limit) return -2;
+                                NEED(1);
                                 newval = bit1(seg, nbytes, p) ? p1 : m1;
                                 p += 1;
                             }
@@ -185,7 +189,7 @@ long decode_prog_segment(
                                 int z = zigzag[k];
                                 int cur = blk[z];
                                 if (cur) {
-                                    if (p >= limit) return -2;
+                                    NEED(1);
                                     if (bit1(seg, nbytes, p) &&
                                         !(cur & (int)p1))
                                         blk[z] =
@@ -209,7 +213,7 @@ long decode_prog_segment(
                             int z = zigzag[k];
                             int cur = blk[z];
                             if (cur) {
-                                if (p >= limit) return -2;
+                                NEED(1);
                                 if (bit1(seg, nbytes, p) && !(cur & (int)p1))
                                     blk[z] = cur + (int)(cur > 0 ? p1 : m1);
                                 p += 1;
@@ -223,4 +227,5 @@ long decode_prog_segment(
         }
     }
     return 0;
+#undef NEED
 }

@@ -3,7 +3,7 @@
  * Self-contained C99 (stdlib-free, no includes) compiled on demand by
  * smcchecker_spark.native with the host `cc` and loaded via ctypes.
  * It is a line-for-line translation of the Python symbol loop in
- * jpegcodec._decode_scan_into — same packed-LUT format, same error
+ * jpegcodec._decode_segment_py — same packed-LUT format, same error
  * conditions, same bit-position semantics (absolute bit cursor, the
  * 16-bit window is zero-padded past the segment end) — so both paths
  * are property-testable against each other and produce identical

@@ -167,6 +167,12 @@ class ValidationRunner:
 
         # cache: verdicts + downstream writers both consume violations
         violations = violations.persist()
+        if self.suite.custom_constraints:
+            # fill the union's cache with one job; from then on nothing
+            # reads the core tier's cache, so release it here (a caller
+            # only ever unpersists the violations it was handed)
+            violations.count()
+            core.unpersist()
 
         row_counts = df.groupBy(part.alias("part_id")).agg(
             F.count(F.lit(1)).alias("n_rows")

@@ -753,7 +753,8 @@ def _apply_predictor_inverse(
     genuinely left-sequential modes (5/6/7/10/11/12/13) fall back to a
     per-pixel walk, and that walk runs on Python ints over row lists —
     no numpy scalar churn. Property-tested against
-    :func:`_predictor_inverse_scalar` (the straight-from-spec form)."""
+    ``tests/ref_oracle.predictor_inverse_scalar`` (the
+    straight-from-spec form)."""
     h, w = img.shape[:2]
     res = img.astype(np.int32)
     out = np.empty_like(res)
@@ -909,74 +910,6 @@ def _predict_segment_scalar(
         cur[b + 1] = L1
         cur[b + 2] = L2
         cur[b + 3] = L3
-
-
-def _predictor_inverse_scalar(
-    img: np.ndarray, pred_img: np.ndarray, bits: int
-) -> np.ndarray:
-    """Straight-from-spec per-pixel predictor inverse — the reference
-    form :func:`_apply_predictor_inverse` is property-tested against
-    (kept runnable, never on the hot path)."""
-    h, w = img.shape[:2]
-    out = img.astype(np.int32)
-
-    def px(y, x):
-        return out[y, x]
-
-    for y in range(h):
-        for x in range(w):
-            if x == 0 and y == 0:
-                pred = np.array([255, 0, 0, 0], dtype=np.int32)
-            elif y == 0:
-                pred = px(0, x - 1)
-            elif x == 0:
-                pred = px(y - 1, 0)
-            else:
-                mode = int(pred_img[y >> bits, x >> bits, 2])  # green channel
-                L = px(y, x - 1)
-                T = px(y - 1, x)
-                TL = px(y - 1, x - 1)
-                # rightmost column: TR addresses the current row's
-                # leftmost (already-decoded) pixel — libwebp's top[x+1]
-                # wraps into out[0] of the current row
-                TR = px(y - 1, x + 1) if x + 1 < w else px(y, 0)
-                if mode == 0:
-                    pred = np.array([255, 0, 0, 0], dtype=np.int32)
-                elif mode == 1:
-                    pred = L
-                elif mode == 2:
-                    pred = T
-                elif mode == 3:
-                    pred = TR
-                elif mode == 4:
-                    pred = TL
-                elif mode == 5:
-                    pred = ((L + TR) // 2 + T) // 2
-                elif mode == 6:
-                    pred = (L + TL) // 2
-                elif mode == 7:
-                    pred = (L + T) // 2
-                elif mode == 8:
-                    pred = (TL + T) // 2
-                elif mode == 9:
-                    pred = (T + TR) // 2
-                elif mode == 10:
-                    pred = (((L + TL) // 2) + ((T + TR) // 2)) // 2
-                elif mode == 11:  # Select
-                    p = L + T - TL
-                    pl = int(np.abs(p - L).sum())
-                    pt = int(np.abs(p - T).sum())
-                    pred = L if pl < pt else T
-                elif mode == 12:  # ClampAddSubtractFull
-                    pred = np.clip(L + T - TL, 0, 255)
-                elif mode == 13:  # ClampAddSubtractHalf
-                    a = (L + T) // 2
-                    d = a - TL  # C truncates toward zero, not floor
-                    pred = np.clip(a + np.sign(d) * (np.abs(d) // 2), 0, 255)
-                else:
-                    raise ValueError("corrupt VP8L: bad predictor mode")
-            out[y, x] = (out[y, x] + pred) & 0xFF
-    return out.astype(np.uint8)
 
 
 def _apply_color_inverse(

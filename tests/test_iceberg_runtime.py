@@ -119,3 +119,36 @@ def test_iceberg_roundtrip_real_catalog(tmp_path):
     assert facts["scan_has_filter"] is True
     assert facts["snapshots"] == 2
     assert facts["rows_at_first_snapshot"] == 400
+
+
+def _roundtrip_tool():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "iceberg_roundtrip", os.path.join(REPO, "tools", "iceberg_roundtrip.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_scan_has_filter_needs_the_pushed_predicate():
+    """The round trip's prune check reads the BatchScan node's own
+    ``filters=`` clause: a plan that only projects ``part_id`` through
+    the scan and filters it afterwards does not pass."""
+    tool = _roundtrip_tool()
+    pushed = (
+        "*(1) Project [image_id#0L, part_id#1]\n"
+        "+- BatchScan local.db.images[image_id#0L, part_id#1] "
+        "local.db.images (branch=null) [filters=part_id IS NOT NULL, "
+        "NOT (part_id = 0), NOT (part_id = 1), groupedBy=] "
+        "RuntimeFilters: []\n"
+    )
+    residual = (
+        "*(1) Filter NOT part_id#1 IN (0,1)\n"
+        "+- BatchScan local.db.images[image_id#0L, part_id#1] "
+        "local.db.images (branch=null) [filters=, groupedBy=] "
+        "RuntimeFilters: []\n"
+    )
+    assert tool.scan_has_filter(pushed)
+    assert not tool.scan_has_filter(residual)

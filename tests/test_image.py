@@ -22,6 +22,7 @@ from smcchecker_spark.constraints import (
     ValidationContext,
 )
 from smcchecker_spark.image import ImageConsistent, PsnrAtLeast
+from tests import ref_oracle
 
 N = 600  # fixture rows for the e2e test
 
@@ -53,7 +54,7 @@ def _phash64_ref(arr):
     """Independent scalar reference (the pre-batch formulation) — guards
     phash64_batch against semantic drift: hashes stored by older code
     must keep validating."""
-    g = ic._block_mean_8x8(ic.luma(arr))
+    g = ref_oracle.block_mean_8x8(ic.luma(arr))
     bits = (g > g.mean()).flatten()
     val = int.from_bytes(np.packbits(bits).tobytes(), "big")
     return int(np.int64(np.uint64(val)))

@@ -730,27 +730,39 @@ def test_progressive_native_python_pixel_parity(monkeypatch):
 
 
 def test_progressive_native_error_parity(monkeypatch):
-    """Truncations raise ValueError on both paths (the kernel's error
-    codes map back to the same texts)."""
+    """Truncations decode or raise the same ValueError text on both
+    paths (the kernel's error codes map back to the same texts). The
+    sweep over every cut of an encoder-made stream covers the last few
+    bytes of a scan, where the kernel must apply the Python reader's
+    underrun rule: a cut that leaves a scan short is rejected, not
+    decoded from zero padding."""
     from smcchecker_spark import native
 
     if native.jpegprog() is None:
         pytest.skip("no C compiler in this environment")
-    data = open(_PROG_VEC, "rb").read()
-    cuts = list(range(len(data) // 2, len(data) - 2, 11))
-    native_out = []
-    for cut in cuts:
-        try:
-            native_out.append(("ok", jc.decode_jpeg(data[:cut]).tobytes()))
-        except ValueError as ex:
-            native_out.append(("err", str(ex)))
+    vec = open(_PROG_VEC, "rb").read()
+    ours = jc.encode_jpeg_progressive(
+        np.random.default_rng(0).integers(0, 256, (8, 8, 3)).astype(np.uint8),
+        quality=90,
+    )
+    cases = [
+        (vec, cut) for cut in range(len(vec) // 2, len(vec) - 2, 11)
+    ] + [(ours, cut) for cut in range(len(ours) // 2, len(ours))]
+
+    def outcomes():
+        out = []
+        for data, cut in cases:
+            try:
+                out.append(("ok", jc.decode_jpeg(data[:cut]).tobytes()))
+            except ValueError as ex:
+                out.append(("err", str(ex)))
+        return out
+
+    native_out = outcomes()
     monkeypatch.setitem(native._cache, "jpegprog.c", False)
-    for i, cut in enumerate(cuts):
-        try:
-            got = ("ok", jc.decode_jpeg(data[:cut]).tobytes())
-        except ValueError as ex:
-            got = ("err", str(ex))
-        assert got == native_out[i], cut
+    py_out = outcomes()
+    for i, (data, cut) in enumerate(cases):
+        assert native_out[i] == py_out[i], (len(data), cut)
 
 
 def test_progressive_encoder_pixel_parity_with_baseline():

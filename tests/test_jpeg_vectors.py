@@ -113,3 +113,82 @@ def test_our_committed_bitstreams_still_reproduce():
             os.path.join(VEC, f"ours_{h}x{w}_{sub}_q{q}.jpg"), "rb"
         ).read()
         assert enc == committed, (h, w, sub, q)
+
+
+_PIN_SHAPES = [(1, 1), (7, 9), (17, 23), (32, 32), (9, 40)]
+_PIN_QUALITIES = (50, 90, 98)
+
+
+def _pin_corpus():
+    """Every encoder over a fixed grid of shapes, qualities and chroma
+    layouts, as three groups of streams."""
+    groups = {"baseline": [], "progressive": [], "gray": []}
+    for i, (h, w) in enumerate(_PIN_SHAPES):
+        rng = np.random.default_rng(400 + i)
+        rgb = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        gray = rng.integers(0, 256, (h, w), dtype=np.uint8)
+        for q in _PIN_QUALITIES:
+            for sub in ("444", "420"):
+                groups["baseline"].append(
+                    jc.encode_jpeg(rgb, quality=q, subsampling=sub)
+                )
+                groups["progressive"].append(
+                    jc.encode_jpeg_progressive(rgb, quality=q, subsampling=sub)
+                )
+            groups["gray"].append(jc.encode_jpeg_gray(gray, quality=q))
+    return groups
+
+
+def _pin_decode(data: bytes) -> bytes:
+    try:
+        out = jc.decode_jpeg(data)
+    except Exception as ex:  # the error text is part of the contract
+        return f"err:{type(ex).__name__}:{ex}".encode()
+    return b"ok:%d,%d:" % out.shape[:2] + out.tobytes()
+
+
+def _digest(items) -> str:
+    import hashlib
+
+    h = hashlib.sha256()
+    for b in items:
+        h.update(len(b).to_bytes(8, "big") + b)
+    return h.hexdigest()
+
+
+# SHA-256 of every stream group and of the Python-path decode results
+# below, computed before the encoder core and scan driver were merged;
+# any change to a single output byte, pixel or error text trips it
+_PINNED_DIGESTS = {
+    "baseline": "65995d83f673cf5b7c85471e311cf910d43209f9f702a312cc40a83a78857641",
+    "progressive": "db542f80b07bb50c4126876c237669ecb0df7a8c05b740139cf6d7c5c9fc225a",
+    "gray": "a0d1ecbf4435bcd67b89a1045adf8e1a8dc0121fc41b46a489a737914123c831",
+    "decode": "dad1dd59dc04951d372a0c8c620247ead40b40b461711bf2c57de58b2dd22f2c",
+}
+
+
+def test_codec_output_digests_pinned(monkeypatch):
+    """Pins the bytes of all three encoders and the reference (Python)
+    decoder's output over each stream, four seeded bit-flips of it and
+    four truncations of it: decoded pixels, or the exception text."""
+    from smcchecker_spark import native
+
+    for src in ("jpegscan.c", "jpegprog.c", "jpegrecon.c"):
+        monkeypatch.setitem(native._cache, src, False)
+    groups = _pin_corpus()
+    rng = np.random.default_rng(77)
+    results = []
+    for name in ("baseline", "progressive", "gray"):
+        for data in groups[name]:
+            results.append(_pin_decode(data))
+            for _ in range(4):
+                ba = bytearray(data)
+                ba[int(rng.integers(2, len(ba)))] ^= int(rng.integers(1, 256))
+                results.append(_pin_decode(bytes(ba)))
+            for _ in range(4):
+                results.append(
+                    _pin_decode(data[: int(rng.integers(2, len(data)))])
+                )
+    got = {name: _digest(streams) for name, streams in groups.items()}
+    got["decode"] = _digest(results)
+    assert got == _PINNED_DIGESTS

@@ -188,6 +188,24 @@ def test_validator_replay_writes_each_row_once(spark, tmp_path):
     assert len(exp) == 1 and exp[0][0] == 7
 
 
+def test_custom_tier_leaves_no_cached_plan(spark, tmp_path):
+    """Micro-batches of a suite with a custom tier release every cache
+    they take: after two batches the session's cache is empty again,
+    the core-tier violations included."""
+    df, suite = _tiered_suite_df(spark)
+    v = StreamingValidator(
+        suite,
+        violations_path=str(tmp_path / "violations"),
+        verdicts_path=str(tmp_path / "verdicts"),
+    )
+    spark.catalog.clearCache()
+    v.process_batch(df, 1)
+    v.process_batch(df, 2)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    got = spark.read.parquet(str(tmp_path / "violations"))
+    assert got.filter(F.col("check_name") == "maxlength_caption").count() > 0
+
+
 def test_windowed_histograms_match_batch(spark, tmp_path):
     """Streaming event-time histograms (watermark + windowed groupBy)
     produce the same (window, bucket, count) rows as the equivalent

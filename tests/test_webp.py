@@ -13,6 +13,7 @@ import pytest
 
 from smcchecker_spark import imagecodec as ic
 from smcchecker_spark import webpcodec as wc
+from tests import ref_oracle
 
 
 def _noise(h, w, seed=0):
@@ -477,7 +478,7 @@ def test_predictor_inverse_vectorized_parity():
             pred = np.zeros((th, tw, 4), dtype=np.uint8)
             pred[:, :, 2] = rng.integers(0, 14, (th, tw))
             fast = wc._apply_predictor_inverse(res, pred, bits)
-            ref = wc._predictor_inverse_scalar(res, pred, bits)
+            ref = ref_oracle.predictor_inverse_scalar(res, pred, bits)
             assert np.array_equal(fast, ref), (bits, h, w)
 
 
@@ -490,7 +491,7 @@ def test_predictor_inverse_single_mode_parity():
         pred = np.zeros((1, 1, 4), dtype=np.uint8)
         pred[0, 0, 2] = mode
         fast = wc._apply_predictor_inverse(res, pred, bits=8)
-        ref = wc._predictor_inverse_scalar(res, pred, bits=8)
+        ref = ref_oracle.predictor_inverse_scalar(res, pred, bits=8)
         assert np.array_equal(fast, ref), mode
 
 

@@ -24,9 +24,25 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def scan_has_filter(plan: str) -> bool:
+    """True when an Iceberg ``BatchScan`` node of the executed-plan
+    string names ``part_id`` inside its own ``filters=`` clause, i.e.
+    the partition predicate was pushed into the scan and prunes
+    manifests. A column the scan only projects, or a predicate left to
+    a post-scan ``Filter`` node, does not count."""
+    for line in plan.splitlines():
+        if "BatchScan" not in line:
+            continue
+        m = re.search(r"filters=([^\]]*)", line)
+        if m and "part_id" in m.group(1).split("groupedBy=")[0]:
+            return True
+    return False
 
 
 def main() -> int:
@@ -89,12 +105,8 @@ def main() -> int:
         )
         assert facts["resume_parts"] == [2, 3]
         plan = resumed._jdf.queryExecution().executedPlan().toString()
-        # Iceberg's BatchScan reports pushed partition predicates in its
-        # `filters=` clause — assert the prune reached the scan, i.e. the
-        # predicate is NOT a post-scan Filter-only residual.
-        facts["scan_has_filter"] = (
-            "part_id" in plan and "BatchScan" in plan
-        )
+        # the prune must reach the scan, not stay a post-scan Filter
+        facts["scan_has_filter"] = scan_has_filter(plan)
         assert facts["scan_has_filter"], plan
 
         snap0 = spark.sql(
