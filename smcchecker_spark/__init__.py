@@ -5,10 +5,10 @@ SCCWRP/smcchecker (reference at /root/reference) as a declarative
 constraint DSL compiled to Spark DataFrame expressions and Arrow-batched
 pandas UDFs, designed for 10^12-row image+caption tables:
 
-- one fused multi-constraint pass per table scan (all row-level checks
-  are columns of a single ``select``; see ``compile.py``),
-- join-based checks (uniqueness, referential integrity, dup-vs-production)
-  as broadcast / AQE-planned joins,
+- one multi-constraint pass per table scan: every check is one boolean
+  flag of a single projection (see ``compile.py``); join-based checks
+  (uniqueness, referential integrity, dup-vs-production) flag through
+  broadcast / AQE-planned hash probes inside that same pass,
 - column stats (null rate, min/max, HLL ndv, approx quantiles, histograms)
   and KS/PSI distribution-drift checks (``stats.py``),
 - Arrow-batched image payload validation (decode, w/h/fmt/phash, PSNR)

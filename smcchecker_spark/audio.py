@@ -9,7 +9,7 @@ image table's (w, h, fmt, phash) consistency. Undecodable payloads —
 truncation, header corruption, non-PCM formats — are row-level
 violations, never task failures.
 
-Compiles into the same fused single-scan row pass as every other
+Compiles into the suite's one flag projection like every other
 constraint; the decode UDF struct is one ArrowEvalPython stage feeding
 plain comparisons (identical design to ``image.decode_facts_udf``).
 

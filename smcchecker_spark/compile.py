@@ -1,23 +1,27 @@
-"""Compile a constraint Suite into Spark jobs producing the violations table.
+"""Compile a constraint Suite into one Spark plan producing violations.
 
-Execution shape (SURVEY.md §4 "fused constraint evaluation"):
+Execution shape (SURVEY.md §4 "fused constraint evaluation"): every suite
+has ONE compile path, a single multi-constraint pass per partition.
 
-1. **One fused scan** evaluates every row-level constraint: each check
-   becomes a ``when(violation, struct(...))`` element of an array column;
-   ``array_compact`` drops the non-violations and ``explode`` yields one
-   output row per (violating row × check). Catalyst prunes the scan to
-   exactly the columns the suite references — on the image table the
-   ``bytes`` column is only read when an image check is in the suite —
-   and the whole select stays inside WholeStageCodegen.
+1. The input gets its identity columns (``ROW_ID``, ``PART_ID``) once and
+   is aliased ``BASE``. Each check then adds one boolean flag over that
+   base (``Constraint.annotate``). A row-level check's flag is its
+   violation predicate. A join-level check's flag is a hash probe: an
+   EXISTS subquery against a side table (planned as an ExistenceJoin,
+   which never multiplies base rows) or a LEFT join against a key/stats
+   table derived from the validated rows.
+2. One projection computes ``when(flag, struct(...message...))`` for
+   every check into an array, so a payload UDF that a check's flag and
+   message share runs once per row.
+3. ``explode(array_compact(...))`` (a separate step: EXISTS may not sit
+   inside a generator) yields one output row per (violating row × check).
 
-2. **One join stage per join-level constraint** (uniqueness / lookup-RI /
-   dup-vs-production / containment), each a broadcast or AQE-planned
-   shuffle join, unioned with the fused pass output.
-
-The reference evaluated each check as a separate full-table pandas pass,
-fanned out with multiprocessing (/root/reference/proj/core/functions.py:35-58);
-here a single scan covers all row checks and Spark parallelizes by
-partition.
+Catalyst prunes the scan to exactly the columns the suite references — on
+the image table the ``bytes`` column is only read when an image check is
+in the suite. The reference evaluated each check as a separate full-table
+pandas pass, fanned out with multiprocessing
+(/root/reference/proj/core/functions.py:35-58); here one plan covers all
+checks and Spark parallelizes by partition.
 
 Violations schema (FIXTURES.md §6, mirroring the reference's violation
 dict at proj/core/functions.py:8-30, exploded to row granularity):
@@ -34,10 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smcchecker_spark.constraints import (
-    PART_ID,
-    ROW_ID,
+    BASE,
     Constraint,
-    JoinConstraint,
     Suite,
     ValidationContext,
 )
@@ -58,6 +60,11 @@ VIOLATION_SCHEMA = T.StructType(
 
 VIOLATION_COLS = [f.name for f in VIOLATION_SCHEMA.fields]
 
+#: identity/lineage columns the compiler attaches to the base once; the
+#: violations' row_id and part_id are read from them after the explode
+ROW_ID = "__row_id"
+PART_ID = "__part_id"
+
 
 def part_expr(df: DataFrame, part_id_col: str | None):
     """A row's partition id: ``part_id_col`` when ``df`` has it, else
@@ -65,12 +72,6 @@ def part_expr(df: DataFrame, part_id_col: str | None):
     if part_id_col and part_id_col in df.columns:
         return F.col(part_id_col).cast("int")
     return F.spark_partition_id()
-
-
-def _with_identity(df: DataFrame, row_id_col: str, part_id_col: str | None) -> DataFrame:
-    return df.withColumn(ROW_ID, F.col(row_id_col).cast("string")).withColumn(
-        PART_ID, part_expr(df, part_id_col)
-    )
 
 
 def evaluate_preconditions(
@@ -96,88 +97,6 @@ def evaluate_preconditions(
     ]
     row = df.agg(*aggs).collect()[0]
     return {c.name: bool(row[c.name]) for c, _ in gated}
-
-
-def compile_row_pass(
-    df: DataFrame,
-    suite: Suite,
-    tier: str = "core",
-    row_id_col: str = "image_id",
-    part_id_col: str | None = "part_id",
-    gates: dict[str, bool] | None = None,
-) -> DataFrame | None:
-    """The fused single-scan pass over all row-level constraints."""
-    gates = gates or {}
-    row_checks = [
-        c
-        for c in suite.active(tier)
-        if not isinstance(c, JoinConstraint) and gates.get(c.name, True)
-    ]
-    if not row_checks:
-        return None
-    base = _with_identity(df, row_id_col, part_id_col)
-    structs = [
-        F.when(
-            c.violation_expr(base),
-            F.struct(
-                F.lit(c.columns_label).alias("columns"),
-                F.lit(c.error_type).alias("error_type"),
-                F.lit(c.is_core).alias("is_core_error"),
-                c.message_expr(base).alias("error_message"),
-                F.lit(c.name).alias("check_name"),
-                F.lit(c.severity).alias("severity"),
-            ),
-        )
-        for c in row_checks
-    ]
-    exploded = base.select(
-        F.col(ROW_ID),
-        F.col(PART_ID),
-        F.explode(F.array_compact(F.array(*structs))).alias("v"),
-    )
-    return exploded.select(
-        F.lit(suite.table).alias("table"),
-        F.col(ROW_ID).alias("row_id"),
-        F.col("v.columns").alias("columns"),
-        F.col("v.error_type").alias("error_type"),
-        F.col("v.is_core_error").alias("is_core_error"),
-        F.col("v.error_message").alias("error_message"),
-        F.col("v.check_name").alias("check_name"),
-        F.col("v.severity").alias("severity"),
-        F.col(PART_ID).alias("part_id"),
-    )
-
-
-def compile_join_passes(
-    df: DataFrame,
-    suite: Suite,
-    ctx: ValidationContext,
-    tier: str = "core",
-    row_id_col: str = "image_id",
-    part_id_col: str | None = "part_id",
-) -> list[DataFrame]:
-    """One violations DataFrame per join-level constraint."""
-    base = _with_identity(df, row_id_col, part_id_col)
-    out = []
-    for c in suite.active(tier):
-        if not isinstance(c, JoinConstraint):
-            continue
-        v = c.violations(base, ctx)
-        msg = F.col("__msg") if "__msg" in v.columns else F.lit(c.message())
-        out.append(
-            v.select(
-                F.lit(suite.table).alias("table"),
-                F.col(ROW_ID).alias("row_id"),
-                F.lit(c.columns_label).alias("columns"),
-                F.lit(c.error_type).alias("error_type"),
-                F.lit(c.is_core).alias("is_core_error"),
-                msg.alias("error_message"),
-                F.lit(c.name).alias("check_name"),
-                F.lit(c.severity).alias("severity"),
-                F.col(PART_ID).alias("part_id"),
-            )
-        )
-    return out
 
 
 def compile_suite(
@@ -210,16 +129,47 @@ def compile_suite(
         gates = evaluate_preconditions(gate_df, suite.active(tier))
         if ctx.shared is not None:
             ctx.shared[cache_key] = gates
-    parts: list[DataFrame] = []
-    row_pass = compile_row_pass(df, suite, tier, row_id_col, part_id_col, gates)
-    if row_pass is not None:
-        parts.append(row_pass)
-    parts.extend(
-        compile_join_passes(df, suite, ctx, tier, row_id_col, part_id_col)
-    )
-    if not parts:
+    checks = [c for c in suite.active(tier) if gates.get(c.name, True)]
+    if not checks:
         return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    src = df.withColumn(ROW_ID, F.col(row_id_col).cast("string")).withColumn(
+        PART_ID, part_expr(df, part_id_col)
+    )
+    base = src.alias(BASE)
+    flags = []
+    for c in checks:
+        base, flag = c.annotate(base, src, ctx)
+        flags.append((c, flag))
+    structs = [
+        F.when(
+            flag,
+            F.struct(
+                F.lit(c.columns_label).alias("columns"),
+                F.lit(c.error_type).alias("error_type"),
+                F.lit(c.is_core).alias("is_core_error"),
+                c.message_expr(base).alias("error_message"),
+                F.lit(c.name).alias("check_name"),
+                F.lit(c.severity).alias("severity"),
+            ),
+        )
+        for c, flag in flags
+    ]
+    flagged = base.select(
+        F.col(ROW_ID), F.col(PART_ID), F.array(*structs).alias("__v")
+    )
+    exploded = flagged.select(
+        F.col(ROW_ID),
+        F.col(PART_ID),
+        F.explode(F.array_compact(F.col("__v"))).alias("v"),
+    )
+    return exploded.select(
+        F.lit(suite.table).alias("table"),
+        F.col(ROW_ID).alias("row_id"),
+        F.col("v.columns").alias("columns"),
+        F.col("v.error_type").alias("error_type"),
+        F.col("v.is_core_error").alias("is_core_error"),
+        F.col("v.error_message").alias("error_message"),
+        F.col("v.check_name").alias("check_name"),
+        F.col("v.severity").alias("severity"),
+        F.col(PART_ID).alias("part_id"),
+    )

@@ -3,14 +3,14 @@
 A ``Constraint`` is *data* — column references plus parameters — not free
 code (contrast the reference's ``eval``-dispatched custom-check functions,
 /root/reference/proj/main.py:286-301). The compiler (``compile.py``) turns a
-``Suite`` of constraints into:
-
-- ONE fused DataFrame pass for all row-level constraints (each check is a
-  struct column of a single ``select``; Spark parallelizes by partition —
-  this replaces the reference's per-check ``multiprocessing`` fan-out,
-  proj/core/functions.py:35-58), and
-- one join stage per join-level constraint (uniqueness, lookup RI,
-  dup-vs-production, row containment), unioned into the violations output.
+``Suite`` of constraints into ONE pass: each check adds one boolean flag
+over a shared base (``Constraint.annotate``) and one projection turns the
+flags into violation structs. Spark parallelizes the pass by partition —
+this replaces the reference's per-check ``multiprocessing`` fan-out,
+proj/core/functions.py:35-58. A row-level check's flag is its violation
+predicate; a join-level check (uniqueness, lookup RI, dup-vs-production,
+row containment, …) flags through a hash probe or key join over the same
+base.
 
 Check inventory and error_type vocabulary mirror the reference's core
 checks (proj/core/core.py:18-56); severities follow its error/warning
@@ -19,6 +19,8 @@ routing (checkScale → warnings, proj/core/core.py:51-55).
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -72,6 +74,14 @@ class Constraint:
 
     def message(self) -> str:
         raise NotImplementedError
+
+    def annotate(
+        self, base: DataFrame, src: DataFrame, ctx: "ValidationContext"
+    ) -> tuple[DataFrame, Column]:
+        """Return ``base`` (a join-level check widens it) and this check's
+        violation flag over it; a row-level check's flag is its
+        violation predicate."""
+        return base, self.violation_expr(base)
 
     # Optional whole-column precondition: the check only runs if the
     # precondition holds over the entire table (reference analogue: the
@@ -273,7 +283,7 @@ class JsonShape(Constraint):
     without exploding the payload into columns.
 
     Compiled to native JSON expressions (``try_parse_json`` validity +
-    ``get_json_object`` key probes) fused into the single-scan row pass
+    ``get_json_object`` key probes) fused into the suite's one projection
     — no UDF, whole-stage codegen keeps it JVM-side. NULL column values
     pass (NotNull's job). A required key whose value is JSON ``null``
     counts as missing (``get_json_object`` cannot distinguish the two —
@@ -370,8 +380,8 @@ class OnlyWhen(Constraint):
     scope a rule to a row subset. Here the condition is DATA (a SQL
     string stored in the suite config), not evaluated Python, keeping
     the registry's no-free-code property (SURVEY §2 U-2), and the
-    compiler fuses the gated predicate into the same single-scan
-    row pass as every other check — zero extra passes, zero joins.
+    compiler fuses the gated predicate into the same flag projection as
+    every other check — zero extra passes, zero joins.
 
     Join-level constraints are rejected: scoping uniqueness/RI to a row
     subset changes the JOIN population, which callers should express by
@@ -436,25 +446,79 @@ class OnlyWhen(Constraint):
 
 
 # ---------------------------------------------------------------------------
-# Join-level constraints — compiled as join stages, not row expressions
+# Join-level constraints — a hash probe or key join over the shared base
 # ---------------------------------------------------------------------------
 
 
-#: compiler-injected identity/lineage columns present on the df handed to
-#: JoinConstraint.violations (see compile.py) — carrying them through the
-#: join avoids a second join to recover row identity + partition lineage.
-ROW_ID = "__row_id"
-PART_ID = "__part_id"
+#: alias of the compiler's shared base; EXISTS subqueries reach its
+#: columns as alias-qualified outer references (an unqualified name would
+#: resolve inside the subquery)
+BASE = "__vbase"
+
+
+def _base(k: str) -> Column:
+    return F.col(f"{BASE}.{k}")
+
+
+def _match(pairs: list[tuple[Column, Column]], null_safe=True) -> Column:
+    eq = [a.eqNullSafe(b) if null_safe else a == b for a, b in pairs]
+    return functools.reduce(operator.and_, eq)
+
+
+def _exists(side: DataFrame, prefix: str, keys, null_safe: bool) -> Column:
+    """True when ``side`` (a foreign table, its keys renamed ``prefix+k``)
+    holds the base row's keys. Planned as an ExistenceJoin: it never
+    multiplies base rows, so duplicate side keys cannot duplicate
+    violations, and the side keeps its broadcast hint or bucketing."""
+    return side.where(
+        _match([(F.col(prefix + k), _base(k).outer()) for k in keys], null_safe)
+    ).exists()
+
+
+def _join_keys(base: DataFrame, key_table: DataFrame, keys, tag: str):
+    """Null-safe LEFT join of a distinct key table derived from the
+    validated rows (Unique's dup keys, FunctionalDep's bad keys) onto the
+    base; the flag is the ``lit(True)`` marker, so NULL-key groups flag
+    too. groupBy groups NULL keys together (pandas ``duplicated`` treats
+    NaN == NaN the same way) — a plain equi-join would drop them."""
+    right = key_table.select(
+        *[F.col(k).alias(f"{tag}_{k}") for k in keys], F.lit(True).alias(tag)
+    )
+    cond = _match([(_base(k), F.col(f"{tag}_{k}")) for k in keys])
+    return base.join(right, cond, "left"), F.col(tag).isNotNull()
+
+
+def _scope_table(ctx: "ValidationContext", src: DataFrame, cache_key, build):
+    """``build`` over the FULL in-session table (``ctx.full_scope``) when
+    validating a checkpoint-wave slice — otherwise a duplicate pair split
+    across waves is invisible to both waves' per-slice aggregates. The
+    table is a function of the full scope alone, so in wave mode
+    (``ctx.shared`` set) it is materialized lazily (the first wave pays
+    the aggregate) and reused by every later wave."""
+    if ctx.shared is not None and cache_key in ctx.shared:
+        return ctx.shared[cache_key]
+    table = build(ctx.full_scope if ctx.full_scope is not None else src)
+    if ctx.shared is not None and ctx.full_scope is not None:
+        table = table.localCheckpoint(eager=False)
+        ctx.shared[cache_key] = table
+    return table
+
+
+def _registered(tables: dict, name: str, what: str) -> DataFrame:
+    if name not in tables:
+        raise ValueError(
+            f"{what} {name!r} not registered in the ValidationContext "
+            f"(available: {sorted(tables)})"
+        )
+    return tables[name]
 
 
 @dataclass(frozen=True)
 class JoinConstraint(Constraint):
-    def violations(self, df: DataFrame, ctx: "ValidationContext") -> DataFrame:
-        """Return violations as (ROW_ID, PART_ID[, __msg]) rows.
-
-        ``df`` arrives with ROW_ID/PART_ID already attached by the compiler.
-        """
-        raise NotImplementedError
+    """A check whose flag needs rows other than the one it flags: it
+    overrides ``annotate`` to widen the base with a probe or join.
+    ``src`` is the validated rows without the ``BASE`` alias, for
+    aggregates over the slice."""
 
 
 @dataclass(frozen=True)
@@ -464,9 +528,11 @@ class Unique(JoinConstraint):
 
     Scale note (SURVEY.md §4 item 6): compiled as
     ``groupBy(keys).count() > 1`` (partial/map-side + final hash agg —
-    ONE shuffle on the key hash) followed by a join back to recover the
-    violating row ids. AQE broadcasts the (usually tiny) duplicate-key
-    side at runtime; at 10^12 rows the agg itself two-phases for free.
+    ONE shuffle on the key hash) left-joined onto the shared base. AQE
+    broadcasts the (usually tiny) duplicate-key side at runtime; at
+    10^12 rows the agg itself two-phases for free. The agg side is
+    column-pruned to the keys, so in wave mode the full-scope pass scans
+    ids, not data.
     """
 
     keys: tuple[str, ...] = ()
@@ -490,45 +556,15 @@ class Unique(JoinConstraint):
             self.keys
         )
 
-    def violations(self, df, ctx):
+    def annotate(self, base, src, ctx):
         keys = list(self.keys)
-        # duplicate keys are found over the FULL in-session table
-        # (ctx.full_scope) when validating a checkpoint-wave slice —
-        # otherwise a dup pair split across waves is invisible to both
-        # waves' per-slice aggregates. The agg side is column-pruned to
-        # the keys, so the extra per-wave pass scans ids, not data.
-        src = ctx.full_scope if ctx.full_scope is not None else df
-        cache_key = ("unique_dup_keys", self.keys)
-        dup_keys = (
-            ctx.shared.get(cache_key) if ctx.shared is not None else None
+        dup_keys = _scope_table(
+            ctx, src, ("unique_dup_keys", self.keys),
+            lambda s: s.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") > 1),
         )
-        if dup_keys is None:
-            dup_keys = (
-                src.groupBy(*keys)
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") > 1)
-                .drop("__n")
-            )
-            if ctx.shared is not None and ctx.full_scope is not None:
-                # wave mode: the dup-key table is a function of the full
-                # in-session scope, identical every wave — materialize it
-                # lazily (first wave pays the agg) and reuse across waves
-                # instead of re-aggregating the complete table per wave
-                dup_keys = dup_keys.localCheckpoint(eager=False)
-                ctx.shared[cache_key] = dup_keys
-        # null-safe join-back: groupBy groups NULL keys together (pandas
-        # ``duplicated`` treats NaN == NaN the same way, and the reference
-        # dedupes on raw pkey values) — a plain equi-join would silently
-        # drop NULL-keyed duplicate groups here
-        left = df.select(ROW_ID, PART_ID, *keys)
-        right = dup_keys.select(
-            *[F.col(k).alias(f"__dk_{k}") for k in keys]
-        )
-        cond = None
-        for k in keys:
-            c = left[k].eqNullSafe(right[f"__dk_{k}"])
-            cond = c if cond is None else (cond & c)
-        return left.join(right, cond, "inner").select(ROW_ID, PART_ID)
+        return _join_keys(base, dup_keys, keys, f"__{self.name}")
 
 
 @dataclass(frozen=True)
@@ -536,12 +572,13 @@ class InLookup(JoinConstraint):
     """Lookup List Fail — referential integrity against a lookup table
     (proj/core/lookups.py:9-83: ``~df[col].isin(lu_values)``).
 
-    Compiled as a LEFT ANTI join. Lookup tables are dimension-sized →
-    ``broadcast()`` hint (no shuffle of the fact side at all); for a
-    large reference table set ``broadcast_hint=False`` and AQE plans a
-    sort-merge/shuffled-hash join (north_rule names both strategies).
-    Matching is on the raw value like the reference; case-normalization
-    belongs to the preprocess stage (clean.py fix_case).
+    Compiled as NOT EXISTS against the lookup (an ExistenceJoin).
+    Lookup tables are dimension-sized → ``broadcast()`` hint (no shuffle
+    of the fact side at all); for a large reference table set
+    ``broadcast_hint=False`` and AQE plans a sort-merge/shuffled-hash
+    join (north_rule names both strategies). Matching is on the raw
+    value like the reference; case-normalization belongs to the
+    preprocess stage (clean.py fix_case).
     """
 
     lookup: str = ""  # key into ctx.lookups
@@ -564,35 +601,19 @@ class InLookup(JoinConstraint):
     def message_expr(self, df) -> Column:
         return F.concat(
             F.lit("This value you entered ("),
-            F.col(self.column).cast("string"),
+            df[self.column].cast("string"),
             F.lit(f") did not match the lookup list {self.lookup}"),
         )
 
-    def violations(self, df, ctx):
-        if self.lookup not in ctx.lookups:
-            raise ValueError(
-                f"lookup table {self.lookup!r} not registered in the "
-                f"ValidationContext (available: {sorted(ctx.lookups)})"
-            )
-        lu = ctx.lookups[self.lookup].select(
-            F.col(self.lookup_key).alias("__lu_key")
+    def annotate(self, base, src, ctx):
+        lu = _registered(ctx.lookups, self.lookup, "lookup table").select(
+            F.col(self.lookup_key).alias("__lu_" + self.column)
         )
         if self.broadcast_hint:
             lu = F.broadcast(lu)
-        c = self.column
-        return (
-            df.select(ROW_ID, PART_ID, c)
-            .filter(F.col(c).isNotNull())  # null FK values are NotNull's problem
-            .join(lu, F.col(c) == F.col("__lu_key"), "left_anti")
-            .select(
-                ROW_ID,
-                PART_ID,
-                F.concat(
-                    F.lit("This value you entered ("),
-                    F.col(c).cast("string"),
-                    F.lit(f") did not match the lookup list {self.lookup}"),
-                ).alias("__msg"),
-            )
+        # null FK values are NotNull's problem
+        return base, base[self.column].isNotNull() & ~_exists(
+            lu, "__lu_", [self.column], null_safe=False
         )
 
 
@@ -601,27 +622,26 @@ class NotInExisting(JoinConstraint):
     """Duplicate (vs production) — key already present in the target table
     (proj/core/dupes.py:55-135: left-merge against SELECT DISTINCT pkey).
 
-    Compiled as a LEFT SEMI join against the existing snapshot's distinct
-    keys: rows that DO match are violations. The distinct() two-phases
-    map-side; the semi join is AQE-planned (broadcast when the existing
-    key set is small, sort-merge otherwise).
+    Compiled as EXISTS against the existing snapshot's distinct keys
+    (an ExistenceJoin): rows that DO match are violations. The
+    distinct() two-phases map-side; the join is AQE-planned (broadcast
+    when the existing key set is small, sort-merge otherwise).
 
-    ``distinct_keys=False`` skips the key dedup — a LEFT SEMI join's
+    ``distinct_keys=False`` skips the key dedup — an existence join's
     output is identical with or without it, so when the production keys
     are already unique (a primary-keyed snapshot — the usual case) the
     distinct is a pure extra aggregation of 10^12 keys. Crucially, with
     the snapshot stored BUCKETED on the keys (``tables.BucketedTable``),
-    skipping it lets the semi join consume the table's bucketing
-    directly: the production side is scanned pre-partitioned (and
-    pre-sorted) with ZERO exchange — only the incoming submission (a
-    sliver) shuffles to match. That is the 10^12-row RI plan; asserted
-    in tests/test_plans.py.
+    skipping it lets the join consume the table's bucketing directly:
+    the production side is scanned pre-partitioned (and pre-sorted) with
+    ZERO exchange — only the incoming submission (a sliver) shuffles to
+    match. That is the 10^12-row RI plan; asserted in tests/test_plans.py.
 
     ``bloom_bits``: opt-in Bloom prefilter of the PRODUCTION side. The
     submission's keys (the small side — one cheap aggregation) build a
     word-packed bitmap (ops/bloom.py); production rows whose key
     composite is definitely absent from the submission are dropped
-    MAP-SIDE before the semi join, so the 10^12-row snapshot's shuffle
+    MAP-SIDE before the join, so the 10^12-row snapshot's shuffle
     volume collapses to (possible matches + fp sliver). No false
     negatives — the bloom changes the plan, never the violation set
     (parity-asserted in tests). Size it for the SUBMISSION key count
@@ -630,7 +650,8 @@ class NotInExisting(JoinConstraint):
 
     ``null_safe=False`` joins on plain equality instead of ``<=>``.
     The default matches the reference (pandas ``merge`` pairs NaN keys,
-    proj/core/dupes.py:106), but Spark plans a null-safe join key as
+    proj/core/dupes.py:106, so a NULL-keyed incoming row duplicates a
+    NULL-keyed production row), but Spark plans a null-safe join key as
     ``coalesce(k, …)``/``isnull(k)`` — a partitioning expression that can
     NEVER match a table's bucketing-by-k, so the 10^12-row production
     side gets re-shuffled (measured: 2 exchanges vs 1). When the
@@ -670,19 +691,13 @@ class NotInExisting(JoinConstraint):
             + ")"
         )
 
-    def violations(self, df, ctx):
-        if self.existing not in ctx.existing:
-            raise ValueError(
-                f"existing-snapshot table {self.existing!r} not registered in "
-                f"the ValidationContext (available: {sorted(ctx.existing)})"
-            )
+    def annotate(self, base, src, ctx):
         keys = list(self.keys)
-        existing = ctx.existing[self.existing].select(
-            *[F.col(k).alias(f"__ex_{k}") for k in keys]
-        )
+        existing = _registered(
+            ctx.existing, self.existing, "existing-snapshot table"
+        ).select(*[F.col(k).alias(f"__ex_{k}") for k in keys])
         if self.distinct_keys:
             existing = existing.distinct()
-        left = df.select(ROW_ID, PART_ID, *keys)
         if self.bloom_bits:
             from smcchecker_spark.ops import bloom
 
@@ -695,7 +710,7 @@ class NotInExisting(JoinConstraint):
                 )
 
             words = bloom.bloom_build(
-                left.select(composite(keys).alias("__bk")), "__bk",
+                src.select(composite(keys).alias("__bk")), "__bk",
                 self.bloom_bits,
             )
             existing = (
@@ -708,20 +723,7 @@ class NotInExisting(JoinConstraint):
                 .filter(F.col("__maybe"))
                 .drop("__maybe", "__bk")
             )
-        # null-safe match: pandas ``merge`` (the reference's mechanism,
-        # proj/core/dupes.py:106) matches NaN keys to NaN keys, so a
-        # NULL-keyed incoming row duplicates a NULL-keyed production row.
-        # null_safe=False (bucket-compatible plan; see class docstring)
-        # uses plain equality — NULL probe keys then never match.
-        cond = None
-        for k in keys:
-            c = (
-                left[k].eqNullSafe(existing[f"__ex_{k}"])
-                if self.null_safe
-                else left[k] == existing[f"__ex_{k}"]
-            )
-            cond = c if cond is None else (cond & c)
-        return left.join(existing, cond, "left_semi").select(ROW_ID, PART_ID)
+        return base, _exists(existing, "__ex_", keys, self.null_safe)
 
 
 @dataclass(frozen=True)
@@ -731,7 +733,7 @@ class SubsetOf(JoinConstraint):
 
     The reference's per-column ``isin`` is value-wise, not tuple-wise — a
     documented bug we do NOT replicate (SURVEY.md §2.3 J4); we implement
-    true tuple containment as a LEFT ANTI join on the key tuple.
+    true tuple containment as NOT EXISTS on the key tuple.
     """
 
     keys: tuple[str, ...] = ()
@@ -759,19 +761,11 @@ class SubsetOf(JoinConstraint):
             f"(matched on {', '.join(self.keys)})"
         )
 
-    def violations(self, df, ctx):
-        if self.other not in ctx.existing:
-            raise ValueError(
-                f"table {self.other!r} not registered in the "
-                f"ValidationContext (available: {sorted(ctx.existing)})"
-            )
-        keys = list(self.keys)
-        other = ctx.existing[self.other].select(*keys).distinct()
-        return (
-            df.select(ROW_ID, PART_ID, *keys)
-            .join(other, on=keys, how="left_anti")
-            .select(ROW_ID, PART_ID)
+    def annotate(self, base, src, ctx):
+        other = _registered(ctx.existing, self.other, "table").select(
+            *[F.col(k).alias(f"__so_{k}") for k in self.keys]
         )
+        return base, ~_exists(other.distinct(), "__so_", self.keys, False)
 
 
 @dataclass(frozen=True)
@@ -784,14 +778,17 @@ class MonotonicWithin(JoinConstraint):
     timeseries_custom.py via functions.py:checkData), generalized: e.g.
     event timestamps must not run backwards in ingest order per user.
 
-    Compiled as one ``lag()`` window per key group: ONE shuffle on the
-    key hash, per-group sort on ``order_by``. Scale note: a window
-    cannot be split by AQE — one group sorts in one task, so the key
-    must be finer than any hot entity (salt upstream or use a composite
-    key when a single group can exceed a task's memory). Rows flagged
-    are those BELOW their predecessor; NULL values never flag (order
-    gaps are NotNull's job) and NULL order_by rows sort first
-    (deterministic: Spark default nulls-first ascending).
+    Compiled as one ``lag()`` window per key group inside the flag
+    projection: ONE shuffle on the key hash, per-group sort on
+    ``order_by``. The window partitions the shared base rows, so a suite
+    that pairs this check with a payload check (ImageConsistent, …)
+    shuffles the payload column too. Scale note: a window cannot be
+    split by AQE — one group sorts in one task, so the key must be finer
+    than any hot entity (salt upstream or use a composite key when a
+    single group can exceed a task's memory). Rows flagged are those
+    BELOW their predecessor; NULL values never flag (order gaps are
+    NotNull's job) and NULL order_by rows sort first (deterministic:
+    Spark default nulls-first ascending).
     """
 
     keys: tuple[str, ...] = ()
@@ -824,24 +821,16 @@ class MonotonicWithin(JoinConstraint):
             f"({', '.join(self.keys)}) group when ordered by {self.order_by}"
         )
 
-    def violations(self, df, ctx):
+    def annotate(self, base, src, ctx):
         from pyspark.sql import Window
 
-        w = Window.partitionBy(*self.keys).orderBy(self.order_by)
-        prev = F.col("__prev")
-        bad = (
-            (F.col(self.column) <= prev)
-            if self.strict
-            else (F.col(self.column) < prev)
+        w = Window.partitionBy(*[base[k] for k in self.keys]).orderBy(
+            base[self.order_by]
         )
-        return (
-            df.select(ROW_ID, PART_ID, self.column, *self.keys, self.order_by)
-            .withColumn("__prev", F.lag(F.col(self.column)).over(w))
-            .filter(
-                F.col(self.column).isNotNull() & prev.isNotNull() & bad
-            )
-            .select(ROW_ID, PART_ID)
-        )
+        x = base[self.column]
+        prev = F.lag(x).over(w)
+        bad = (x <= prev) if self.strict else (x < prev)
+        return base, x.isNotNull() & prev.isNotNull() & bad
 
 
 @dataclass(frozen=True)
@@ -860,7 +849,7 @@ class RobustOutliers(JoinConstraint):
     MADs out; declare an exact-value rule with FieldEquals instead.
 
     Scale: two extra column-pruned aggregation passes (median, then MAD
-    around it), each a 1-row broadcast back onto the scan — no driver
+    around it), attached to the shared base as a broadcast — no driver
     collect, no full-width shuffle. ``approx=True`` swaps exact
     ``percentile`` (per-value aggregation state — fine to ~millions of
     distinct values) for ``percentile_approx`` (bounded sketch; the
@@ -910,43 +899,45 @@ class RobustOutliers(JoinConstraint):
             return F.percentile_approx(col, F.lit(0.5), F.lit(10000))
         return F.percentile(col, F.lit(0.5))
 
-    def violations(self, df, ctx):
-        """``keys=()``: column-global median/MAD, attached as 1-row
-        broadcasts. With ``keys``: per-GROUP median/MAD (a source's own
-        scale — mixed-unit corpora where the global cut over/under
-        flags every source), attached as |groups|-row broadcast joins;
-        rows with NULL group keys are never flagged (no population)."""
+    def annotate(self, base, src, ctx):
+        """``keys=()``: column-global median/MAD over the validated rows,
+        a 1-row broadcast cross join. With ``keys``: per-GROUP median/MAD
+        (a source's own scale — mixed-unit corpora where the global cut
+        over/under flags every source), a |groups|-row broadcast LEFT
+        join; rows with NULL group keys are never flagged (no
+        population)."""
         x = F.col(self.column).cast("double")
         keys = list(self.keys)
+        t = f"__{self.name}"
         if keys:
-            med = df.groupBy(*keys).agg(self._median(x).alias("__med"))
+            med = src.groupBy(*keys).agg(self._median(x).alias("__med"))
             stats = (
-                df.join(F.broadcast(med), keys)
+                src.join(F.broadcast(med), keys)
                 .groupBy(*keys)
                 .agg(self._median(F.abs(x - F.col("__med"))).alias("__mad"))
                 .join(F.broadcast(med), keys)
             )
-            joined = df.select(ROW_ID, PART_ID, self.column, *keys).join(
-                F.broadcast(stats), keys
-            )
         else:
-            med = df.agg(self._median(x).alias("__med"))
-            stats = (
-                df.join(F.broadcast(med))
-                .agg(
-                    F.first("__med").alias("__med"),
-                    self._median(F.abs(x - F.col("__med"))).alias("__mad"),
-                )
+            med = src.agg(self._median(x).alias("__med"))
+            stats = src.join(F.broadcast(med)).agg(
+                F.first("__med").alias("__med"),
+                self._median(F.abs(x - F.col("__med"))).alias("__mad"),
             )
-            joined = df.select(ROW_ID, PART_ID, self.column).join(
-                F.broadcast(stats)
-            )
-        cut = F.lit(self.k) * F.lit(1.4826) * F.col("__mad")
-        return joined.filter(
-            x.isNotNull()
-            & (F.col("__mad") > 0)
-            & (F.abs(x - F.col("__med")) > cut)
-        ).select(ROW_ID, PART_ID)
+        stats = F.broadcast(stats.select(
+            *[F.col(k).alias(f"{t}_{k}") for k in keys],
+            F.col("__med").alias(f"{t}_med"),
+            F.col("__mad").alias(f"{t}_mad"),
+        ))
+        if keys:
+            cond = _match([(_base(k), F.col(f"{t}_{k}")) for k in keys], False)
+            base = base.join(stats, cond, "left")
+        else:
+            base = base.crossJoin(stats)
+        x = base[self.column].cast("double")
+        center, mad = F.col(f"{t}_med"), F.col(f"{t}_mad")
+        return base, x.isNotNull() & (mad > 0) & (
+            F.abs(x - center) > F.lit(self.k) * F.lit(1.4826) * mad
+        )
 
 
 @dataclass(frozen=True)
@@ -963,11 +954,11 @@ class FunctionalDep(JoinConstraint):
 
     Compiled like :class:`Unique`: ``groupBy(keys)`` with a null-safe
     distinct count of the ``depends`` struct, filtered to ``> 1``, then
-    a join-back to recover every member row of an inconsistent group.
-    ONE shuffle on the key hash (partial/map-side + final agg); the
-    join-back side carries only inconsistent keys, which AQE broadcasts
-    when tiny. NULL dependent values compare null-safely inside the
-    struct (NULL == NULL — a group whose deps are all NULL is
+    left-joined onto the shared base to flag every member row of an
+    inconsistent group. ONE shuffle on the key hash (partial/map-side +
+    final agg); the joined side carries only inconsistent keys, which
+    AQE broadcasts when tiny. NULL dependent values compare null-safely
+    inside the struct (NULL == NULL — a group whose deps are all NULL is
     consistent; NULL-vs-value is a genuine conflict). Wave mode scopes
     the aggregate to ``ctx.full_scope`` and caches the inconsistent-key
     table across waves, exactly like Unique — a dependency violated
@@ -1000,36 +991,19 @@ class FunctionalDep(JoinConstraint):
             f"within each ({', '.join(self.keys)}) group"
         )
 
-    def violations(self, df, ctx):
+    def annotate(self, base, src, ctx):
         keys = list(self.keys)
-        src = ctx.full_scope if ctx.full_scope is not None else df
-        cache_key = ("fd_bad_keys", self.keys, self.depends)
-        bad_keys = (
-            ctx.shared.get(cache_key) if ctx.shared is not None else None
+        # struct() is never NULL, so countDistinct sees every row; struct
+        # equality is null-safe field-wise — the NULL semantics
+        # documented above fall out of UnsafeRow grouping
+        dep = F.struct(*[F.col(c) for c in self.depends])
+        bad_keys = _scope_table(
+            ctx, src, ("fd_bad_keys", self.keys, self.depends),
+            lambda s: s.groupBy(*keys)
+            .agg(F.countDistinct(dep).alias("__ndv"))
+            .filter(F.col("__ndv") > 1),
         )
-        if bad_keys is None:
-            # struct() is never NULL, so countDistinct sees every row;
-            # struct equality is null-safe field-wise — the NULL
-            # semantics documented above fall out of UnsafeRow grouping
-            dep = F.struct(*[F.col(c) for c in self.depends])
-            bad_keys = (
-                src.groupBy(*keys)
-                .agg(F.countDistinct(dep).alias("__ndv"))
-                .filter(F.col("__ndv") > 1)
-                .drop("__ndv")
-            )
-            if ctx.shared is not None and ctx.full_scope is not None:
-                bad_keys = bad_keys.localCheckpoint(eager=False)
-                ctx.shared[cache_key] = bad_keys
-        left = df.select(ROW_ID, PART_ID, *keys)
-        right = bad_keys.select(
-            *[F.col(k).alias(f"__fk_{k}") for k in keys]
-        )
-        cond = None
-        for k in keys:
-            c = left[k].eqNullSafe(right[f"__fk_{k}"])
-            cond = c if cond is None else (cond & c)
-        return left.join(right, cond, "inner").select(ROW_ID, PART_ID)
+        return _join_keys(base, bad_keys, keys, f"__{self.name}")
 
 
 @dataclass

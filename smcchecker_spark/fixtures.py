@@ -53,6 +53,22 @@ _WORDS = (
 ).split()
 
 
+def _generate(
+    spark, schema, n_rows, n_parts, num_tasks, make_row, *args, **kw
+):
+    """``spark.range`` → ``mapInPandas``: every row is built on the
+    executors by ``make_row(i, *args, **kw)`` from its index alone."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [make_row(int(i), *args, **kw) for i in pdf["id"].tolist()]
+            )
+
+    rng_df = spark.range(0, n_rows, numPartitions=num_tasks or max(8, n_parts))
+    return rng_df.mapInPandas(gen, schema)
+
+
 def _image_id(i: int) -> str:
     return f"img{i:012d}"
 
@@ -143,17 +159,10 @@ def generate_images(
 ) -> DataFrame:
     """Distributed deterministic images table. ``clean=True`` plants no
     violations (for throughput benchmarking and PSNR-parity pairs)."""
-
     make = _clean_row if clean else _make_row
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [make(int(i), seed, n_parts) for i in pdf["id"].tolist()]
-            )
-
-    rng_df = spark.range(0, n_rows, numPartitions=num_tasks or max(8, n_parts))
-    return rng_df.mapInPandas(gen, IMAGES_SCHEMA)
+    return _generate(
+        spark, IMAGES_SCHEMA, n_rows, n_parts, num_tasks, make, seed, n_parts
+    )
 
 
 def _clean_row(i: int, seed: int, n_parts: int) -> dict:
@@ -296,18 +305,10 @@ def generate_jpeg_images(
     """Distributed deterministic images table whose lossy payloads are
     REAL baseline JFIF JPEG bitstreams (same input_hint schema as
     :func:`generate_images`)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    _make_jpeg_row(int(i), seed, n_parts, clean)
-                    for i in pdf["id"].tolist()
-                ]
-            )
-
-    rng_df = spark.range(0, n_rows, numPartitions=num_tasks or max(8, n_parts))
-    return rng_df.mapInPandas(gen, IMAGES_SCHEMA)
+    return _generate(
+        spark, IMAGES_SCHEMA, n_rows, n_parts, num_tasks,
+        _make_jpeg_row, seed, n_parts, clean,
+    )
 
 
 def generate_webp_images(
@@ -323,18 +324,10 @@ def generate_webp_images(
     violation rules — :func:`expected_jpeg_flags` — as the JPEG
     fixture). Truncation cuts mid-chunk (→ "truncated WebP chunk");
     bitflip hits byte 2 of "RIFF" (→ unknown-format sniff failure)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    _make_jpeg_row(int(i), seed, n_parts, clean, codec="webp")
-                    for i in pdf["id"].tolist()
-                ]
-            )
-
-    rng_df = spark.range(0, n_rows, numPartitions=num_tasks or max(8, n_parts))
-    return rng_df.mapInPandas(gen, IMAGES_SCHEMA)
+    return _generate(
+        spark, IMAGES_SCHEMA, n_rows, n_parts, num_tasks,
+        _make_jpeg_row, seed, n_parts, clean, codec="webp",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -408,18 +401,10 @@ def generate_wav_rows(
 ) -> DataFrame:
     """Distributed deterministic audio table whose payloads are REAL
     WAV bitstreams (16-bit PCM, mono and stereo, two sample rates)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    _make_wav_row(int(i), seed, n_parts, clean)
-                    for i in pdf["id"].tolist()
-                ]
-            )
-
-    rng_df = spark.range(0, n_rows, numPartitions=num_tasks or max(8, n_parts))
-    return rng_df.mapInPandas(gen, AUDIO_SCHEMA)
+    return _generate(
+        spark, AUDIO_SCHEMA, n_rows, n_parts, num_tasks,
+        _make_wav_row, seed, n_parts, clean,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -497,18 +482,10 @@ def generate_avi_rows(
 ) -> DataFrame:
     """Distributed deterministic video table whose payloads are REAL
     AVI-MJPEG containers (engine-encoded JPEG frames)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    _make_avi_row(int(i), seed, n_parts, clean)
-                    for i in pdf["id"].tolist()
-                ]
-            )
-
-    rng_df = spark.range(0, n_rows, numPartitions=num_tasks or max(8, n_parts))
-    return rng_df.mapInPandas(gen, VIDEO_SCHEMA)
+    return _generate(
+        spark, VIDEO_SCHEMA, n_rows, n_parts, num_tasks,
+        _make_avi_row, seed, n_parts, clean,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -604,18 +581,10 @@ def generate_exif_images(
     """Distributed deterministic images table whose JPEG payloads carry
     planted EXIF metadata per :func:`expected_exif_kind` (input_hint
     schema; decoded pixels are unaffected — APP1 is metadata only)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    _make_exif_row(int(i), seed, n_parts)
-                    for i in pdf["id"].tolist()
-                ]
-            )
-
-    rng_df = spark.range(0, n_rows, numPartitions=num_tasks or max(8, n_parts))
-    return rng_df.mapInPandas(gen, IMAGES_SCHEMA)
+    return _generate(
+        spark, IMAGES_SCHEMA, n_rows, n_parts, num_tasks,
+        _make_exif_row, seed, n_parts,
+    )
 
 
 def generate_progressive_images(
@@ -631,17 +600,7 @@ def generate_progressive_images(
     scan files from :func:`jpegcodec.encode_jpeg_progressive`, planted
     violations per :func:`expected_jpeg_flags` (same rules as the
     baseline fixture)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    _make_jpeg_row(
-                        int(i), seed, n_parts, clean, codec="jpeg_prog"
-                    )
-                    for i in pdf["id"].tolist()
-                ]
-            )
-
-    rng_df = spark.range(0, n_rows, numPartitions=num_tasks or max(8, n_parts))
-    return rng_df.mapInPandas(gen, IMAGES_SCHEMA)
+    return _generate(
+        spark, IMAGES_SCHEMA, n_rows, n_parts, num_tasks,
+        _make_jpeg_row, seed, n_parts, clean, codec="jpeg_prog",
+    )

@@ -206,9 +206,9 @@ class ImageConsistent(Constraint):
     stored metadata columns. phash tolerance in Hamming bits (0 = exact;
     the engine's own codecs are phash-stable across the lossy roundtrip).
 
-    Compiles into the fused row pass like any other constraint — the
-    decode UDF struct is a single ArrowEvalPython stage feeding plain
-    comparisons.
+    Compiles into the suite's one flag projection like any other
+    constraint — the decode UDF struct (shared by flag and message) is a
+    single ArrowEvalPython stage feeding plain comparisons.
 
     ``orientation_aware=True`` accepts stored (w, h) that match the
     DISPLAY dimensions when the payload carries an EXIF orientation of
@@ -338,7 +338,7 @@ class PsnrAtLeast(Constraint):
 # Decode-free image-policy gates. A web-scale curation pass runs these
 # BEFORE paying decode cost: they read only the metadata columns of the
 # input_hint schema (w, h, fmt, bytes — /root/repo/BASELINE.json) and
-# compile to plain JVM comparisons inside the same fused row pass, so a
+# compile to plain JVM comparisons inside the suite's one projection, so a
 # policy-only suite has no Python stage at all. NULL dims are NotNull's
 # business — each predicate is isNotNull-guarded like the scalar checks.
 # ---------------------------------------------------------------------------

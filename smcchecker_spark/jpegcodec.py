@@ -244,7 +244,20 @@ def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]
     return out
 
 
+def _cache_put(cache: dict, key, value, cap: int):
+    """Insert into one of the decoder's process-wide caches, clearing it
+    first when it holds ``cap`` entries. Real corpora repeat a handful of
+    tables and layouts, so the cap only bounds a corpus that mints new
+    tables per image (e.g. per-image optimized Huffman tables)."""
+    if len(cache) >= cap:
+        cache.clear()
+    cache[key] = value
+    return value
+
+
+# each entry is a 2^16 int32 array plus a 65,536-int list (~2.6 MB)
 _LUT_CACHE: dict[tuple, list[int]] = {}
+_LUT_CACHE_MAX = 32
 
 
 def _build_lut(bits: tuple[int, ...], vals: tuple[int, ...], is_dc: bool):
@@ -310,9 +323,9 @@ def _build_lut(bits: tuple[int, ...], vals: tuple[int, ...], is_dc: bool):
         raise ValueError("corrupt JPEG: Huffman BITS/HUFFVAL mismatch")
     # both forms cached: the Python loop indexes the list (list indexing
     # beats np scalars), the native kernel reads the int32 array directly
-    out = (packed.tolist(), packed)
-    _LUT_CACHE[key] = out
-    return out
+    return _cache_put(
+        _LUT_CACHE, key, (packed.tolist(), packed), _LUT_CACHE_MAX
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -727,6 +740,7 @@ class _Frame:
 # paid once per distinct table per process (the arrays are shared and
 # never mutated; the cap guards hostile one-table-per-image corpora)
 _DQT_CACHE: dict[bytes, np.ndarray] = {}
+_DQT_CACHE_MAX = 1024
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
@@ -775,11 +789,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                     raise ValueError("corrupt JPEG: short DQT")
                 nat = _DQT_CACHE.get(raw)
                 if nat is None:
-                    if len(_DQT_CACHE) >= 1024:
-                        _DQT_CACHE.clear()
                     nat = np.zeros(64, dtype=np.int32)
                     nat[ZIGZAG] = np.frombuffer(raw, dtype=np.uint8)
-                    _DQT_CACHE[raw] = nat
+                    _cache_put(_DQT_CACHE, raw, nat, _DQT_CACHE_MAX)
                 qts[tq] = nat
                 p += 65
         elif marker == 0xC4:  # DHT
@@ -1056,9 +1068,10 @@ _ZIGZAG_U8 = np.ascontiguousarray(ZIGZAG.astype(np.uint8))
 # (Annex-K tables, a handful of sampling layouts and progression
 # scripts) — so the numpy/ctypes marshalling (~40 µs) is paid once per
 # distinct structure per process, not once per image. Each entry keeps
-# the arrays it points into alive, LUTs included, so the LUT ids in its
-# key cannot be reused while it exists.
+# the arrays it points into alive, LUT arrays included, so the LUT ids in
+# its key cannot be reused while it exists.
 _SCAN_STRUCT_CACHE: dict[tuple, tuple] = {}
+_SCAN_STRUCT_CACHE_MAX = 64
 
 
 def _native_call_args(native, tmpl, scan_args):
@@ -1099,14 +1112,17 @@ def _native_call_args(native, tmpl, scan_args):
              offs_flat.ctypes.data, offbase.ctypes.data,
              noffs.ctypes.data, _ZIGZAG_U8.ctypes.data),
             (rowstep, colstep, offs_flat, noffs, offbase,
-             [p for t in tmpl for p in t[0]]),
+             [p[1] for t in tmpl for p in t[0] if p is not None]),
         )
-        _SCAN_STRUCT_CACHE[key] = hit
+        _cache_put(_SCAN_STRUCT_CACHE, key, hit, _SCAN_STRUCT_CACHE_MAX)
     lut_ptrs, geometry, _keep = hit
     coef_ptrs = (ctypes.c_void_p * n)(*[t[5] for t in tmpl])
     args = (n, *lut_ptrs, coef_ptrs, *geometry, *scan_args)
 
-    def call(seg_bytes: bytes, mcu: int, seg_end: int, scan_mcux: int):
+    # ``_hold`` keeps the marshalled arrays alive for the closure's life
+    # even if a later insert clears the cache
+    def call(seg_bytes: bytes, mcu: int, seg_end: int, scan_mcux: int,
+             _hold=hit):
         return native(
             seg_bytes, len(seg_bytes), mcu, seg_end, scan_mcux, *args
         )
@@ -1483,6 +1499,7 @@ _QT_I32_CACHE_MAX = 1024
 # frame-geometry marshalling cache: (geo ptr, offs ptr, scratch size)
 # per (bw, bh, sx, sy)-tuple — a corpus repeats a handful of layouts
 _GEO_CACHE: dict[tuple, tuple] = {}
+_GEO_CACHE_MAX = 4096
 
 
 def _reconstruct_native(native, frame, qts):
@@ -1508,11 +1525,10 @@ def _reconstruct_native(native, frame, qts):
         qkey = qts[c["tq"]].tobytes()
         hit = _QT_I32_CACHE.get(qkey)
         if hit is None:
-            if len(_QT_I32_CACHE) >= _QT_I32_CACHE_MAX:
-                _QT_I32_CACHE.clear()
             qt = np.ascontiguousarray(qts[c["tq"]], dtype=np.int32)
-            hit = (qt, qt.ctypes.data)
-            _QT_I32_CACHE[qkey] = hit
+            hit = _cache_put(
+                _QT_I32_CACHE, qkey, (qt, qt.ctypes.data), _QT_I32_CACHE_MAX
+            )
         qt_ptrs[i] = hit[1]
     gkey = tuple(
         (c["bw"], c["bh"], hmax // c["hi"], vmax // c["vi"])
@@ -1520,8 +1536,6 @@ def _reconstruct_native(native, frame, qts):
     )
     ghit = _GEO_CACHE.get(gkey)
     if ghit is None:
-        if len(_GEO_CACHE) >= 4096:
-            _GEO_CACHE.clear()
         geo = np.empty(4 * n, dtype=np.int64)  # bw, bh, sx, sy per comp
         offs = np.empty(n + 1, dtype=np.int64)
         offs[0] = 0
@@ -1533,9 +1547,11 @@ def _reconstruct_native(native, frame, qts):
             geo[4 * i + 2] = fx - 1
             geo[4 * i + 3] = fy - 1
             offs[i + 1] = offs[i] + (bh_ * 8) * (bw_ * 8)
-        ghit = (geo.ctypes.data, offs.ctypes.data, int(offs[n]),
-                geo, offs)
-        _GEO_CACHE[gkey] = ghit
+        ghit = _cache_put(
+            _GEO_CACHE, gkey,
+            (geo.ctypes.data, offs.ctypes.data, int(offs[n]), geo, offs),
+            _GEO_CACHE_MAX,
+        )
     p_geo, p_offs, scratch_n = ghit[0], ghit[1], ghit[2]
     scratch = np.empty(scratch_n, dtype=np.int32)
     out = np.empty((h, w, 3), dtype=np.uint8)

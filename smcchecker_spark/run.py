@@ -3,7 +3,7 @@
 Pipeline (reference lifecycle: /root/reference/proj/main.py:22-404, re-shaped
 for Spark per SURVEY.md §3.1):
 
-1. core tier — compile_suite() → violations DF (one fused scan + join stages)
+1. core tier — compile_suite() → violations DF (one pass: a flag per check)
 2. per-partition verdicts — pass/fail = zero core errors in that partition
    (north_rule: "per-partition pass/fail"; the reference's analogue is the
    per-submission gate at proj/main.py:279 + load gate proj/load.py:23-24)

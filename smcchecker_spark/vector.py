@@ -7,7 +7,7 @@ columns next to the payload, and a training pipeline needs the same
 declarative row-level treatment for them: shape consistency, finiteness
 (NaN/Inf/NULL elements poison a training batch), and an L2-norm sanity
 range (mis-scaled or all-zero vectors). These compile into the same ONE
-fused scan as every other row constraint (compile.py) — pure native
+flag projection as every other constraint (compile.py) — pure native
 higher-order-function Column expressions (``size``/``exists``/
 ``aggregate``), JVM-side, zero Python UDFs, so a suite containing them
 adds no Arrow stage to the plan.

@@ -13,7 +13,7 @@ bounded-cost witness (full per-frame validation is what
 
 Undecodable containers and containers whose EVERY sampled frame is
 corrupt are row-level violations, never task failures. Compiles into
-the same fused single-scan row pass as every constraint; the demux +
+the suite's one flag projection like every constraint; the demux +
 decode struct is one ArrowEvalPython stage.
 """
 

@@ -805,3 +805,24 @@ def test_progressive_fixture_suite_golden(spark):
         fixtures.expected_jpeg_flags,
         ("truncated", "bitflip", "w_off", "phash_off"),
     )
+
+
+def test_lut_cache_bounded_by_distinct_tables(monkeypatch):
+    """A corpus that carries new Huffman tables per image (optimized
+    tables, or hostile input) must not grow the decoder's per-process
+    LUT cache without bound: the cache clears at its cap."""
+    monkeypatch.setattr(jc, "_LUT_CACHE", {})
+    monkeypatch.setattr(jc, "_LUT_CACHE_MAX", 8, raising=False)
+    base = jc.encode_jpeg(_noise(8, 8, seed=5), quality=90)
+    ref = jc.decode_jpeg(base)
+    # valid AC symbols (run << 4 | size, size 1..10), one per image
+    syms = [(run << 4) | size for run in range(16) for size in range(1, 11)]
+    for sym in syms[:50]:
+        # an extra AC table in slot 1, defined before (and so replaced
+        # by) the encoder's own tables: one 2-bit code for ``sym``
+        bits = bytes([0, 1] + [0] * 14)
+        payload = bytes([0x11]) + bits + bytes([sym])
+        dht = b"\xff\xc4" + struct.pack(">H", len(payload) + 2) + payload
+        data = base[:2] + dht + base[2:]
+        assert np.array_equal(jc.decode_jpeg(data), ref)
+        assert len(jc._LUT_CACHE) <= 8

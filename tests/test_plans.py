@@ -3,8 +3,9 @@
 Each test runs ``explain(formatted)`` (or the executed-plan string) and
 asserts structural facts, not timings:
 
-- the fused row-level constraint pass is ONE scan with ZERO exchanges
-  (all checks evaluated in a single whole-stage-codegen'd projection);
+- a row-only suite compiles to ONE scan with ZERO exchanges (all checks
+  evaluated in a single whole-stage-codegen'd projection), and a suite
+  with join-level checks stays one path: no Union of per-check passes;
 - Catalyst column pruning keeps heavy columns (``bytes``) out of the
   parquet ReadSchema when no constraint references them;
 - lookup-RI joins are broadcast (no shuffle of the fact side);
@@ -12,12 +13,14 @@ asserts structural facts, not timings:
   per-partition partial rows cross the exchange).
 """
 
+import os
 import re
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-from smcchecker_spark.compile import compile_row_pass, compile_suite
+from smcchecker_spark.compile import compile_suite
 from smcchecker_spark.constraints import (
     InLookup,
     MaxLength,
@@ -60,7 +63,7 @@ ROW_SUITE = Suite(
 
 def test_fused_row_pass_single_scan_no_exchange(spark, images_parquet):
     df = spark.read.parquet(images_parquet)
-    out = compile_row_pass(df, ROW_SUITE, row_id_col="image_id")
+    out = compile_suite(df, ROW_SUITE, row_id_col="image_id")
     plan = _plan(out)
     assert plan.count("Exchange") == 0, plan
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
@@ -71,10 +74,33 @@ def test_column_pruning_excludes_bytes(spark, images_parquet):
     """A suite with no image constraint must never deserialize ``bytes`` —
     at 10^12 rows the payload column dominates I/O."""
     df = spark.read.parquet(images_parquet)
-    out = compile_row_pass(df, ROW_SUITE, row_id_col="image_id")
+    out = compile_suite(df, ROW_SUITE, row_id_col="image_id")
     plan = _plan(out)
     read_schema = re.search(r"ReadSchema: (.*)", plan)
     assert read_schema and "bytes" not in read_schema.group(1), plan
+
+
+def test_images_suite_single_compile_path(spark, images_parquet):
+    """The deployed suite (configs/images_suite.json: two row checks,
+    Unique, InLookup, ImageConsistent) compiles to ONE path: the input
+    scan plus Unique's key-aggregate scan, no Union of per-check passes,
+    and the decode UDF in one Arrow stage."""
+    from smcchecker_spark import fixtures
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "scripts"))
+    from run_validation import load_suite
+
+    suite, row_id_col, part_id_col = load_suite(
+        os.path.join(root, "configs", "images_suite.json")
+    )
+    ctx = ValidationContext(lookups={"lu_fmt": fixtures.lu_fmt(spark)})
+    out = compile_suite(spark.read.parquet(images_parquet), suite, ctx,
+                        row_id_col=row_id_col, part_id_col=part_id_col)
+    plan = _plan(out)
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2, plan
+    assert "Union" not in plan, plan
+    assert len(re.findall(r"ArrowEvalPython \(\d+\)", plan)) == 1, plan
 
 
 def test_lookup_join_is_broadcast(spark, images_parquet):
