@@ -12,10 +12,12 @@ the driver sorts columns by name before value-hashing.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from smcchecker_spark import clean, stats
 from smcchecker_spark.constraints import (
@@ -46,8 +48,26 @@ from smcchecker_spark.ops import urls as url_ops
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+#: inferred table schemas, keyed by (path, st_mtime_ns, st_size)
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Read one registry table. Inferring a parquet schema runs a Spark
+    job (the footer read), so a table's first read memoizes the inferred
+    ``StructType`` under ``(path, st_mtime_ns, st_size)`` and later reads
+    pass it in: no job. A rewritten file changes the key and is inferred
+    again; a path ``os.stat`` cannot see (an object-store URI) is read
+    without the memo."""
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 # ---------------------------------------------------------------------------

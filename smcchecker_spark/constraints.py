@@ -788,7 +788,9 @@ class MonotonicWithin(JoinConstraint):
     single group can exceed a task's memory). Rows flagged are those
     BELOW their predecessor; NULL values never flag (order gaps are
     NotNull's job) and NULL order_by rows sort first (deterministic:
-    Spark default nulls-first ascending).
+    Spark default nulls-first ascending). Rows tied on ``order_by`` are
+    ordered by the row id, then by ``column``, so the flagged rows do
+    not depend on the physical plan or the input order.
     """
 
     keys: tuple[str, ...] = ()
@@ -824,8 +826,10 @@ class MonotonicWithin(JoinConstraint):
     def annotate(self, base, src, ctx):
         from pyspark.sql import Window
 
+        from smcchecker_spark.compile import ROW_ID
+
         w = Window.partitionBy(*[base[k] for k in self.keys]).orderBy(
-            base[self.order_by]
+            base[self.order_by], base[ROW_ID], base[self.column]
         )
         x = base[self.column]
         prev = F.lag(x).over(w)

@@ -14,6 +14,7 @@ Two tiers, mirroring how ANN is actually deployed on Spark:
 
 from __future__ import annotations
 
+import json
 from typing import Iterator
 
 import numpy as np
@@ -83,15 +84,21 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
 
 
 def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit signature vs fixed hyperplanes → a long bucket id."""
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(float(x)) for x in p])) >= 0, 1).otherwise(0)
-        for p in planes
-    ]
-    acc = F.lit(0).cast("long")
-    for b in bits:
-        acc = acc * 2 + b
-    return acc
+    """Sign-bit signature vs fixed hyperplanes → a long bucket id.
+
+    The plane matrix is ONE constant: an ``array<array<double>>`` parsed
+    from a JSON string literal (shortest-repr floats round-trip exactly)
+    that the optimizer folds. One ``transform`` maps each plane to its
+    sign bit and one ``aggregate`` folds the bits, first plane most
+    significant (``acc * 2 + bit`` from a long 0), so building a
+    signature costs a handful of JVM calls whatever the plane count. A
+    NULL dot product (NULL vector, NULL element, short vector) is bit 0;
+    NaN sorts above every number in Spark, so it is bit 1."""
+    consts = F.from_json(F.lit(json.dumps(planes)), "array<array<double>>")
+    bits = F.transform(
+        consts, lambda p: F.when(dot(vec, p) >= 0, 1).otherwise(0)
+    )
+    return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, b: acc * 2 + b)
 
 
 def lsh_topk(

@@ -9,7 +9,8 @@ on a real cluster this is what ``spark-submit --py-files smcchecker.zip``
 does at launch.
 
 The zip name embeds a content hash so edited code re-ships under a new
-name (Spark ignores re-adds of an identical path).
+name (Spark ignores re-adds of an identical path), and each context is
+sent a given zip once.
 """
 
 from __future__ import annotations
@@ -17,10 +18,14 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import weakref
 import zipfile
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _PKG_NAME = os.path.basename(_PKG_DIR)
+
+#: SparkContext -> the package zips already added to it
+_SHIPPED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _content_hash() -> str:
@@ -62,7 +67,15 @@ def build_pyfiles_zip(dest_dir: str | None = None) -> str:
 
 
 def ensure_shipped(spark) -> str:
-    """Attach the package zip to the session for executor-side imports."""
+    """Attach the package zip to the session for executor-side imports,
+    once per SparkContext and zip: a context that already holds this
+    content-hash zip is not asked again (Spark would only log that the
+    path was added already); edited code hashes to a new zip name and
+    ships."""
     path = build_pyfiles_zip()
-    spark.sparkContext.addPyFile(path)
+    sc = spark.sparkContext
+    shipped = _SHIPPED.setdefault(sc, set())
+    if path not in shipped:
+        sc.addPyFile(path)
+        shipped.add(path)
     return path

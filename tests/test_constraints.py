@@ -457,6 +457,29 @@ def test_monotonic_within(spark):
     assert c.name == "monotonic_v_by_user"
 
 
+def test_monotonic_within_ties_do_not_depend_on_input_order(spark):
+    """Rows tied on order_by are compared in row-id order, so feeding the
+    same group forward and reversed (one partition each, which keeps the
+    input order through the window's sort) flags the same rows."""
+    from collections import Counter
+
+    from smcchecker_spark.constraints import MonotonicWithin
+
+    # one group, every row at seq 1, values rising with the id
+    rows = [(f"r{i}", 1, 1, float(i)) for i in range(6)]
+    c = MonotonicWithin("v", keys=["user"], order_by="seq")
+    suite = Suite(name="t", table="t", constraints=[c])
+
+    def flagged(order):
+        df = make_df(spark, order, "id string, user int, seq int, v double")
+        v = compile_suite(
+            df.coalesce(1), suite, row_id_col="id", part_id_col=None
+        )
+        return Counter(r["row_id"] for r in v.collect())
+
+    assert flagged(rows) == flagged(rows[::-1]) == Counter()
+
+
 # ---------------------------------------------------------------------------
 # RobustOutliers — median/MAD data-derived bounds
 # ---------------------------------------------------------------------------

@@ -94,3 +94,26 @@ def test_query_output_schema_is_scalar_only(spark, sf_dir, name):
         "canonicalizer cannot sort these; stringify (concat_ws/to_json) "
         "or explode before returning"
     )
+
+
+def test_table_read_memo(spark, tmp_path):
+    """A table's second read takes the memoized schema and starts no
+    Spark job; a rewritten file is read with its new schema."""
+    import pandas as pd
+
+    path = tmp_path / "t.parquet"
+    pd.DataFrame({"a": [1, 2, 3]}).to_parquet(path)
+    sc = spark.sparkContext
+    assert entry_mod._t(spark, str(tmp_path), "t").columns == ["a"]
+    sc.setJobGroup("test_table_read_memo", "second read")
+    try:
+        again = entry_mod._t(spark, str(tmp_path), "t")
+        jobs = sc.statusTracker().getJobIdsForGroup("test_table_read_memo")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [] and again.columns == ["a"]
+
+    pd.DataFrame({"a": [1, 2, 3], "b": ["x", "y", "z"]}).to_parquet(path)
+    df = entry_mod._t(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(df.collect()) == [(1, "x"), (2, "y"), (3, "z")]

@@ -506,6 +506,89 @@ def test_embedding_planted_hot_bucket_complete(spark):
     assert all(r["cosine"] >= 0.99 for r in pairs)
 
 
+#: (vec_id, bucket under seed 42, bucket under seed 42 + 7919) for
+#: lsh_signature with embedding_neardup's two 14-plane bands; ids 0-11
+#: are default_rng(2024) 64-d vectors, 100-103 the edge rows built in
+#: _lsh_pin_rows. Computed with the per-coordinate literal builder.
+_LSH_PIN = [
+    (0, 593, 8036), (1, 5585, 5573), (2, 9664, 11752), (3, 13342, 2326),
+    (4, 5993, 16369), (5, 7376, 5952), (6, 10068, 14405), (7, 14864, 2670),
+    (8, 9215, 3532), (9, 8942, 6662), (10, 7595, 5558), (11, 10250, 10840),
+    (100, 0, 0), (101, 0, 0), (102, 16383, 16383), (103, 0, 0),
+]
+
+
+def _lsh_pin_rows():
+    rng = np.random.default_rng(2024)
+    rows = [(i, [float(x) for x in rng.standard_normal(64)]) for i in range(12)]
+    v = [float(x) for x in rng.standard_normal(64)]
+    return rows + [
+        (100, None),                              # null vector
+        (101, v[:5] + [None] + v[6:]),            # null element
+        (102, v[:7] + [float("nan")] + v[8:]),    # NaN: every dot is NaN
+        (103, v[:63]),                            # one element short
+    ]
+
+
+def test_lsh_signature_bucket_pin(spark):
+    """Bucket ids of embedding_neardup's two bands stay what they were,
+    edge rows included: NULL dots give 0 bits, NaN dots 1 bits."""
+    df = spark.createDataFrame(
+        _lsh_pin_rows(), "vec_id long, embedding array<double>"
+    )
+    sig = {
+        s: similarity.lsh_signature(
+            F.col("embedding"), similarity._hyperplanes(64, 14, s)
+        )
+        for s in (42, 42 + 7919)
+    }
+    got = df.select(
+        "vec_id", sig[42].alias("b0"), sig[42 + 7919].alias("b1")
+    ).collect()
+    assert sorted(tuple(r) for r in got) == _LSH_PIN
+
+
+def test_lsh_signature_planes_bit_exact(spark):
+    """The plane constants in the optimized plan equal _hyperplanes'
+    doubles bit for bit (Spark prints doubles in round-trip form)."""
+    import re
+    import struct
+
+    planes = similarity._hyperplanes(64, 14, 42 + 7919)
+    df = spark.createDataFrame([([1.0] * 64,)], "embedding array<double>")
+    q = df.select(similarity.lsh_signature(F.col("embedding"), planes))
+    plan = q._jdf.queryExecution().optimizedPlan().toString()
+    num = r"-?\d+\.\d+(?:E-?\d+)?"
+    got = [
+        [float(x) for x in m.split(",")]
+        for m in re.findall(rf"\[({num}(?:,{num})*)\]", plan)
+    ]
+    assert len(got) == len(planes)
+    assert [struct.pack("<d", x) for r in got for x in r] == [
+        struct.pack("<d", x) for r in planes for x in r
+    ]
+
+
+def test_lsh_signature_build_jvm_calls(spark, monkeypatch):
+    """Building one 14x64 signature crosses into the JVM a bounded number
+    of times: the plane matrix is one constant, not one Column per
+    coordinate (that builder made 5,920 calls)."""
+    from py4j.clientserver import ClientServerConnection
+
+    planes = similarity._hyperplanes(64, 14, 42)
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    similarity.lsh_signature(F.col("embedding"), planes)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 500
+
+
 @pytest.fixture(scope="module")
 def image_df(spark):
     rng = np.random.default_rng(3)

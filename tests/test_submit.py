@@ -77,3 +77,22 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     assert "imageconsistent_bytes" in checks and "notnull_caption" in checks
     verd = spark.read.parquet(str(tmp_path / "out" / "verdicts"))
     assert verd.count() == 3
+
+
+def test_ensure_shipped_once_per_context(spark, monkeypatch, tmp_path):
+    """A context that holds the package zip is not sent it again; edited
+    code (a new content hash) ships under its new name, once."""
+    from smcchecker_spark import package
+
+    sc = spark.sparkContext
+    added = []
+    monkeypatch.setattr(sc, "addPyFile", added.append)
+    package.ensure_shipped(spark)  # get_spark already shipped this zip
+    package.ensure_shipped(spark)
+    assert added == []
+
+    monkeypatch.setattr(package, "_content_hash", lambda: "edited000000")
+    monkeypatch.setattr(package.tempfile, "gettempdir", lambda: str(tmp_path))
+    path = package.ensure_shipped(spark)
+    package.ensure_shipped(spark)
+    assert added == [path] and "edited000000" in path

@@ -5,6 +5,9 @@ at the given sf dir, then compares row count, column names, and an
 order-insensitive value multiset (columns sorted by name, values
 stringified). Usage: python tools/check_entry.py [sf_dir] [q1,q2,...]
 (the optional second arg restricts to named queries — fast iteration).
+Each line also gives the seconds spent building the query's DataFrame
+and the Spark jobs started while building it (schema reads, eager
+checkpoints, collects), and a total line sums them.
 """
 
 from __future__ import annotations
@@ -51,17 +54,30 @@ def main(sf_dir: str, only=None) -> int:
             raise SystemExit(f"unknown queries: {missing}")
         qs = {n: qs[n] for n in only}
     failures = []
+    sc = spark.sparkContext
+    build_s_sum, build_jobs_sum, built = 0.0, 0, 0
     for name, fn in qs.items():
+        # the query's jobs run under its own group, so the jobs started
+        # while its DataFrame is built can be told from the run's
+        group = f"check_entry.{name}"
+        sc.setJobGroup(group, name)
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            df = fn(spark, sf_dir)
+            build_s = time.time() - t0
+            build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            sdf = df.toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error: {e}")
             continue
         el = time.time() - t0
+        build_s_sum += build_s
+        build_jobs_sum += build_jobs
+        built += 1
+        timing = f"{el:.1f}s; build {build_s:.2f}s, {build_jobs} jobs"
         if name not in oracles:
-            print(f"ok   {name}: rows-only, {len(sdf)} rows ({el:.1f}s)")
+            print(f"ok   {name}: rows-only, {len(sdf)} rows ({timing})")
             continue
         try:
             odf = con.sql(oracles[name]).df()
@@ -91,8 +107,12 @@ def main(sf_dir: str, only=None) -> int:
                 {"spark": a[neq].head(3), "oracle": b[neq].head(3)}, axis=1
             ).to_string())
             continue
-        print(f"ok   {name}: {len(sdf)} rows match ({el:.1f}s)")
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} ok; failures: {failures}")
+        print(f"ok   {name}: {len(sdf)} rows match ({timing})")
+    print(
+        f"\nbuild total: {build_s_sum:.1f}s, {build_jobs_sum} jobs "
+        f"over {built} queries"
+    )
+    print(f"{len(qs) - len(failures)}/{len(qs)} ok; failures: {failures}")
     return 1 if failures else 0
 
 
