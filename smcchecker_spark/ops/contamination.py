@@ -21,6 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from smcchecker_spark.ops.dedup import (
+    check_pigeonhole,
+    combo_band_structs,
+    shingles_udf,
+)
 
 
 def benchmark_shingles(
@@ -38,8 +43,6 @@ def benchmark_shingles(
     non-breaking space (ubiquitous in scraped HTML) would otherwise
     shingle differently on the two sides and its verbatim copy in the
     corpus would sail through undetected."""
-    from smcchecker_spark.ops.dedup import shingles_udf
-
     return (
         bench.select(F.explode(shingles_udf(k)(F.col(text_col))).alias("s"))
         .filter(F.col("s") != "")
@@ -66,8 +69,6 @@ def shingle_overlap(
 
     ``df`` ids must be unique. See module docstring for the plan shape.
     """
-    from smcchecker_spark.ops.dedup import shingles_udf
-
     bs = benchmark_shingles(bench, bench_text_col, k).withColumn(
         "hit", F.lit(1)
     )
@@ -167,25 +168,17 @@ def phash_overlap(
     corpus as candidates once the benchmark covers most chunk values;
     32-bit compound keys keep the candidate set ≈ the true match set.
     """
-    from smcchecker_spark.ops.dedup import (
-        check_pigeonhole, chunk_band_structs, combo_band_structs,
-    )
-
     check_pigeonhole(max_hamming, chunks)
-    band_chunks = chunks - max_hamming
     bench_ph = bench_phash_col or phash_col
 
     def bands(df: DataFrame, ph: str, keep: list) -> DataFrame:
         h = F.col(ph).cast("long")
-        b = (
-            combo_band_structs(h, chunks, band_chunks)
-            if band_chunks >= 2
-            else chunk_band_structs(h, chunks)
-        )
         return df.select(
             *keep,
             h.alias("__h"),
-            F.explode(b).alias("cc"),
+            F.explode(
+                combo_band_structs(h, chunks, chunks - max_hamming)
+            ).alias("cc"),
         ).select(*keep, "__h", "cc.chunk", "cc.val")
 
     bench_bands = bands(bench, bench_ph, []).select(

@@ -12,6 +12,15 @@ Four families, all shuffle-disciplined for 10^12-row inputs:
   chunk buckets (pigeonhole: d bit flips can't touch all d+1 chunks).
 - **embedding cosine**: exact pair cosine over candidate buckets from
   random-hyperplane signatures (see similarity.py).
+
+Each pairing step has one implementation here, shared by every near-dup
+op in ``ops/`` (and the streaming gates through them): one banding
+projection for 64-bit fingerprints (:func:`combo_band_structs`), one
+bucket grouping (:func:`group_members`), one chunk-block join
+(:func:`_chunk_block_join`) serving both the self shape (in-corpus
+pairing, SemDeDup cells) and the one-sided shape (the incremental
+new × old probes), and one candidate-pair attach
+(:func:`attach_pair_values`).
 """
 
 from __future__ import annotations
@@ -181,56 +190,91 @@ def minhash_signatures(
     )
 
 
-def _chunked_members(
-    grouped: DataFrame,
-    key_cols: list[str],
-    chunk: int,
-    member_col: str = "ms",
-    idx_name: str = "ci",
-    arr_name: str = "ca",
+def group_members(
+    members: DataFrame, key_cols: list[str], member_col: str = "m"
 ) -> DataFrame:
-    """Slice each bucket's (sorted) member array into ``chunk``-sized
-    sub-arrays: (key_cols..., idx_name, arr_name) rows — the common
-    prelude of every hot-bucket guard (self-join pairing, one-sided
-    incremental probe)."""
-    last_chunk = F.ceil(F.size(member_col) / F.lit(chunk)).cast("int") - 1
-    return grouped.select(
-        *key_cols,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), last_chunk),
-                lambda i: F.slice(member_col, i * chunk + 1, chunk),
-            )
-        ).alias(idx_name, arr_name),
+    """(key_cols..., ms): each bucket's members as one SORTED array —
+    the one bucket grouping behind every pairing here. NULL bucket keys
+    are filtered BEFORE the aggregate — load-bearing for plan reuse, not
+    just semantics: the hot-branch join of :func:`bucketed_pairs` pushes
+    isnotnull(key) below the aggregate on its lineage copy, which
+    de-canonicalizes it from the small branch's copy and makes Spark run
+    the scan (+ any upstream signature UDF) once PER BRANCH. Filtering
+    here keeps every consumer canonically identical, so ReuseExchange
+    collapses them onto ONE shuffle (locked by tests/test_plans.py).
+    Null bucket keys can't pair meaningfully anyway."""
+    for k in key_cols:
+        members = members.filter(F.col(k).isNotNull())
+    return members.groupBy(*key_cols).agg(
+        F.array_sort(F.collect_list(member_col)).alias("ms")
     )
 
 
 def _chunk_block_join(
-    grouped: DataFrame, key_cols: list[str], chunk: int
+    grouped: DataFrame,
+    key_cols: list[str],
+    chunk: int,
+    build: DataFrame | None = None,
 ) -> DataFrame:
-    """Chunked self-join of collected buckets: input rows are
-    (key_cols..., ms: sorted member array); output rows are
-    (ci, cj, ca, cb) chunk-index/chunk-array block pairs with ci ≤ cj
-    within each bucket. Chunks slice the SORTED member array, so all
-    cross-block pairs (a from ca, b from cb, a < b) enumerate each
-    bucket pair exactly once. The probe side repartitions on
-    (keys, ci) — one bucket's O(m²) pairing spreads across tasks — and
-    the build side broadcasts only the chunk arrays. Shared by the
-    struct-pair explode (``bucketed_pairs`` hot path) and the blocked
-    numpy scorers (``similarity.semantic_dup_pairs``)."""
-    chunked = _chunked_members(grouped, key_cols, chunk)
-    probe = chunked.repartition(*key_cols, "ci")
-    build = F.broadcast(
-        chunked.select(
+    """Chunked join of collected buckets (:func:`group_members` rows):
+    each sorted member array is sliced into ``chunk``-sized arrays, and
+    the output rows are (ci, cj, ca, cb) chunk-index/chunk-array block
+    pairs within each bucket. The probe side repartitions on (keys, ci)
+    — one bucket's O(m²) pairing spreads across tasks — and the build
+    side broadcasts only the chunk arrays, so a block row holds at most
+    chunk² pairs. Two shapes:
+
+    - ``build=None``: the SELF join, ci ≤ cj. Chunks slice a SORTED
+      array, so the cross-block pairs with a < b enumerate each bucket
+      pair exactly once (``bucketed_pairs`` hot path, the blocked numpy
+      scorer of ``similarity.semantic_dup_pairs``).
+    - ``build`` given: the ONE-SIDED join — every chunk of ``grouped``
+      meets every chunk of ``build`` in its bucket (the incremental
+      new × old probes: index on the probe side, batch broadcast)."""
+
+    def chunked(g: DataFrame) -> DataFrame:
+        last = F.ceil(F.size("ms") / F.lit(chunk)).cast("int") - 1
+        return g.select(
+            *key_cols,
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), last),
+                    lambda i: F.slice("ms", i * chunk + 1, chunk),
+                )
+            ).alias("ci", "ca"),
+        )
+
+    left = chunked(grouped)
+    right = left if build is None else chunked(build)
+    right = F.broadcast(
+        right.select(
             *[F.col(k).alias(f"{k}__r") for k in key_cols],
             F.col("ci").alias("cj"),
             F.col("ca").alias("cb"),
         )
     )
-    cond = F.col("ci") <= F.col("cj")
-    for k in key_cols:
-        cond = cond & (F.col(k) == F.col(f"{k}__r"))
-    return probe.join(build, cond)
+    cond = [F.col(k) == F.col(f"{k}__r") for k in key_cols]
+    if build is None:
+        cond.append(F.col("ci") <= F.col("cj"))
+    return left.repartition(*key_cols, "ci").join(right, cond)
+
+
+def _block_pairs(xs: str, ys: str) -> Column:
+    """``array<struct<a, b>>``: the member pairs (a from ``xs``, b from
+    ``ys``) with a < b (struct order = id order) of one collected bucket
+    or one self-join block of :func:`_chunk_block_join`. xs == ys gives
+    the strict upper triangle; sorted disjoint xs < ys pass whole."""
+    return F.flatten(
+        F.transform(
+            F.col(xs),
+            lambda a: F.filter(
+                F.transform(
+                    F.col(ys), lambda b: F.struct(a.alias("a"), b.alias("b"))
+                ),
+                lambda p: p["a"] < p["b"],
+            ),
+        )
+    )
 
 
 def bucketed_pairs(
@@ -238,7 +282,6 @@ def bucketed_pairs(
     key_cols: list[str],
     member_col: str = "m",
     hot_bucket: int = 256,
-    max_bucket: int | None = None,
     dedup_pairs: bool = True,
 ) -> DataFrame:
     """Skew-guarded all-pairs within buckets — the shared pairing stage
@@ -256,14 +299,13 @@ def bucketed_pairs(
     with ≤ ``hot_bucket`` members pair inside their collected array
     (fast path — at most ~hot_bucket²/2 structs per row). Larger buckets
     are split into sorted ``hot_bucket``-sized chunks and paired
-    chunk×chunk through a broadcast self-join: the chunk table carries
-    only the member structs, and repartitioning the probe side spreads
-    one bucket's quadratic pairing across tasks instead of one row/one
-    task. Chunks slice a SORTED member array, so cross-chunk pairs
-    satisfy a < b by construction and no pair is produced twice within
-    a bucket. ``max_bucket`` (default off) additionally hard-caps bucket
-    membership — a LOSSY guard for pathological corpora where even
-    distributed O(m²) is unaffordable.
+    chunk×chunk through the broadcast self-join of
+    :func:`_chunk_block_join`: the chunk table carries only the member
+    structs, and repartitioning the probe side spreads one bucket's
+    quadratic pairing across tasks instead of one row/one task. Chunks
+    slice a SORTED member array, so cross-chunk pairs satisfy a < b by
+    construction and no pair is produced twice within a bucket. Every
+    member of every bucket is paired — nothing is capped.
 
     ``dedup_pairs=False`` skips the final cross-bucket ``dropDuplicates``
     — which is a SHUFFLE of every pair struct. A pair can repeat only
@@ -275,51 +317,19 @@ def bucketed_pairs(
     should also filter/score pairs in the projection right after this
     returns, while the pairs are still pre-shuffle.
     """
-    # Explicit null-key filter BEFORE the aggregate — load-bearing for
-    # plan reuse, not just semantics: the hot-branch join pushes
-    # isnotnull(key) below the aggregate on its lineage copy, which
-    # de-canonicalizes it from the small branch's copy and makes Spark
-    # run the scan (+ any upstream signature UDF) once PER BRANCH.
-    # Filtering here keeps all three consumers (small, hot probe, hot
-    # build) canonically identical, so ReuseExchange collapses them onto
-    # ONE shuffle — executed plans show a single upstream UDF pass
-    # (locked by tests/test_plans.py). Null bucket keys can't pair
-    # meaningfully anyway.
-    for k in key_cols:
-        members = members.filter(F.col(k).isNotNull())
-    grouped = (
-        members.groupBy(*key_cols)
-        .agg(F.array_sort(F.collect_list(member_col)).alias("ms"))
-        .filter(F.size("ms") > 1)
+    grouped = group_members(members, key_cols, member_col).filter(
+        F.size("ms") > 1
     )
-    if max_bucket is not None:
-        grouped = grouped.withColumn("ms", F.slice("ms", 1, max_bucket))
-
-    def _ordered_pairs(xs, ys):
-        # all (a from xs, b from ys) structs with a < b; xs == ys gives
-        # the strict upper triangle, disjoint sorted xs < ys passes all
-        return F.flatten(
-            F.transform(
-                xs,
-                lambda a: F.filter(
-                    F.transform(
-                        ys, lambda b: F.struct(a.alias("a"), b.alias("b"))
-                    ),
-                    lambda p: p["a"] < p["b"],
-                ),
-            )
-        )
-
     small = grouped.filter(F.size("ms") <= hot_bucket)
     hot = grouped.filter(F.size("ms") > hot_bucket)
 
     small_pairs = small.select(
-        F.explode(_ordered_pairs(F.col("ms"), F.col("ms"))).alias("p")
+        F.explode(_block_pairs("ms", "ms")).alias("p")
     ).select("p.a", "p.b")
 
     hot_pairs = (
         _chunk_block_join(hot, key_cols, hot_bucket)
-        .select(F.explode(_ordered_pairs(F.col("ca"), F.col("cb"))).alias("p"))
+        .select(F.explode(_block_pairs("ca", "cb")).alias("p"))
         .select("p.a", "p.b")
     )
     out = small_pairs.unionByName(hot_pairs)
@@ -361,40 +371,49 @@ def banded_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("id", "bb.band", "bb.bucket")
 
 
-def pair_est_jaccard(
-    pairs: DataFrame, sigs: DataFrame, num_hashes: int
+def attach_pair_values(
+    pairs: DataFrame, values: DataFrame, value_col: str
 ) -> DataFrame:
-    """est_jaccard = fraction of matching signature components, attached
-    to (id_a, id_b) candidate pairs from an (id, sig) table that covers
-    (at least) the candidate ids. ONE join: pairs are melted to
-    (id_a, id_b, id), both sides attach through the same broadcast join,
-    and a regroup collects the two signatures per pair (est is
-    symmetric, so collect order is irrelevant). Pairs whose member is
-    absent from ``sigs`` are dropped (inner-join semantics). Callers
-    pass a PRUNED ``sigs`` (candidates << corpus) — this function adds
-    no pruning of its own."""
+    """(id_a, id_b, vs): the candidate-pair attach behind est-Jaccard,
+    exact shingle-Jaccard and pair cosine. Pairs are melted to
+    (id_a, id_b, id) and BROADCAST (candidates << corpus after blocking,
+    and a materialized candidate table carries no size stats), joined
+    ONCE on ``id`` against ``values`` (id, value_col), and regrouped:
+    ``vs`` holds both members' values in no set order, so scores must
+    be symmetric. A pair with a member missing from ``values`` is
+    dropped (inner-join semantics). ``values`` ids must be unique and
+    ``pairs`` duplicate-free — a duplicate collects >2 values and drops
+    the pair. Callers prune ``values`` to candidate ids themselves."""
     melted = F.broadcast(
         pairs.select(
             "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
         )
     )
-    sigs2 = (
-        melted.join(sigs, "id")
+    return (
+        melted.join(values, "id")
         .groupBy("id_a", "id_b")
-        .agg(F.collect_list("sig").alias("sigs"))
-        .filter(F.size("sigs") == 2)
+        .agg(F.collect_list(value_col).alias("vs"))
+        .filter(F.size("vs") == 2)
     )
+
+
+def pair_est_jaccard(
+    pairs: DataFrame, sigs: DataFrame, num_hashes: int
+) -> DataFrame:
+    """est_jaccard = fraction of matching signature components, attached
+    to (id_a, id_b) candidate pairs from a PRUNED (id, sig) table that
+    covers (at least) the candidate ids."""
     matches = F.size(
         F.filter(
             F.zip_with(
-                F.element_at("sigs", 1),
-                F.element_at("sigs", 2),
+                F.element_at("vs", 1),
+                F.element_at("vs", 2),
                 lambda x, y: x == y,
             ),
             lambda v: v,
         )
     )
-    return sigs2.select(
+    return attach_pair_values(pairs, sigs, "sig").select(
         "id_a",
         "id_b",
         F.round(matches / F.lit(num_hashes), 6).alias("est_jaccard"),
@@ -409,7 +428,6 @@ def minhash_candidate_pairs(
     bands: int = 8,
     shingle_k: int = 3,
     min_parallelism: int | None = None,
-    max_bucket: int | None = None,
     with_est: bool = True,
     hot_bucket: int = 256,
 ) -> DataFrame:
@@ -426,7 +444,7 @@ def minhash_candidate_pairs(
 
     Skew: in-bucket pairing routes through ``bucketed_pairs`` — the
     shared hot-bucket-chunked, broadcast-spread O(m²) guard (see its
-    docstring). ``hot_bucket`` / ``max_bucket`` pass through.
+    docstring). ``hot_bucket`` passes through.
 
     ``with_est=True`` additionally scores est_jaccard = fraction of
     matching signature components: the candidate set is materialized
@@ -446,8 +464,7 @@ def minhash_candidate_pairs(
     )
 
     pairs = bucketed_pairs(
-        banded, ["band", "bucket"],
-        hot_bucket=hot_bucket, max_bucket=max_bucket,
+        banded, ["band", "bucket"], hot_bucket=hot_bucket
     ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     if not with_est:
         return pairs
@@ -465,7 +482,6 @@ def minhash_candidate_pairs(
     sig2 = minhash_signatures(
         pruned, id_col, text_col, num_hashes, shingle_k, min_parallelism
     )
-    # both signatures attach through ONE join (melt → join → regroup)
     return pair_est_jaccard(pairs, sig2, num_hashes)
 
 
@@ -476,37 +492,26 @@ def exact_jaccard_pairs(
     text_col: str = "text",
     shingle_k: int = 3,
     min_parallelism: int | None = None,
-    broadcast_pairs: bool = True,
 ) -> DataFrame:
     """Exact shingle-Jaccard for given (id_a, id_b) candidate pairs —
     the verification stage after LSH blocking. The shingle UDF runs only
-    on rows that appear in some candidate pair (semi-join prune first:
-    candidates << corpus after blocking, so at corpus scale this turns a
-    full-table Arrow pass into a sliver), and the shingle table is
-    referenced exactly ONCE: pairs are melted to (id_a, id_b, id), both
-    sides attach through one join, and a regroup collects the two
-    shingle sets per pair (Jaccard is symmetric, so collect order is
-    irrelevant). The alternative two-join attach would scan + shingle
-    the corpus twice. ``pairs`` is referenced twice (prune + melt) —
-    materialize it first if it is expensive to recompute (the
-    ``ngram_jaccard_dedup`` path checkpoints it).
-
-    ``broadcast_pairs`` (default True): candidates << corpus is the
-    point of LSH blocking, and a materialized candidate table carries no
-    size stats (LogicalRDD defaults to "huge"), so without the hint the
-    prune semi-join plans as a sort-merge that shuffles the WHOLE corpus
-    before AQE can demote it. Pass False only for giant pair inputs.
+    on rows that appear in some candidate pair (BROADCAST semi-join
+    prune: candidates << corpus after blocking, so at corpus scale this
+    turns a full-table Arrow pass into a sliver; without the hint the
+    prune plans as a sort-merge that shuffles the whole corpus), and the
+    shingle table is referenced ONCE (:func:`attach_pair_values`).
+    ``pairs`` is referenced twice (prune + attach) — materialize it
+    first if it is expensive to recompute (the ``ngram_jaccard_dedup``
+    path checkpoints it).
 
     ``pairs`` is deduplicated on entry (cheap — candidates are tiny
     after blocking): a duplicated (id_a, id_b) row would otherwise make
     the regroup collect >2 shingle sets and silently DROP the pair.
     Doc ids in ``df`` must be unique for the same reason."""
     pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    cand_ids = pairs.select(
-        F.explode(F.array("id_a", "id_b")).alias("id")
-    ).distinct()
-    if broadcast_pairs:
-        cand_ids = F.broadcast(cand_ids)
+    cand_ids = F.broadcast(
+        pairs.select(F.explode(F.array("id_a", "id_b")).alias("id")).distinct()
+    )
     sh = (
         _ensure_parallelism(df, min_parallelism)
         .join(cand_ids, F.col(id_col) == cand_ids["id"], "left_semi")
@@ -515,24 +520,11 @@ def exact_jaccard_pairs(
             _shingles_udf(shingle_k)(F.col(text_col)).alias("sh"),
         )
     )
-    melted = pairs.select(
-        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
-    )
-    if broadcast_pairs:
-        melted = F.broadcast(melted)
-    j = (
-        melted.join(sh, "id")
-        .groupBy("id_a", "id_b")
-        .agg(F.collect_list("sh").alias("shs"))
-        # a pair whose member is absent from df collects <2 sets; the
-        # two-join formulation dropped such pairs (inner join) — keep that
-        .filter(F.size("shs") == 2)
-    )
-    sh_a = F.element_at("shs", 1)
-    sh_b = F.element_at("shs", 2)
+    sh_a = F.element_at("vs", 1)
+    sh_b = F.element_at("vs", 2)
     inter = F.size(F.array_intersect(sh_a, sh_b))
     union = F.size(F.array_union(sh_a, sh_b))
-    return j.select(
+    return attach_pair_values(pairs, sh, "sh").select(
         "id_a",
         "id_b",
         F.round(inter / F.greatest(union, F.lit(1)), 6).alias("jaccard"),
@@ -677,36 +669,18 @@ def check_pigeonhole(max_hamming: int, chunks: int) -> None:
         )
 
 
-def chunk_band_structs(h: Column, chunks: int) -> Column:
-    """``array<struct<chunk:int, val:long>>`` — a 64-bit fingerprint
-    split into ``chunks`` contiguous (64/chunks)-bit values. The ONE
-    banding projection behind every pigeonhole-blocked Hamming search
-    (:func:`hamming_near_dups` pair blocking, contamination.phash_overlap
-    benchmark matching); keeping it single-sourced means chunk/width/mask
-    derivation and shiftright sign handling can never diverge between
-    the two."""
-    assert 64 % chunks == 0
-    width = 64 // chunks
-    mask = (1 << width) - 1
-    return F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright(h, c * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("val"),
-            )
-            for c in range(chunks)
-        ]
-    )
-
-
 def combo_band_structs(
     h: Column, chunks: int, band_chunks: int
 ) -> Column:
     """``array<struct<chunk:int, val:long>>`` — one entry per
     combination of ``band_chunks`` of the fingerprint's ``chunks``
-    chunk values, val = their concatenation, chunk = combination index.
+    (64/chunks)-bit chunk values, val = their concatenation, chunk =
+    combination index. The ONE banding projection behind every
+    pigeonhole-blocked Hamming search (:func:`hamming_near_dups`, the
+    persisted phash index in ``ops.incremental``, and
+    ``contamination.phash_overlap``), so chunk/width/mask derivation and
+    shiftright sign handling cannot diverge between them.
+    ``band_chunks=1`` is single-chunk banding: entry c is chunk c.
 
     WHY (the 10^12-row part): single-chunk banding keys on 64/chunks
     bits. At chunks=4 that is a 16-bit key space — 65k buckets per
@@ -751,7 +725,6 @@ def hamming_near_dups(
     max_hamming: int = 3,
     chunks: int = 4,
     hot_bucket: int = 256,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Pairs with Hamming distance ≤ ``max_hamming`` between stored
     64-bit fingerprints → (id_a, id_b, hamming), blocked on
@@ -774,23 +747,17 @@ def hamming_near_dups(
     candidate pairs grow quadratically; compound bands keep them
     linear. Recall stays exact by the same pigeonhole argument."""
     check_pigeonhole(max_hamming, chunks)
-    band_chunks = chunks - max_hamming
     sh = sigs.select(
         F.col(id_col).alias("id"), F.col(hash_col).cast("long").alias("h")
     )
-    bands = (
-        combo_band_structs(F.col("h"), chunks, band_chunks)
-        if band_chunks >= 2
-        else chunk_band_structs(F.col("h"), chunks)
-    )
+    bands = combo_band_structs(F.col("h"), chunks, chunks - max_hamming)
     chunked = sh.select(
         # id FIRST: struct order (= pair order a < b) is id order
         F.struct(F.col("id"), F.col("h")).alias("m"),
         F.explode(bands).alias("cc"),
     ).select("m", "cc.chunk", "cc.val")
     pairs = bucketed_pairs(
-        chunked, ["chunk", "val"],
-        hot_bucket=hot_bucket, max_bucket=max_bucket,
+        chunked, ["chunk", "val"], hot_bucket=hot_bucket
     ).select(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
@@ -806,7 +773,6 @@ def phash_near_dups(
     max_hamming: int = 3,
     chunks: int = 4,
     hot_bucket: int = 256,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """IMAGE near-duplicates by stored perceptual hash: pairs whose
     phash Hamming distance is ≤ ``max_hamming`` (re-encodes, mild
@@ -819,7 +785,7 @@ def phash_near_dups(
     verify. Feed the output to :func:`connected_components` /
     :func:`resolve_duplicates` exactly like the text pair ops."""
     return hamming_near_dups(
-        df, id_col, phash_col, max_hamming, chunks, hot_bucket, max_bucket
+        df, id_col, phash_col, max_hamming, chunks, hot_bucket
     )
 
 
@@ -831,7 +797,6 @@ def simhash_near_dups(
     chunks: int = 4,
     min_parallelism: int | None = None,
     hot_bucket: int = 256,
-    max_bucket: int | None = None,
     token_hash: str = "fnv",
 ) -> DataFrame:
     """Pairs with simhash Hamming distance ≤ d — ONE simhash-UDF pass,
@@ -842,7 +807,7 @@ def simhash_near_dups(
         min_parallelism=min_parallelism, token_hash=token_hash,
     )
     return hamming_near_dups(
-        sh, "id", "simhash", max_hamming, chunks, hot_bucket, max_bucket
+        sh, "id", "simhash", max_hamming, chunks, hot_bucket
     )
 
 
@@ -879,8 +844,9 @@ def connected_components(
 
     Hybrid execution (round 5): the edge set is ALREADY a bounded
     sliver — it's the verified near-dup pairs, orders of magnitude
-    smaller than the corpus — and its exact size is known for free
-    right after the eager checkpoint. At or below ``driver_max_edges``
+    smaller than the corpus — and ONE bounded collect of at most
+    ``driver_max_edges`` + 1 edges tells which regime it is in (no
+    checkpoint, no separate count). At or below ``driver_max_edges``
     (default 500k edges ≈ a few MB of id pairs) the component labels
     come from a driver-side union-find: identical labels (component =
     min id — the star-forest fixpoint computes exactly this), zero of
@@ -938,11 +904,11 @@ def connected_components(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    # checkpointed → count scans cached partitions, no recompute
-    if edges.count() <= driver_max_edges:
-        rows = edges.collect()
+    # ONE bounded collect decides the path: a full sliver fits the
+    # driver; one row past the bound means the distributed loop
+    rows = edges.limit(driver_max_edges + 1).collect()
+    if len(rows) <= driver_max_edges:
         parent: dict = {}
 
         def find(x):
@@ -978,6 +944,7 @@ def connected_components(
                 ]
             ),
         )
+    edges = edges.localCheckpoint(eager=True)
     fp = fingerprint(edges)
     for _ in range(max_iter):
         # ONE large/small round per checkpoint: each star() references its
@@ -1080,7 +1047,6 @@ def image_near_dups(
     max_hamming: int = 3,
     chunks: int = 4,
     hot_bucket: int = 256,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """IMAGE near-duplicates for tables WITHOUT a stored phash column:
     ONE Arrow-batched decode pass (image.py's decode-facts UDF — the
@@ -1091,8 +1057,6 @@ def image_near_dups(
     never read again after the signature pass. Undecodable payloads are
     excluded from pairing (they have no perceptual content; the
     validation suite is where they get flagged)."""
-    from pyspark.sql import functions as F  # noqa: F811 (local clarity)
-
     from smcchecker_spark.image import decode_facts_udf
 
     facts = decode_facts_udf()(F.col(bytes_col))
@@ -1102,5 +1066,5 @@ def image_near_dups(
         .select(id_col, F.col("__f.phash").alias("__phash"))
     )
     return hamming_near_dups(
-        sigs, id_col, "__phash", max_hamming, chunks, hot_bucket, max_bucket
+        sigs, id_col, "__phash", max_hamming, chunks, hot_bucket
     )

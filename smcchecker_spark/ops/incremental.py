@@ -22,7 +22,11 @@ never fully shuffles, and old docs' signatures are never recomputed
 (est-scoring reads the stored signature table, pruned to candidates).
 Hot buckets (boilerplate) are chunked on BOTH sides, so one bucket's
 pairing spreads across tasks bounded by chunk^2 structs per row — the
-same guard discipline as ``dedup.bucketed_pairs``.
+same guard discipline as ``dedup.bucketed_pairs``. Both probes (MinHash
+bands and phash chunk bands) run one new x old pairing,
+:func:`_new_old_pairs`: ``dedup.group_members`` on each side, then the
+one-sided shape of ``dedup._chunk_block_join`` — the same chunk-block
+join whose self shape pairs buckets inside one corpus.
 
 Regime: intended for new << old (the incremental premise). The batch's
 per-bucket member arrays are broadcast to spread hot OLD buckets without
@@ -37,13 +41,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smcchecker_spark.ops.dedup import (
-    _chunked_members,
+    _chunk_block_join,
     banded_rows,
     bucketed_pairs,
+    check_pigeonhole,
+    combo_band_structs,
     exact_jaccard_pairs,
+    group_members,
+    hamming_near_dups,
     minhash_signatures,
     pair_est_jaccard,
 )
+from smcchecker_spark.tables import write_labeled
 
 _META_SCHEMA = "num_hashes int, bands int, shingle_k int"
 
@@ -144,23 +153,58 @@ def append_to_minhash_index(
         meta["shingle_k"],
         min_parallelism,
     ).localCheckpoint(eager=True)
-    label = ingest_label if ingest_label is not None else "append"
-    mode = "overwrite" if ingest_label is not None else "append"
-
-    def _write(df: DataFrame, parts: list[str], dest: str) -> None:
-        (
-            df.withColumn("ingest", F.lit(label))
-            .write.mode(mode)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*parts)
-            .parquet(dest)
-        )
-
-    _write(sig_new, ["ingest"], f"{path}/sigs")
-    _write(
+    label, mode = _ingest(ingest_label)
+    write_labeled(sig_new, f"{path}/sigs", "ingest", label, mode=mode)
+    write_labeled(
         banded_rows(sig_new, meta["num_hashes"], meta["bands"]),
-        ["ingest", "band"],
-        f"{path}/banded",
+        f"{path}/banded", "ingest", label, ["band"], mode,
+    )
+
+
+def _ingest(ingest_label: str | None) -> tuple[str, str]:
+    """(label, write mode) of an index append: a labeled, replay-safe
+    overwrite, or a plain append under ``ingest=append``."""
+    if ingest_label is None:
+        return "append", "append"
+    return ingest_label, "overwrite"
+
+
+def _new_old_pairs(
+    banded_new: DataFrame,
+    old: DataFrame,
+    key_cols: list[str],
+    member: list[str],
+    hot_bucket: int,
+) -> DataFrame:
+    """The new x old half of both probes: (a, b) pairs (a < b) of
+    ``member`` structs, id first, for every batch row and every INDEXED
+    row sharing a bucket. The batch's distinct bucket keys broadcast
+    into a left-semi prune of the index scan (map-side — the index
+    never shuffles in full); both sides group per bucket and meet in
+    the one-sided ``dedup._chunk_block_join``, so a hot old bucket's
+    pairing spreads across tasks at ≤ hot_bucket^2 structs per row."""
+    keys = F.broadcast(banded_new.select(*key_cols).distinct())
+    m = F.struct(*member).alias("m")
+    old_groups = group_members(
+        old.join(keys, key_cols, "left_semi").select(*key_cols, m), key_cols
+    )
+    new_groups = group_members(banded_new.select(*key_cols, m), key_cols)
+    # every (old, new) pair counts; order it the way bucketed_pairs does
+    pairs = F.flatten(
+        F.transform(
+            F.col("ca"),
+            lambda o: F.transform(
+                F.col("cb"),
+                lambda n: F.struct(
+                    F.least(o, n).alias("a"), F.greatest(o, n).alias("b")
+                ),
+            ),
+        )
+    )
+    return (
+        _chunk_block_join(old_groups, key_cols, hot_bucket, build=new_groups)
+        .select(F.explode(pairs).alias("p"))
+        .select("p.a", "p.b")
     )
 
 
@@ -178,15 +222,9 @@ def incremental_candidate_pairs(
     new x old (batch bands probed against the stored index). Old x old is
     NEVER enumerated — that work happened when the corpus was indexed.
 
-    new x old plan: the batch's distinct (band, bucket) keys broadcast
-    into a left-semi prune of the index scan (map-side filter — the
-    index never shuffles in full); surviving old rows group per bucket
-    into sorted member arrays, chunked to ``hot_bucket`` and
-    repartitioned on (band, bucket, chunk) so a hot old bucket's pairing
-    spreads across tasks; the batch's per-bucket members (also chunked)
-    broadcast onto those rows, bounding every task's explode at
-    hot_bucket^2 structs per row — the ``bucketed_pairs`` discipline,
-    one-sided. Cross-band repeats collapse via dropDuplicates (ids only).
+    new x old plan: :func:`_new_old_pairs` on (band, bucket) — the
+    ``bucketed_pairs`` discipline, one-sided. Cross-band repeats
+    collapse via dropDuplicates (ids only).
 
     ``with_est=True`` scores est_jaccard from SIGNATURES: the batch's
     (checkpointed) signatures plus the STORED old signatures pruned to
@@ -212,52 +250,10 @@ def incremental_candidate_pairs(
         hot_bucket=hot_bucket,
     ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
 
-    old = _read_banded(spark, path)
-    keys = banded_new.select("band", "bucket").distinct()
-    grouped_old = (
-        old.join(F.broadcast(keys), ["band", "bucket"], "left_semi")
-        .groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list(F.struct(F.col("id")))).alias("ms"))
-    )
-    old_chunks = _chunked_members(
-        grouped_old, ["band", "bucket"], hot_bucket
-    ).repartition("band", "bucket", "ci")
-    new_chunks = F.broadcast(
-        _chunked_members(
-            banded_new.groupBy("band", "bucket").agg(
-                F.array_sort(F.collect_list(F.struct(F.col("id")))).alias("ms")
-            ),
-            ["band", "bucket"],
-            hot_bucket,
-            idx_name="nj",
-            arr_name="na",
-        )
-    )
-    on = (
-        old_chunks.join(new_chunks, ["band", "bucket"])
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ca"),
-                        lambda o: F.transform(
-                            F.col("na"),
-                            lambda n: F.struct(o.alias("o"), n.alias("n")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.o", "p.n")
-    )
-    no = on.select(
-        F.when(F.col("o") < F.col("n"), F.col("o.id"))
-        .otherwise(F.col("n.id"))
-        .alias("id_a"),
-        F.when(F.col("o") < F.col("n"), F.col("n.id"))
-        .otherwise(F.col("o.id"))
-        .alias("id_b"),
-    )
+    no = _new_old_pairs(
+        banded_new, _read_banded(spark, path), ["band", "bucket"], ["id"],
+        hot_bucket,
+    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     pairs = nn.unionByName(no).dropDuplicates(["id_a", "id_b"])
     if not with_est:
         return pairs
@@ -347,8 +343,6 @@ def save_phash_index(
     banding is a native Column projection (one scan, map-only write).
     Appends: same ``ingest`` partition-label idempotence as the MinHash
     index."""
-    from smcchecker_spark.ops.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, chunks)
     spark = df.sparkSession
     # compound bands whenever the Hamming budget leaves >= 2 agreeing
@@ -371,16 +365,8 @@ def _banded_phash(
     df: DataFrame, id_col: str, phash_col: str, chunks: int,
     band_chunks: int = 1,
 ) -> DataFrame:
-    from smcchecker_spark.ops.dedup import (
-        chunk_band_structs, combo_band_structs,
-    )
-
     h = F.col(phash_col).cast("long")
-    bands = (
-        combo_band_structs(h, chunks, band_chunks)
-        if band_chunks >= 2
-        else chunk_band_structs(h, chunks)
-    )
+    bands = combo_band_structs(h, chunks, band_chunks)
     return df.select(
         F.col(id_col).alias("id"),
         h.alias("h"),
@@ -404,18 +390,12 @@ def append_to_phash_index(
     ``append_to_minhash_index`` for the idempotence contract)."""
     spark = new_df.sparkSession
     meta = spark.read.parquet(f"{path}/meta").first()
-    label = ingest_label if ingest_label is not None else "append"
-    mode = "overwrite" if ingest_label is not None else "append"
-    (
+    label, mode = _ingest(ingest_label)
+    write_labeled(
         _banded_phash(
-            new_df, id_col, phash_col, meta["chunks"],
-            _meta_band_chunks(meta),
-        )
-        .withColumn("ingest", F.lit(label))
-        .write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest", "chunk")
-        .parquet(f"{path}/banded")
+            new_df, id_col, phash_col, meta["chunks"], _meta_band_chunks(meta)
+        ),
+        f"{path}/banded", "ingest", label, ["chunk"], mode,
     )
 
 
@@ -431,16 +411,9 @@ def incremental_phash_pairs(
     (id_a, id_b, hamming ≤ max_hamming) — new x new through the shared
     skew-guarded ``hamming_near_dups``, new x old against the STORED
     band index; old x old never re-pairs. Same plan discipline as the
-    MinHash probe: the batch's distinct (chunk, val) keys broadcast
-    semi-prune the index scan map-side, surviving old members group per
-    bucket into chunked arrays (hot flat-image buckets spread across
-    tasks), the batch's per-bucket members broadcast on. Recall is
-    EXACT by pigeonhole for max_hamming ≤ the indexed bound."""
-    from smcchecker_spark.ops.dedup import (
-        check_pigeonhole,
-        hamming_near_dups,
-    )
-
+    MinHash probe — :func:`_new_old_pairs` on (chunk, val), so hot
+    flat-image buckets spread across tasks. Recall is EXACT by
+    pigeonhole for max_hamming ≤ the indexed bound."""
     spark = new_df.sparkSession
     meta = spark.read.parquet(f"{path}/meta").first()
     band_chunks = _meta_band_chunks(meta)
@@ -471,55 +444,11 @@ def incremental_phash_pairs(
     old = spark.read.parquet(f"{path}/banded").select(
         "chunk", "val", "id", "h"
     )
-    keys = banded_new.select("chunk", "val").distinct()
-    grouped_old = (
-        old.join(F.broadcast(keys), ["chunk", "val"], "left_semi")
-        .groupBy("chunk", "val")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("id"), F.col("h")))
-            ).alias("ms")
-        )
-    )
-    old_chunks = _chunked_members(
-        grouped_old, ["chunk", "val"], hot_bucket
-    ).repartition("chunk", "val", "ci")
-    new_chunks = F.broadcast(
-        _chunked_members(
-            banded_new.groupBy("chunk", "val").agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("id"), F.col("h")))
-                ).alias("ms")
-            ),
-            ["chunk", "val"],
-            hot_bucket,
-            idx_name="nj",
-            arr_name="na",
-        )
-    )
-    on = (
-        old_chunks.join(new_chunks, ["chunk", "val"])
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ca"),
-                        lambda o: F.transform(
-                            F.col("na"),
-                            lambda n: F.struct(o.alias("o"), n.alias("n")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.o", "p.n")
-    )
-    a_first = F.col("o") < F.col("n")
-    no = on.select(
-        F.when(a_first, F.col("o.id")).otherwise(F.col("n.id")).alias("id_a"),
-        F.when(a_first, F.col("n.id")).otherwise(F.col("o.id")).alias("id_b"),
-        F.bit_count(
-            F.col("o.h").bitwiseXOR(F.col("n.h"))
-        ).alias("hamming"),
+    no = _new_old_pairs(
+        banded_new, old, ["chunk", "val"], ["id", "h"], hot_bucket
+    ).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.bit_count(F.col("a.h").bitwiseXOR(F.col("b.h"))).alias("hamming"),
     ).filter(F.col("hamming") <= max_hamming)
     return nn.unionByName(no).dropDuplicates(["id_a", "id_b"])

@@ -23,6 +23,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from smcchecker_spark.ops.dedup import (
+    _chunk_block_join,
+    attach_pair_values,
+    bucketed_pairs,
+    connected_components,
+    group_members,
+    resolve_duplicates,
+)
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -398,6 +407,24 @@ def _cell_udf(centroids: np.ndarray):
     return cell
 
 
+def _probe_udf(centroids: np.ndarray, n_probe: int):
+    """``array<int>``: each vector's ``n_probe`` nearest cells (nearest
+    first) — the query-side probe list of :func:`ivf_topk` and
+    :func:`ivf_search`. Queries are the small side, so this runs on a
+    sliver."""
+    C = centroids.T.copy()  # dim × k
+
+    @pandas_udf("array<int>")
+    def probes(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for s in batches:
+            X = np.array([list(v) for v in s.values], dtype=np.float64)
+            X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+            order = np.argsort(-(X @ C), axis=1)[:, :n_probe]
+            yield pd.Series([row.astype("int32").tolist() for row in order])
+
+    return probes
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -421,18 +448,7 @@ def ivf_topk(
         cell(F.col(vec_col)).alias("cell"),
     )
     # per-query probe list: n_probe nearest centroids, computed driver-free
-    # via a small pandas UDF (queries are the small side)
-    C = centroids.T.copy()
-    n_probe = min(n_probe, centroids.shape[0])
-
-    @pandas_udf("array<int>")
-    def probes(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            X = np.array([list(v) for v in s.values], dtype=np.float64)
-            X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            order = np.argsort(-(X @ C), axis=1)[:, :n_probe]
-            yield pd.Series([row.astype("int32").tolist() for row in order])
-
+    probes = _probe_udf(centroids, min(n_probe, centroids.shape[0]))
     q = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -464,7 +480,6 @@ def embedding_near_dups(
     n_planes: int = 8,
     seed: int = 42,
     hot_bucket: int = 256,
-    max_bucket: int | None = None,
     n_bands: int = 1,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ τ, LSH-bucketed
@@ -485,15 +500,8 @@ def embedding_near_dups(
     bucket shuffle moves (bucket, id), never the vectors, and a hot
     bucket (many near-identical embeddings — exactly the near-dup case)
     becomes a chunked broadcast self-join spread across tasks instead of
-    one O(m²) task. Vectors attach afterwards via the candidates-only
-    pattern (broadcast semi-join prune → melt → ONE join → regroup):
-    candidates << corpus after blocking, so the re-read touches a
-    sliver, and cosine is computed from the two collected vectors
-    (symmetric — collect order is irrelevant). Vector ids must be
-    unique (a duplicated id would collect >2 vectors and drop the
-    pair)."""
-    from smcchecker_spark.ops.dedup import bucketed_pairs
-
+    one O(m²) task. Vectors attach afterwards through
+    :func:`pair_cosine`. Vector ids must be unique."""
     sig_cols = [
         lsh_signature(
             F.col(vec_col), _hyperplanes(dim, n_planes, seed + 7919 * b)
@@ -517,9 +525,7 @@ def embedding_near_dups(
                 ).alias("bucket"),
             )
     pairs = (
-        bucketed_pairs(
-            bucketed, ["bucket"], hot_bucket=hot_bucket, max_bucket=max_bucket
-        )
+        bucketed_pairs(bucketed, ["bucket"], hot_bucket=hot_bucket)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .localCheckpoint(eager=True)
     )
@@ -536,13 +542,12 @@ def pair_cosine(
 ) -> DataFrame:
     """Exact cosine for candidate (id_a, id_b) pairs — the candidates-only
     vector attach shared by ``embedding_near_dups`` and
-    ``semantic_dedup``: broadcast semi-join prune → melt → ONE join →
-    regroup. Candidates << corpus after blocking, so the re-read touches
-    a sliver, and cosine is computed from the two collected vectors
-    (symmetric — collect order is irrelevant). ``df`` ids must be unique
-    (a duplicated id collects >2 vectors and drops the pair); duplicate
-    candidate pairs are collapsed at entry. Output: (id_a, id_b, cosine)
-    with cosine rounded to 6 dp."""
+    ``semantic_dedup``: broadcast semi-join prune, then
+    ``dedup.attach_pair_values`` (melt → ONE join → regroup).
+    Candidates << corpus after blocking, so the re-read touches a
+    sliver, and cosine is symmetric in the two collected vectors. ``df``
+    ids must be unique; duplicate candidate pairs are collapsed at
+    entry. Output: (id_a, id_b, cosine) with cosine rounded to 6 dp."""
     pairs = pairs.dropDuplicates(["id_a", "id_b"])
     cand_ids = F.broadcast(
         pairs.select(F.explode(F.array("id_a", "id_b")).alias("cid")).distinct()
@@ -550,18 +555,7 @@ def pair_cosine(
     vecs = df.join(cand_ids, F.col(id_col) == F.col("cid"), "left_semi").select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
-    melted = F.broadcast(
-        pairs.select(
-            "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
-        )
-    )
-    j = (
-        melted.join(vecs, "id")
-        .groupBy("id_a", "id_b")
-        .agg(F.collect_list("vec").alias("vs"))
-        .filter(F.size("vs") == 2)
-    )
-    return j.select(
+    return attach_pair_values(pairs, vecs, "vec").select(
         "id_a",
         "id_b",
         F.round(
@@ -577,7 +571,6 @@ def semantic_dup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     hot_bucket: int = 256,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Within-cluster semantic-duplicate pairs (SemDeDup blocking stage,
     Abbas et al. 2023, arXiv:2303.09540): rows are assigned to their
@@ -590,8 +583,7 @@ def semantic_dup_pairs(
     the hot-bucket case BY CONSTRUCTION — every cell routes through
     ``dedup.bucketed_pairs``'s chunked broadcast self-join, which spreads
     one cell's O(m²) pairing across tasks. Choose
-    k ≈ n / target_cell_size (the paper uses cells of a few thousand);
-    ``max_bucket`` is the documented lossy cap for pathological cells.
+    k ≈ n / target_cell_size (the paper uses cells of a few thousand).
 
     Unlike ``embedding_near_dups`` (sparse LSH candidates → ids-only
     shuffle + sliver re-attach), SemDeDup scores EVERY within-cell pair:
@@ -618,25 +610,16 @@ def semantic_dup_pairs(
     Output: (id_a, id_b, cosine). Ids must be unique."""
     from pyspark.sql import types as T
 
-    from smcchecker_spark.ops.dedup import _chunk_block_join
-
     cell = _cell_udf(centroids)
-    grouped = (
-        df.select(
-            # id FIRST: struct order = id order, so the sorted member
-            # array gives a < b across and within chunks by construction
-            F.struct(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-            ).alias("m"),
-            cell(F.col(vec_col)).alias("bucket"),
-        )
-        .filter(F.col("bucket").isNotNull())
-        .groupBy("bucket")
-        .agg(F.array_sort(F.collect_list("m")).alias("ms"))
-        .filter(F.size("ms") > 1)
+    members = df.select(
+        # id FIRST: struct order = id order, so the sorted member
+        # array gives a < b across and within chunks by construction
+        F.struct(
+            F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+        ).alias("m"),
+        cell(F.col(vec_col)).alias("bucket"),
     )
-    if max_bucket is not None:
-        grouped = grouped.withColumn("ms", F.slice("ms", 1, max_bucket))
+    grouped = group_members(members, ["bucket"]).filter(F.size("ms") > 1)
     blocks = _chunk_block_join(grouped, ["bucket"], hot_bucket).select(
         "ci", "cj", "ca", "cb"
     )
@@ -719,7 +702,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     hot_bucket: int = 256,
-    max_bucket: int | None = None,
     keep: str = "min_id",
     seed_sample: int = 2048,
 ) -> DataFrame:
@@ -750,10 +732,7 @@ def semantic_dedup(
         vec_col=vec_col,
         threshold=threshold,
         hot_bucket=hot_bucket,
-        max_bucket=max_bucket,
     )
-    from smcchecker_spark.ops.dedup import connected_components, resolve_duplicates
-
     if keep == "min_id":
         return resolve_duplicates(df, edges, id_col)
     if keep != "far_from_centroid":
@@ -841,17 +820,7 @@ def ivf_search(
     The probed-cell union is collected from the query side (bounded by
     k_cells, never by corpus or query count)."""
     centroids = load_ivf_centroids(spark, path)
-    n_probe = min(n_probe, centroids.shape[0])
-    C = centroids.T.copy()
-
-    @pandas_udf("array<int>")
-    def probes(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            X = np.array([list(v) for v in s.values], dtype=np.float64)
-            X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            order = np.argsort(-(X @ C), axis=1)[:, :n_probe]
-            yield pd.Series([row.astype("int32").tolist() for row in order])
-
+    probes = _probe_udf(centroids, min(n_probe, centroids.shape[0]))
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),

@@ -20,13 +20,13 @@ Shape notes (Spark-native):
   (``windowed_histograms``) and per-key cumulative column stats via
   ``applyInPandasWithState`` (``running_column_stats``) — the custom
   stateful-operator surface.
-- Replay safety comes from the batch-labeled overwrite (``_write_batch``):
-  every sink write replaces the partition of its own micro-batch, so a
-  foreachBatch redelivery after a crash rewrites that batch's rows
-  instead of appending them twice. The checkpointLocation only records
-  which input has been consumed; it does not make sink writes
-  exactly-once. This is the streaming analogue of checkpoint.py's wave
-  commits.
+- Replay safety comes from the batch-labeled overwrite
+  (``tables.write_labeled``): every sink write replaces the partition of
+  its own micro-batch, so a foreachBatch redelivery after a crash
+  rewrites that batch's rows instead of appending them twice. The
+  checkpointLocation only records which input has been consumed; it
+  does not make sink writes exactly-once. This is the streaming
+  analogue of checkpoint.py's wave commits.
 """
 
 from __future__ import annotations
@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from smcchecker_spark.constraints import Suite, ValidationContext
 from smcchecker_spark.run import ValidationRunner
+from smcchecker_spark.tables import write_labeled
 
 
 def windowed_histograms(
@@ -209,20 +210,6 @@ def running_column_stats(
     )
 
 
-def _write_batch(df: DataFrame, dest: str, label_col: str, label) -> None:
-    """The one sink writer of every foreachBatch body here: ``df`` lands
-    in partition ``label_col=label`` of ``dest`` as a dynamic-partition
-    OVERWRITE, so a replayed micro-batch replaces its own rows instead of
-    appending them a second time."""
-    (
-        df.withColumn(label_col, F.lit(label))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(label_col)
-        .parquet(dest)
-    )
-
-
 def _gate_start(
     self,
     stream_df: DataFrame,
@@ -299,11 +286,11 @@ class StreamingValidator:
                 part_id_col=self.part_id_col,
             ).run(batch_df)
             if self.violations_path:
-                _write_batch(
+                write_labeled(
                     result.violations, self.violations_path, "batch_id", batch_id
                 )
             if self.verdicts_path:
-                _write_batch(
+                write_labeled(
                     result.verdicts.drop("run_id"),
                     self.verdicts_path,
                     "batch_id",
@@ -312,7 +299,7 @@ class StreamingValidator:
             if self.expectations and self.expectations_path:
                 from smcchecker_spark.stats import check_expectations
 
-                _write_batch(
+                write_labeled(
                     check_expectations(batch_df, self.expectations),
                     self.expectations_path,
                     "batch_id",
@@ -494,9 +481,9 @@ def _dup_gate_split(
     )
     label = f"b{batch_id}"
     if clean_path:
-        _write_batch(clean, clean_path, "ingest", label)
+        write_labeled(clean, clean_path, "ingest", label)
     if dup_path:
-        _write_batch(
+        write_labeled(
             batch_df.join(flagged.withColumnRenamed("id", id_col), id_col),
             dup_path,
             "ingest",

@@ -31,6 +31,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def write_labeled(
+    df: DataFrame,
+    dest: str,
+    label_col: str,
+    label,
+    parts: list[str] | tuple = (),
+    mode: str = "overwrite",
+) -> None:
+    """The one batch-labeled parquet writer (streaming sinks, incremental
+    index appends): ``df`` lands in partition ``label_col=label`` of
+    ``dest``, sub-partitioned by ``parts``. ``mode="overwrite"`` is a
+    DYNAMIC-partition overwrite, replacing only the partitions this
+    write produces, so a replayed batch replaces its own rows instead
+    of appending them twice; ``mode="append"`` is not replay-safe."""
+    (
+        df.withColumn(label_col, F.lit(label))
+        .write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(label_col, *parts)
+        .parquet(dest)
+    )
+
+
 @dataclass
 class ParquetTable:
     """Path-backed parquet table, optionally hive-partitioned.

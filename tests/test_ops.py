@@ -314,7 +314,7 @@ def test_combo_band_structs_count_and_width(spark):
     from math import comb
 
     df = spark.createDataFrame([(0x0123456789ABCDEF,)], "h long")
-    for chunks, band in ((4, 2), (4, 3), (8, 6)):
+    for chunks, band in ((4, 1), (4, 2), (4, 3), (8, 6)):
         row = df.select(
             dedup.combo_band_structs(F.col("h"), chunks, band).alias("b")
         ).collect()[0]["b"]
@@ -823,6 +823,26 @@ def test_connected_components_string_ids(spark, driver_max_edges):
            ).collect()}
     assert got == {"img-a": "img-a", "img-b": "img-a", "img-c": "img-a",
                    "img-x": "img-x", "img-y": "img-x"}
+
+
+def test_connected_components_driver_path_is_one_bounded_collect(spark):
+    """A sliver under ``driver_max_edges`` is labeled by the driver after
+    ONE bounded collect: no checkpoint and no separate count (which
+    together started 5 jobs for this 4-pair graph)."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (7, 8)], "id_a long, id_b long"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("test_cc_bounded_collect", "connected_components")
+    try:
+        comp = dedup.connected_components(pairs)
+        jobs = sc.statusTracker().getJobIdsForGroup("test_cc_bounded_collect")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 2, jobs
+    assert sorted(comp.collect()) == [
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)
+    ]
 
 
 def _ids(df):
