@@ -12,16 +12,25 @@ Mechanics (deterministic batch orchestration, SURVEY.md §2.9):
 - the checkpoint table is a parquet (or Iceberg, when jars are present)
   directory of verdict/metrics rows keyed (run_id, part_id), plus the
   violations written per completed wave;
-- ``completed_partitions`` reads only the checkpoint (tiny), never data;
+- ``completed_partitions`` reads only the checkpoint (tiny), never data.
+  It and ``committed_waves`` share one read of the verdict rows per
+  state of the verdict directory (memoized on its file listing); a run
+  with no verdict directory reads nothing;
 - ``resume_filter`` prunes completed partitions from the input scan — a
   partition-column predicate, so on a hive/Iceberg-partitioned table the
   pruning happens at the SOURCE (no data read for finished partitions);
-- each wave validates a set of partitions, appends violations, then
-  appends verdict rows LAST — a wave is complete iff its verdict rows
-  (which carry the wave id) are present. A crash BETWEEN the two writes
-  leaves an orphaned ``wave=k`` violations directory with no matching
-  verdict; ``run_with_checkpoint`` deletes such orphans before resuming,
-  so the re-run of those partitions cannot double-count violations.
+- each wave validates a set of partitions and writes its violations;
+  then ONE collect of the wave's summary (one row per partition: row
+  count, error/warning counts, stats and sketch aggregates) feeds every
+  later write. The metrics, sketch and verdict rows are projections of
+  the collected rows as a local relation (``tables.local_frame``), so
+  those writes scan no data and start no Python worker. The verdict
+  rows are appended LAST — a wave is complete iff its verdict rows
+  (which carry the wave id) are present. A crash before them leaves an
+  orphaned ``wave=k`` violations (and metrics/sketches) directory with
+  no matching verdict; ``run_with_checkpoint`` deletes such orphans
+  before resuming, so the re-run of those partitions cannot
+  double-count violations.
 """
 
 from __future__ import annotations
@@ -32,11 +41,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smcchecker_spark.run import ValidationRunner, ValidationResult
+from smcchecker_spark.tables import local_frame, resume_filter
 
 
 class CheckpointStore:
     def __init__(self, root: str):
         self.root = root
+        # (verdict directory listing, its (part_id, wave) pairs)
+        self._committed_memo: tuple = (None, set())
 
     def _verdict_path(self, run_id: str) -> str:
         return os.path.join(self.root, "verdicts", f"run_id={run_id}")
@@ -56,13 +68,24 @@ class CheckpointStore:
             self.root, "sketches", f"run_id={run_id}", f"wave={wave}"
         )
 
-    def completed_partitions(self, spark: SparkSession, run_id: str) -> set[int]:
+    def _committed(self, spark: SparkSession, run_id: str) -> set[tuple[int, int]]:
+        """The (part_id, wave) pairs of the run's verdict rows, read once
+        per state of the verdict directory: the memo key is its file
+        listing, and every append adds a file, so a commit gives a new
+        key. No directory means nothing committed, without a read."""
         path = self._verdict_path(run_id)
-        try:
-            vd = spark.read.parquet(path)
-        except Exception:
+        if not os.path.isdir(path):
             return set()
-        return {r["part_id"] for r in vd.select("part_id").distinct().collect()}
+        key = (path, tuple(sorted(
+            (e.name, e.stat().st_mtime_ns) for e in os.scandir(path)
+        )))
+        if self._committed_memo[0] != key:
+            pairs = spark.read.parquet(path).select("part_id", "wave").distinct()
+            self._committed_memo = (key, {(r[0], r[1]) for r in pairs.collect()})
+        return set(self._committed_memo[1])
+
+    def completed_partitions(self, spark: SparkSession, run_id: str) -> set[int]:
+        return {p for p, _ in self._committed(spark, run_id)}
 
     def wave_dirs(self, run_id: str) -> list[int]:
         base = os.path.join(self.root, "violations", f"run_id={run_id}")
@@ -76,11 +99,7 @@ class CheckpointStore:
 
     def committed_waves(self, spark: SparkSession, run_id: str) -> set[int]:
         """Waves whose verdict rows (the commit markers) exist."""
-        try:
-            vd = spark.read.parquet(self._verdict_path(run_id))
-        except Exception:
-            return set()
-        return {r["wave"] for r in vd.select("wave").distinct().collect()}
+        return {w for _, w in self._committed(spark, run_id)}
 
     def cleanup_orphan_waves(self, spark: SparkSession, run_id: str) -> list[int]:
         """Delete violations wave dirs with no committed verdict — the
@@ -104,26 +123,31 @@ class CheckpointStore:
         self, run_id: str, wave: int, result: ValidationResult,
         fail_before_commit: bool = False,
     ) -> None:
-        # violations + metrics first, verdicts last — the verdict row is
+        # violations, then metrics and sketches, then the verdict rows —
         # the commit marker for a (run, wave); see module docstring.
         # ``fail_before_commit`` is a test hook simulating a crash in the
         # window between the writes.
         result.violations.write.mode("overwrite").parquet(
             self._violations_path(run_id, wave)
         )
-        if result.metrics is not None:
-            result.metrics.write.mode("overwrite").parquet(
-                self._metrics_path(run_id, wave)
-            )
-        if result.sketches is not None:
-            result.sketches.write.mode("overwrite").parquet(
-                self._sketches_path(run_id, wave)
-            )
+        # the wave's one data query after the violations: its summary,
+        # one row per part; every later write projects these rows
+        summary = local_frame(
+            result.summary.sparkSession,
+            result.summary.collect(),
+            result.summary.schema,
+        )
+        for rows, path in (
+            (result.metrics_of(summary), self._metrics_path(run_id, wave)),
+            (result.sketches_of(summary), self._sketches_path(run_id, wave)),
+        ):
+            if rows is not None:
+                rows.coalesce(1).write.mode("overwrite").parquet(path)
         if fail_before_commit:
             raise RuntimeError("simulated crash between violations and verdicts")
-        result.verdicts.drop("run_id").withColumn(
+        result.verdicts_of(summary).drop("run_id").withColumn(
             "wave", F.lit(wave)
-        ).write.mode("append").parquet(self._verdict_path(run_id))
+        ).coalesce(1).write.mode("append").parquet(self._verdict_path(run_id))
 
     def violations(self, spark: SparkSession, run_id: str) -> DataFrame:
         return spark.read.parquet(
@@ -169,8 +193,6 @@ def run_with_checkpoint(
 
     ``fail_after_waves`` is a test hook simulating a mid-run crash.
     """
-    from smcchecker_spark.tables import resume_filter
-
     spark = df.sparkSession
     part_col = runner.part_id_col or "part_id"
     # crash-consistency: drop violation waves whose commit marker never

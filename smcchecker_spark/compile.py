@@ -43,6 +43,7 @@ from smcchecker_spark.constraints import (
     Suite,
     ValidationContext,
 )
+from smcchecker_spark.tables import local_frame
 
 VIOLATION_SCHEMA = T.StructType(
     [
@@ -131,7 +132,7 @@ def compile_suite(
             ctx.shared[cache_key] = gates
     checks = [c for c in suite.active(tier) if gates.get(c.name, True)]
     if not checks:
-        return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
+        return local_frame(df.sparkSession, [], VIOLATION_SCHEMA)
     src = df.withColumn(ROW_ID, F.col(row_id_col).cast("string")).withColumn(
         PART_ID, part_expr(df, part_id_col)
     )

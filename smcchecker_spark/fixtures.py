@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from smcchecker_spark import imagecodec as ic
+from smcchecker_spark.tables import local_frame
 
 IMAGES_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -195,8 +196,10 @@ def _clean_row(i: int, seed: int, n_parts: int) -> dict:
 
 
 def lu_fmt(spark: SparkSession) -> DataFrame:
-    """Lookup list for the fmt RI check (FIXTURES.md §2)."""
-    return spark.createDataFrame(
+    """Lookup list for the fmt RI check (FIXTURES.md §2), as a local
+    relation: broadcasting it starts no Python worker."""
+    return local_frame(
+        spark,
         [("png", "Portable Network Graphics"),
          ("jpeg", "JPEG (baseline JFIF, jpegcodec)"),
          ("webp", "WebP (lossless VP8L, webpcodec)")],

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from smcchecker_spark.ops import text as T
+from smcchecker_spark.tables import local_frame
 
 
 def exact_duplicates(
@@ -931,11 +932,11 @@ def connected_components(
                     ru, rv = rv, ru
                 parent[rv] = ru
         out = [(x, find(x)) for x in parent]
-        spark = edges.sparkSession
         utype = edges.schema["u"].dataType
         from pyspark.sql.types import StructField, StructType
 
-        return spark.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             out,
             StructType(
                 [

@@ -29,6 +29,13 @@ from pyspark.sql import functions as F
 
 from smcchecker_spark.compile import compile_suite, part_expr
 from smcchecker_spark.constraints import ERROR, WARNING, Suite, ValidationContext
+from smcchecker_spark.stats import (
+    DEFAULT_QUANTILES,
+    _sketch_aggs,
+    _sketch_structs,
+    _stats_aggs,
+    _stats_structs,
+)
 
 VERDICT_COLS = [
     "run_id",
@@ -45,12 +52,66 @@ VERDICT_COLS = [
 @dataclass
 class ValidationResult:
     violations: DataFrame  # full violation rows (errors + warnings)
-    verdicts: DataFrame  # one row per partition
-    metrics: DataFrame | None = None  # per-(partition, column) stats rows
-    # per-(partition, column) mergeable HLL sketch rows (binary) — stored
-    # beside the metrics so later NDV / cross-snapshot drift analyses are
-    # sketch unions, never rescans (stats.partition_hll_sketches)
-    sketches: DataFrame | None = None
+    # one row per partition, from ONE aggregate over the input: n_rows,
+    # the stats and sketch aggregates of ``metrics_columns``, and the
+    # error/warning counts of the (cached) violations. ``verdicts``,
+    # ``metrics`` and ``sketches`` are projections of it; a checkpoint
+    # wave collects it once and projects the collected rows instead
+    summary: DataFrame
+    run_id: str
+    started_at: datetime
+    metrics_columns: list[str] | None = None
+    metrics_sketches: bool = False
+
+    @property
+    def verdicts(self) -> DataFrame:
+        """One row per partition; ``finished_at`` is the time its query
+        runs."""
+        return self.verdicts_of(self.summary)
+
+    @property
+    def metrics(self) -> DataFrame | None:
+        """Per-(partition, column) stats rows (``column_stats_by``)."""
+        return self.metrics_of(self.summary)
+
+    @property
+    def sketches(self) -> DataFrame | None:
+        """Per-(partition, column) mergeable HLL sketch rows — stored
+        beside the metrics so later NDV / cross-snapshot drift analyses
+        are sketch unions, never rescans (stats.partition_hll_sketches)."""
+        return self.sketches_of(self.summary)
+
+    def verdicts_of(self, summary: DataFrame) -> DataFrame:
+        n_errors = F.coalesce(F.col("n_errors"), F.lit(0))
+        return summary.select(
+            F.lit(self.run_id).alias("run_id"),
+            F.col("part_id"),
+            F.when(n_errors == 0, F.lit("pass"))
+            .otherwise(F.lit("fail"))
+            .alias("status"),
+            F.col("n_rows"),
+            n_errors.alias("n_errors"),
+            F.coalesce(F.col("n_warnings"), F.lit(0)).alias("n_warnings"),
+            F.lit(self.started_at).alias("started_at"),
+            F.current_timestamp().alias("finished_at"),
+        )
+
+    def metrics_of(self, summary: DataFrame) -> DataFrame | None:
+        if not self.metrics_columns:
+            return None
+        structs = _stats_structs(self.metrics_columns, F.col("n_rows"))
+        return self._per_column(summary, structs)
+
+    def sketches_of(self, summary: DataFrame) -> DataFrame | None:
+        if not (self.metrics_columns and self.metrics_sketches):
+            return None
+        structs = _sketch_structs(self.metrics_columns, F.col("n_rows"))
+        return self._per_column(summary, structs)
+
+    def _per_column(self, summary: DataFrame, structs) -> DataFrame:
+        return summary.select(
+            "part_id", F.explode(structs).alias("s")
+        ).select("part_id", "s.*", F.lit(self.run_id).alias("run_id"))
 
     @property
     def errs(self) -> DataFrame:
@@ -174,9 +235,11 @@ class ValidationRunner:
             violations.count()
             core.unpersist()
 
-        row_counts = df.groupBy(part.alias("part_id")).agg(
-            F.count(F.lit(1)).alias("n_rows")
-        )
+        aggs = [F.count(F.lit(1)).alias("n_rows")]
+        if self.metrics_columns:
+            aggs += _stats_aggs(df, self.metrics_columns, DEFAULT_QUANTILES, 0.02)
+            if self.metrics_sketches:
+                aggs += _sketch_aggs(self.metrics_columns)
         vio_counts = violations.groupBy("part_id").agg(
             F.sum(
                 (F.col("severity") == ERROR).cast("long")
@@ -185,49 +248,18 @@ class ValidationRunner:
                 (F.col("severity") == WARNING).cast("long")
             ).alias("n_warnings"),
         )
-        finished = datetime.now(timezone.utc)
-        verdicts = (
-            row_counts.join(vio_counts, "part_id", "left")
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.col("part_id"),
-                F.when(
-                    F.coalesce(F.col("n_errors"), F.lit(0)) == 0, F.lit("pass")
-                )
-                .otherwise(F.lit("fail"))
-                .alias("status"),
-                F.col("n_rows"),
-                F.coalesce(F.col("n_errors"), F.lit(0)).alias("n_errors"),
-                F.coalesce(F.col("n_warnings"), F.lit(0)).alias("n_warnings"),
-                F.lit(started).alias("started_at"),
-                F.lit(finished).alias("finished_at"),
-            )
+        summary = (
+            df.groupBy(part.alias("part_id"))
+            .agg(*aggs)
+            .join(vio_counts, "part_id", "left")
         )
-        metrics = None
-        sketches = None
-        if self.metrics_columns:
-            from smcchecker_spark.stats import column_stats_by
-
-            metrics = column_stats_by(
-                df.withColumn("__part", part),
-                "__part",
-                self.metrics_columns,
-            ).withColumnsRenamed({"__part": "part_id"}).withColumn(
-                "run_id", F.lit(self.run_id)
-            )
-            if self.metrics_sketches:
-                from smcchecker_spark.stats import partition_hll_sketches
-
-                sketches = partition_hll_sketches(
-                    df.withColumn("__part", part),
-                    "__part",
-                    self.metrics_columns,
-                ).withColumnsRenamed({"part": "part_id"}).withColumn(
-                    "run_id", F.lit(self.run_id)
-                )
         return ValidationResult(
-            violations=violations, verdicts=verdicts, metrics=metrics,
-            sketches=sketches,
+            violations=violations,
+            summary=summary,
+            run_id=self.run_id,
+            started_at=started,
+            metrics_columns=self.metrics_columns,
+            metrics_sketches=self.metrics_sketches,
         )
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smcchecker_spark import exprs
+from smcchecker_spark.tables import local_frame
 
 STATS_COLS = [
     "column",
@@ -56,7 +57,10 @@ def _stats_aggs(
     quantiles: list[float],
     hll_rsd: float,
 ) -> list[Column]:
-    """Shared aggregate list for column_stats / column_stats_by.
+    """Shared per-column aggregate list for column_stats /
+    column_stats_by / the runner's wave summary; the caller adds the
+    row count, and ``_stats_structs`` turns one aggregate row into the
+    per-column stats rows.
 
     BINARY columns (image payloads) get size-domain stats: min/max/
     quantiles over ``length(bytes)`` and ndv over ``xxhash64(bytes)`` —
@@ -66,7 +70,7 @@ def _stats_aggs(
     binary_cols = {
         f.name for f in df.schema.fields if isinstance(f.dataType, T.BinaryType)
     }
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
+    aggs: list[Column] = []
     for c in columns:
         col = F.col(c)
         if c in binary_cols:
@@ -96,6 +100,27 @@ def _stats_aggs(
     return aggs
 
 
+def _stats_structs(columns: list[str], n_rows: Column) -> Column:
+    """The per-column stats rows of one ``_stats_aggs`` row, as an array
+    of structs to explode: (column, n_rows, null_count, null_rate, min,
+    max, approx_ndv, quantiles)."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("column"),
+                n_rows.alias("n_rows"),
+                F.col(f"{c}__nulls").alias("null_count"),
+                (F.col(f"{c}__nulls") / n_rows).alias("null_rate"),
+                F.col(f"{c}__min").alias("min"),
+                F.col(f"{c}__max").alias("max"),
+                F.col(f"{c}__ndv").alias("approx_ndv"),
+                F.col(f"{c}__q").alias("quantiles"),
+            )
+            for c in columns
+        ]
+    )
+
+
 def column_stats(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -112,22 +137,13 @@ def column_stats(
     min/max/quantiles and content-hash ndv (see ``_stats_aggs``).
     """
     columns = columns or df.columns
-    row = df.agg(*_stats_aggs(df, columns, quantiles, hll_rsd))
-
-    per_col = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("__n").alias("n_rows"),
-            F.col(f"{c}__nulls").alias("null_count"),
-            (F.col(f"{c}__nulls") / F.col("__n")).alias("null_rate"),
-            F.col(f"{c}__min").alias("min"),
-            F.col(f"{c}__max").alias("max"),
-            F.col(f"{c}__ndv").alias("approx_ndv"),
-            F.col(f"{c}__q").alias("quantiles"),
-        )
-        for c in columns
-    ]
-    return row.select(F.explode(F.array(*per_col)).alias("s")).select("s.*")
+    row = df.agg(
+        F.count(F.lit(1)).alias("__n"),
+        *_stats_aggs(df, columns, quantiles, hll_rsd),
+    )
+    return row.select(
+        F.explode(_stats_structs(columns, F.col("__n"))).alias("s")
+    ).select("s.*")
 
 
 def column_stats_exact(df: DataFrame, columns: list[str]) -> DataFrame:
@@ -175,23 +191,12 @@ def column_stats_by(
     skew is exactly what salted repartitioning needs to see."""
     columns = columns or [c for c in df.columns if c != group_col]
     grouped = df.groupBy(group_col).agg(
-        *_stats_aggs(df, columns, quantiles, hll_rsd)
+        F.count(F.lit(1)).alias("__n"),
+        *_stats_aggs(df, columns, quantiles, hll_rsd),
     )
-    per_col = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("__n").alias("n_rows"),
-            F.col(f"{c}__nulls").alias("null_count"),
-            (F.col(f"{c}__nulls") / F.col("__n")).alias("null_rate"),
-            F.col(f"{c}__min").alias("min"),
-            F.col(f"{c}__max").alias("max"),
-            F.col(f"{c}__ndv").alias("approx_ndv"),
-            F.col(f"{c}__q").alias("quantiles"),
-        )
-        for c in columns
-    ]
     return grouped.select(
-        F.col(group_col), F.explode(F.array(*per_col)).alias("s")
+        F.col(group_col),
+        F.explode(_stats_structs(columns, F.col("__n"))).alias("s"),
     ).select(group_col, "s.*")
 
 
@@ -223,22 +228,35 @@ def partition_hll_sketches(
     sketches instead of rescanning data. ``lg_k`` trades size for
     accuracy (2^lg_k registers; 12 ≈ ±2.6% rsd, 4 KB/sketch)."""
     columns = columns or [c for c in df.columns if c != part_col]
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
+    grouped = df.groupBy(F.col(part_col).alias("part")).agg(
+        F.count(F.lit(1)).alias("__n"), *_sketch_aggs(columns, lg_k)
+    )
+    return grouped.select(
+        "part", F.explode(_sketch_structs(columns, F.col("__n"))).alias("s")
+    ).select("part", "s.*")
+
+
+def _sketch_aggs(columns: list[str], lg_k: int = 12) -> list[Column]:
+    """One mergeable HLL sketch aggregate per column, ``{c}__sk``."""
+    return [
         F.hll_sketch_agg(F.col(c).cast("string"), lg_k).alias(f"{c}__sk")
         for c in columns
     ]
-    grouped = df.groupBy(F.col(part_col).alias("part")).agg(*aggs)
-    per_col = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("__n").alias("n_rows"),
-            F.col(f"{c}__sk").alias("hll_sketch"),
-        )
-        for c in columns
-    ]
-    return grouped.select(
-        "part", F.explode(F.array(*per_col)).alias("s")
-    ).select("part", "s.*")
+
+
+def _sketch_structs(columns: list[str], n_rows: Column) -> Column:
+    """The per-column sketch rows of one ``_sketch_aggs`` row, as an
+    array of structs to explode: (column, n_rows, hll_sketch)."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("column"),
+                n_rows.alias("n_rows"),
+                F.col(f"{c}__sk").alias("hll_sketch"),
+            )
+            for c in columns
+        ]
+    )
 
 
 def merged_ndv(
@@ -786,8 +804,8 @@ def suggest_suite(
         ).collect()[0]
         spark = df.sparkSession
         for c in lookup_cols:
-            lookups[f"lu_{c}"] = spark.createDataFrame(
-                [(v,) for v in sets[c]], f"{c} string"
+            lookups[f"lu_{c}"] = local_frame(
+                spark, [(v,) for v in sets[c]], f"{c} string"
             )
             constraints.append(
                 InLookup(c, lookup=f"lu_{c}", lookup_key=c)

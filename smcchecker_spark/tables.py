@@ -29,6 +29,32 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: "T.StructType | str"
+) -> DataFrame:
+    """A driver-built frame as a local relation: ``rows`` (tuples in
+    ``schema`` order) become a ``pyarrow.Table`` with the schema's Arrow
+    types, which Spark plans as ``LocalTableScan``. Reading it starts no
+    job and no Python worker, where a list ``createDataFrame`` is a
+    PythonRDD that unpickles its rows in Python workers on every read.
+    The Arrow table is built here rather than through pandas, whose
+    conversion falls back silently to the non-Arrow path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = [
+        pa.array([r[i] for r in rows], type=f.type)
+        for i, f in enumerate(arrow)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(cols, schema=arrow), schema
+    )
 
 
 def write_labeled(

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -19,3 +20,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs("group") as jobs:`` runs the block in its own
+    Spark job group; on exit ``jobs`` holds the ids of the jobs the
+    block started."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def group(name: str):
+        jobs: list[int] = []
+        sc.setJobGroup(name, name)
+        try:
+            yield jobs
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(name))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return group

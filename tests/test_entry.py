@@ -96,21 +96,16 @@ def test_query_output_schema_is_scalar_only(spark, sf_dir, name):
     )
 
 
-def test_table_read_memo(spark, tmp_path):
+def test_table_read_memo(spark, tmp_path, spark_jobs):
     """A table's second read takes the memoized schema and starts no
     Spark job; a rewritten file is read with its new schema."""
     import pandas as pd
 
     path = tmp_path / "t.parquet"
     pd.DataFrame({"a": [1, 2, 3]}).to_parquet(path)
-    sc = spark.sparkContext
     assert entry_mod._t(spark, str(tmp_path), "t").columns == ["a"]
-    sc.setJobGroup("test_table_read_memo", "second read")
-    try:
+    with spark_jobs("test_table_read_memo") as jobs:
         again = entry_mod._t(spark, str(tmp_path), "t")
-        jobs = sc.statusTracker().getJobIdsForGroup("test_table_read_memo")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert jobs == [] and again.columns == ["a"]
 
     pd.DataFrame({"a": [1, 2, 3], "b": ["x", "y", "z"]}).to_parquet(path)

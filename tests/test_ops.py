@@ -825,20 +825,17 @@ def test_connected_components_string_ids(spark, driver_max_edges):
                    "img-x": "img-x", "img-y": "img-x"}
 
 
-def test_connected_components_driver_path_is_one_bounded_collect(spark):
+def test_connected_components_driver_path_is_one_bounded_collect(
+    spark, spark_jobs
+):
     """A sliver under ``driver_max_edges`` is labeled by the driver after
     ONE bounded collect: no checkpoint and no separate count (which
     together started 5 jobs for this 4-pair graph)."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (7, 8)], "id_a long, id_b long"
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("test_cc_bounded_collect", "connected_components")
-    try:
+    with spark_jobs("test_cc_bounded_collect") as jobs:
         comp = dedup.connected_components(pairs)
-        jobs = sc.statusTracker().getJobIdsForGroup("test_cc_bounded_collect")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(jobs) <= 2, jobs
     assert sorted(comp.collect()) == [
         (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)

@@ -120,6 +120,31 @@ def test_lookup_join_is_broadcast(spark, images_parquet):
     assert "Exchange hashpartitioning" not in plan, plan
 
 
+def test_lookup_fixture_broadcast_starts_no_python_job(
+    spark, images_parquet, spark_jobs
+):
+    """``lu_fmt`` is a local relation: reading it starts no job, and the
+    lookup broadcast's build side is a ``LocalTableScan``, not a Python
+    RDD whose rows each broadcast unpickles in Python workers. (The
+    broadcast exchange itself still runs one JVM job over the local
+    rows.)"""
+    from smcchecker_spark import fixtures
+
+    lu = fixtures.lu_fmt(spark)
+    with spark_jobs("test_lu_fmt_read") as jobs:
+        rows = lu.collect()
+    assert jobs == [] and len(rows) == 3
+    suite = Suite(
+        name="lu",
+        table="images",
+        constraints=[InLookup("fmt", lookup="lu_fmt", lookup_key="fmt")],
+    )
+    ctx = ValidationContext(lookups={"lu_fmt": lu})
+    plan = _plan(compile_suite(spark.read.parquet(images_parquet), suite, ctx))
+    build = plan[plan.index("BroadcastExchange"):]
+    assert "LocalTableScan" in build and "ExistingRDD" not in plan, plan
+
+
 def test_stats_one_pass_partial_final(spark, images_parquet):
     df = spark.read.parquet(images_parquet)
     out = stats.column_stats(df, ["w", "h", "caption"])
