@@ -15,7 +15,8 @@ Mechanics (deterministic batch orchestration, SURVEY.md §2.9):
 - ``completed_partitions`` reads only the checkpoint (tiny), never data.
   It and ``committed_waves`` share one read of the verdict rows per
   state of the verdict directory (memoized on its file listing); a run
-  with no verdict directory reads nothing;
+  with no verdict data file (no directory, or only a crashed append's
+  ``_temporary/``) reads nothing;
 - ``resume_filter`` prunes completed partitions from the input scan — a
   partition-column predicate, so on a hive/Iceberg-partitioned table the
   pruning happens at the SOURCE (no data read for finished partitions);
@@ -36,6 +37,7 @@ Mechanics (deterministic batch orchestration, SURVEY.md §2.9):
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,13 +74,19 @@ class CheckpointStore:
         """The (part_id, wave) pairs of the run's verdict rows, read once
         per state of the verdict directory: the memo key is its file
         listing, and every append adds a file, so a commit gives a new
-        key. No directory means nothing committed, without a read."""
+        key. A directory that is missing, or holds only names Spark
+        skips (``_temporary/`` left by a crash inside the first append,
+        ``_SUCCESS``, ``.crc`` files), means nothing committed, without
+        a read — Spark cannot infer a schema from it."""
         path = self._verdict_path(run_id)
         if not os.path.isdir(path):
             return set()
-        key = (path, tuple(sorted(
+        listing = tuple(sorted(
             (e.name, e.stat().st_mtime_ns) for e in os.scandir(path)
-        )))
+        ))
+        if all(name.startswith(("_", ".")) for name, _ in listing):
+            return set()
+        key = (path, listing)
         if self._committed_memo[0] != key:
             pairs = spark.read.parquet(path).select("part_id", "wave").distinct()
             self._committed_memo = (key, {(r[0], r[1]) for r in pairs.collect()})
@@ -132,20 +140,19 @@ class CheckpointStore:
         )
         # the wave's one data query after the violations: its summary,
         # one row per part; every later write projects these rows
-        summary = local_frame(
-            result.summary.sparkSession,
-            result.summary.collect(),
-            result.summary.schema,
-        )
+        summary = result.summary
+        local = replace(result, summary=local_frame(
+            summary.sparkSession, summary.collect(), summary.schema
+        ))
         for rows, path in (
-            (result.metrics_of(summary), self._metrics_path(run_id, wave)),
-            (result.sketches_of(summary), self._sketches_path(run_id, wave)),
+            (local.metrics, self._metrics_path(run_id, wave)),
+            (local.sketches, self._sketches_path(run_id, wave)),
         ):
             if rows is not None:
                 rows.coalesce(1).write.mode("overwrite").parquet(path)
         if fail_before_commit:
             raise RuntimeError("simulated crash between violations and verdicts")
-        result.verdicts_of(summary).drop("run_id").withColumn(
+        local.verdicts.drop("run_id").withColumn(
             "wave", F.lit(wave)
         ).coalesce(1).write.mode("append").parquet(self._verdict_path(run_id))
 

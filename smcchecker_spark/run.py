@@ -67,23 +67,8 @@ class ValidationResult:
     def verdicts(self) -> DataFrame:
         """One row per partition; ``finished_at`` is the time its query
         runs."""
-        return self.verdicts_of(self.summary)
-
-    @property
-    def metrics(self) -> DataFrame | None:
-        """Per-(partition, column) stats rows (``column_stats_by``)."""
-        return self.metrics_of(self.summary)
-
-    @property
-    def sketches(self) -> DataFrame | None:
-        """Per-(partition, column) mergeable HLL sketch rows — stored
-        beside the metrics so later NDV / cross-snapshot drift analyses
-        are sketch unions, never rescans (stats.partition_hll_sketches)."""
-        return self.sketches_of(self.summary)
-
-    def verdicts_of(self, summary: DataFrame) -> DataFrame:
         n_errors = F.coalesce(F.col("n_errors"), F.lit(0))
-        return summary.select(
+        return self.summary.select(
             F.lit(self.run_id).alias("run_id"),
             F.col("part_id"),
             F.when(n_errors == 0, F.lit("pass"))
@@ -96,20 +81,28 @@ class ValidationResult:
             F.current_timestamp().alias("finished_at"),
         )
 
-    def metrics_of(self, summary: DataFrame) -> DataFrame | None:
+    @property
+    def metrics(self) -> DataFrame | None:
+        """Per-(partition, column) stats rows (``column_stats_by``)."""
         if not self.metrics_columns:
             return None
-        structs = _stats_structs(self.metrics_columns, F.col("n_rows"))
-        return self._per_column(summary, structs)
+        return self._per_column(
+            _stats_structs(self.metrics_columns, F.col("n_rows"))
+        )
 
-    def sketches_of(self, summary: DataFrame) -> DataFrame | None:
+    @property
+    def sketches(self) -> DataFrame | None:
+        """Per-(partition, column) mergeable HLL sketch rows — stored
+        beside the metrics so later NDV / cross-snapshot drift analyses
+        are sketch unions, never rescans (stats.partition_hll_sketches)."""
         if not (self.metrics_columns and self.metrics_sketches):
             return None
-        structs = _sketch_structs(self.metrics_columns, F.col("n_rows"))
-        return self._per_column(summary, structs)
+        return self._per_column(
+            _sketch_structs(self.metrics_columns, F.col("n_rows"))
+        )
 
-    def _per_column(self, summary: DataFrame, structs) -> DataFrame:
-        return summary.select(
+    def _per_column(self, structs) -> DataFrame:
+        return self.summary.select(
             "part_id", F.explode(structs).alias("s")
         ).select("part_id", "s.*", F.lit(self.run_id).alias("run_id"))
 

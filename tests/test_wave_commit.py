@@ -2,7 +2,7 @@
 the wave summary feeds the metrics, sketch and verdict writes, which
 project the collected rows as a local relation. These tests pin the
 committed rows against the standalone stats functions, the commit's
-plans and query count, the verdict timestamps, and a crash at every
+plans and query count, the verdict timestamps, and a crash inside every
 write call."""
 
 import math
@@ -177,19 +177,49 @@ def _committed(spark, store, run_id):
     )
 
 
+def _partial_write(path):
+    """What a crash inside a parquet write leaves: the output directory
+    holding only the committer's ``_temporary/`` staging tree."""
+    staged = os.path.join(path, "_temporary", "0", "_temporary", "attempt_0")
+    os.makedirs(staged, exist_ok=True)
+    with open(os.path.join(staged, "part-00000.snappy.parquet"), "wb") as f:
+        f.write(b"PAR1")
+
+
+def test_resume_after_crash_inside_first_verdict_append(spark, images, tmp_path):
+    """A crash inside the first verdict append leaves the verdict
+    directory holding only ``_temporary/``; the resume treats it as
+    nothing committed and reaches the output of an uninterrupted run."""
+    clean_store = CheckpointStore(str(tmp_path / "clean"))
+    run_with_checkpoint(_runner("tmp", ["w"]), images, clean_store)
+
+    store = CheckpointStore(str(tmp_path / "crash"))
+    res = _runner("tmp", ["w"]).run(images)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        store.write_wave("tmp", 0, res, fail_before_commit=True)
+    res.violations.unpersist()
+    _partial_write(store._verdict_path("tmp"))
+
+    assert store.committed_waves(spark, "tmp") == set()
+    assert run_with_checkpoint(_runner("tmp", ["w"]), images, store) == set(range(6))
+    assert _committed(spark, store, "tmp") == _committed(spark, clean_store, "tmp")
+
+
 def test_crash_at_every_write_resumes_to_clean_output(spark, images, tmp_path, monkeypatch):
-    """Crash-point sweep: a checkpointed run that dies at its k-th
-    parquet write, for every k, resumes once to the violations,
-    verdicts, metrics and sketch rows of an uninterrupted run, with one
-    verdict per partition."""
+    """Crash-point sweep: a checkpointed run that dies inside its k-th
+    parquet write (leaving that write's staging directory behind), for
+    every k, resumes once to the violations, verdicts, metrics and
+    sketch rows of an uninterrupted run, with one verdict per
+    partition."""
     calls = {"n": 0, "crash_at": None}
     real_parquet = DataFrameWriter.parquet
 
-    def parquet(self, *a, **kw):
+    def parquet(self, path, *a, **kw):
         calls["n"] += 1
         if calls["n"] == calls["crash_at"]:
+            _partial_write(path)
             raise RuntimeError(f"crash at write {calls['n']}")
-        return real_parquet(self, *a, **kw)
+        return real_parquet(self, path, *a, **kw)
 
     def run(store):
         return run_with_checkpoint(
